@@ -44,8 +44,8 @@ def round2_str(values: pd.Series) -> pd.Series:
 def pyfloat_str(values: pd.Series) -> pd.Series:
     # pd.isna for the same reason as round2_str; a non-numeric
     # rating_ratingValue (try_cast -> null) must DROP the triple (the
-    # reference raises on float(); we drop — see core_claim_triples guard),
-    # never serialize "nan"^^xsd:float.
+    # reference raises on float(); we drop — see the guard in
+    # row_triples.core_triple_array), never serialize "nan"^^xsd:float.
     return values.map(lambda v: None if pd.isna(v) else str(float(v)))
 
 

@@ -292,9 +292,11 @@ def _verify_candidate_jaccard(documents: DataFrame, candidates: DataFrame,
         .unionByName(candidates.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
+    # no broadcast hint: the member set grows with the candidate count, so
+    # AQE picks the join strategy from its measured size
     shingle_sets = (
         with_shingle_set(documents, n).select("doc_id", "sset")
-        .join(F.broadcast(members), "doc_id", "left_semi")
+        .join(members, "doc_id", "left_semi")
     )
     if persist_sets:
         shingle_sets = shingle_sets.persist(StorageLevel.MEMORY_AND_DISK)
@@ -629,63 +631,6 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = 3,
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def two_phase_distinct(df: DataFrame, cols=None,
-                       persist: bool = True) -> DataFrame:
-    """Exact DISTINCT with a narrow-key shuffle (the 100 TB dedup plan).
-
-    ``dropDuplicates`` shuffles full-width rows: every map task builds a
-    hash map of whole rows for the partial dedup, and every unique row
-    still crosses the exchange.  For wide rows with a low duplicate rate
-    (the KG triples stage: ~38x exploded URI strings, duplicate rate a few
-    percent) that full-width exchange + full-row hash maps are the
-    dominant memory traffic of the stage.  This plan shuffles ONLY a
-    128-bit key per row:
-
-    1. key each row with two independent 64-bit hashes of ``cols``
-       (xxhash64 with distinct seeds via a literal salt column);
-    2. count rows per key — 16-byte grouping rows, map-side combine;
-    3. keys with count > 1 (the duplicate keyspace — true duplicates plus
-       any hash collisions) are broadcast back;
-    4. rows outside the duplicate keyspace pass through with NO wide
-       shuffle (broadcast anti-join); rows inside it go through an
-       ordinary ``dropDuplicates`` on the full values.  A 128-bit
-       collision therefore cannot corrupt the result — it only routes
-       the colliding rows onto the exact slow path.
-
-    The input subtree feeds both the count pass and the pass-through, so
-    it is persisted (MEMORY_AND_DISK) unless ``persist=False``; callers
-    that materialize the result eagerly (checkpoint write) should
-    ``unpersist()`` the returned frame's source afterwards — the pipeline
-    does (plans/pipeline.py).
-
-    Scale posture: exact at any size; the broadcast assumes the duplicate
-    KEYSPACE (not the data) fits the driver — 1% duplicates over 10^10
-    rows is ~1.6 GB of keys, at which point use ``dropDuplicates`` or
-    raise ``spark.sql.autoBroadcastJoinThreshold`` accordingly.  Returns
-    the deduplicated frame with the original columns.
-    """
-    cols = list(cols or df.columns)
-    keyed = df.withColumn("_h1", F.xxhash64(*cols)).withColumn(
-        "_h2", F.xxhash64(F.lit("s2"), *cols)
-    )
-    if persist:
-        from pyspark import StorageLevel
-
-        keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    dup_keys = (
-        keyed.groupBy("_h1", "_h2")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") > 1)
-        .select("_h1", "_h2")
-    )
-    uniq = keyed.join(F.broadcast(dup_keys), ["_h1", "_h2"], "left_anti")
-    rare = (
-        keyed.join(F.broadcast(dup_keys), ["_h1", "_h2"], "left_semi")
-        .dropDuplicates(cols)
-    )
-    return uniq.unionByName(rare).drop("_h1", "_h2")
 
 
 def minhash_lsh_pairs_cross(left: DataFrame, right: DataFrame,

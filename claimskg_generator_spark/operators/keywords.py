@@ -31,15 +31,11 @@ from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
 from claimskg_generator_spark.functions.textmatch import PhraseMatcher
 from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
-from claimskg_generator_spark.operators.mentions import (
-    explode_raw_mentions,
-    mention_family_triples,
-    mint_mentions,
-)
+from claimskg_generator_spark.operators.mentions import explode_raw_mentions
 from claimskg_generator_spark.operators.triples import (
     OKIND_LANG_EN,
     OKIND_URI,
-    emit,
+    triple_struct,
 )
 
 
@@ -110,13 +106,11 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
         .withColumn("cm", kw_match(F.col("keyword")))
         .cache()
     )
-    node_triples = emit(
-        distinct_kw,
-        [
-            (None, F.col("kw_uri"), NS.RDF_TYPE, NS.SCHEMA_THING, OKIND_URI),
-            (None, F.col("kw_uri"), NS.SCHEMA_NAME, F.col("keyword"), OKIND_LANG_EN),
-        ],
-    )
+    node_triples = distinct_kw.select(F.explode(F.array_compact(F.array(
+        triple_struct(F.col("kw_uri"), NS.RDF_TYPE, NS.SCHEMA_THING, OKIND_URI),
+        triple_struct(F.col("kw_uri"), NS.SCHEMA_NAME, F.col("keyword"),
+                      OKIND_LANG_EN),
+    ))).alias("t")).select("t.*")
     about_triples = (
         distinct_kw.select(
             "kw_uri",
@@ -177,15 +171,3 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
     )
     return non_mention, win_raw
 
-
-def keyword_triples(claims: DataFrame, model_uri: str,
-                    matchers: Dict[str, PhraseMatcher],
-                    threshold: float) -> DataFrame:
-    """Standalone variant: keyword triples including the winner-mention
-    family (used outside the unified pipeline pass)."""
-    non_mention, win_raw = keyword_triples_and_raw_mentions(
-        claims, model_uri, matchers, threshold
-    )
-    return non_mention.unionByName(
-        mention_family_triples(mint_mentions(win_raw), model_uri)
-    )

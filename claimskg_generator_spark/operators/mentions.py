@@ -16,7 +16,7 @@ from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
 from claimskg_generator_spark.operators.triples import (
     OKIND_LANG_EN,
     OKIND_URI,
-    emit,
+    triple_struct,
 )
 
 
@@ -65,23 +65,12 @@ def mint_mentions(raw: DataFrame) -> DataFrame:
     )
 
 
-def explode_mentions(claims: DataFrame, mention_col: str, attach_col: str,
-                     threshold: float, extra_cols=()) -> DataFrame:
-    """explode + mint in one go (single-source convenience)."""
-    assert not extra_cols
-    return mint_mentions(
-        explode_raw_mentions(claims, mention_col, attach_col, threshold)
-    )
-
-
 def mention_family_triples(mentions: DataFrame, model_uri: str,
                            attach_pred: str = NS.SCHEMA_MENTIONS) -> DataFrame:
     """The 7-triple NIF/ITS family + attachment edge + per-category
     dct:about triples for pre-exploded mention rows — one explode, the
     category triples folded into the same per-mention array (no second
     plan branch)."""
-    from claimskg_generator_spark.operators.triples import triple_struct
-
     m_uri = F.concat(F.lit(model_uri + "mention/"), F.col("m_uuid"))
     dbr = F.concat(F.lit(NS.DBR), F.col("entity_u"))
     df = mentions.withColumn("m_uri", m_uri).withColumn("dbr_uri", dbr)

@@ -229,20 +229,6 @@ def with_fragment_vectors(views: DataFrame,
 
 _PAIR_SCORE_TYPE = T.DoubleType()
 
-# Scorer selector: False (default) = the per-batch Arrow scorer
-# (_pair_score_udf); True = the global-dedupe JVM-term scorer
-# (_score_pairs_global_dedup).  Both are pinned bit-identical to the scalar
-# path by tests/test_reconcile_stats.py.  MEASURED (BENCH.md round-4
-# scorer A/B, interleaved at sf0.1): the batched scorer wins 2-4x — its
-# Python cost (term loop + cached Myers kernel) rides the existing pair
-# partitions with ZERO extra shuffles, while the dedupe path pays three
-# shuffles of the full exploded term stream (distinct + sims join +
-# order-preserving regroup) to save Python work that the per-worker sim
-# cache already amortizes.  The dedupe path remains the right shape when
-# the per-term kernel is far costlier than a shuffle (e.g. model-based
-# term similarity); flip here or monkeypatch for A/B.
-USE_GLOBAL_DEDUP_SCORER = False
-
 
 # ---------------------------------------------------------------------------
 # Batched Levenshtein for the Arrow UDFs.  The scalar scorer above is the
@@ -454,6 +440,21 @@ _SIM_CACHE: dict = {}
 _SIM_CACHE_MAX = 1 << 21
 
 
+def _pair_keys(xc, yc, n_terms: int):
+    """One uint64 key per (x, y) term-code pair, x in the high 32 bits.
+    Codes index a batch vocabulary of ``n_terms`` distinct terms; past
+    2**32 they no longer fit and keys would collide, so fail loudly."""
+    import numpy as np
+
+    if n_terms >= 1 << 32:
+        raise ValueError(
+            f"soft-overlap batch has {n_terms} distinct terms; pair keys "
+            "pack two term codes into 64 bits, so it must have fewer than "
+            "2**32"
+        )
+    return (xc.astype(np.uint64) << np.uint64(32)) | yc.astype(np.uint64)
+
+
 def _soft_overlap_sums_batch(xs_list, ys_list):
     """Vectorized soft_overlap for a whole batch: per-pair sum over the
     x-outer/y-inner (x, y) term cross-product, bit-identical to the
@@ -506,7 +507,7 @@ def _soft_overlap_sums_batch(xs_list, ys_list):
     vals = np.ones(total, dtype=np.float64)
     neq = xc != yc
     if neq.any():
-        key = (xc[neq].astype(np.int64) << 32) | yc[neq].astype(np.int64)
+        key = _pair_keys(xc[neq], yc[neq], len(vocab))
         # hash-based dedup (first-occurrence order; values are
         # order-independent) — np.unique's sort costs ~2x more here
         inv, uniq = pd.factorize(key, sort=False)
@@ -643,192 +644,6 @@ def _pair_score_udf(kw_a: pd.Series, kw_b: pd.Series, ln_a: pd.Series,
             None if ts is None or ts != ts else float(ts),
         ))
     return pd.Series(out)
-
-
-@F.pandas_udf(T.DoubleType())
-def _lev_sim_job_udf(x: pd.Series, y: pd.Series) -> pd.Series:
-    """Normalized-Levenshtein similarity for a frame of GLOBALLY-DISTINCT
-    unequal string pairs (the job list of the global-dedupe scorer below).
-    Same kernel (_lev_batch) and process cache as the batched scorer, so
-    the floats are bit-identical to the scalar path."""
-    xs, ys = x.tolist(), y.tolist()
-    out = [0.0] * len(xs)
-    pa, pb, miss = [], [], []
-    cache = _SIM_CACHE
-    for i in range(len(xs)):
-        v = cache.get((xs[i], ys[i]))
-        if v is None:
-            miss.append(i)
-            pa.append(xs[i])
-            pb.append(ys[i])
-        else:
-            out[i] = v
-    if pa:
-        sims = _lev_batch(pa, pb)
-        if len(cache) + len(pa) > _SIM_CACHE_MAX:
-            cache.clear()
-        for k, i in enumerate(miss):
-            v = float(sims[k])
-            out[i] = v
-            cache[(pa[k], pb[k])] = v
-    return pd.Series(out, dtype="float64")
-
-
-@F.pandas_udf(T.DoubleType())
-def _blend_udf(kw: pd.Series, ln: pd.Series, en: pd.Series,
-               cat: pd.Series, ts: pd.Series) -> pd.Series:
-    """Final per-pair blend only (reference reconciler/__init__.py:201-242):
-    the four field sims arrive pre-computed (JVM order-preserving sums), so
-    Python does exactly the _blend_score scalar work — kept in Python for
-    libm pow parity with the reference."""
-    kw, ln, en, cat, ts = (s.tolist() for s in (kw, ln, en, cat, ts))
-
-    def _n(v):
-        return None if v is None or v != v else v
-
-    return pd.Series(
-        [
-            _blend_score(_n(kw[i]), ln[i], _n(en[i]), _n(cat[i]), _n(ts[i]))
-            for i in range(len(ln))
-        ],
-        dtype="float64",
-    )
-
-
-def _xy_terms(xs_col, ys_col, fid: int):
-    """JVM term expansion: the x-outer/y-inner (x, y) cross product of two
-    string arrays as an array<struct<f,x,y>> — the declarative twin of
-    _overlap_terms' double loop, evaluated in whole-stage codegen."""
-    return F.flatten(
-        F.transform(
-            xs_col,
-            lambda x: F.transform(
-                ys_col,
-                lambda y: F.struct(
-                    F.lit(fid).cast("int").alias("f"),
-                    x.alias("x"), y.alias("y"),
-                ),
-            ),
-        )
-    )
-
-
-_EMPTY_TERMS = "array<struct<f:int,x:string,y:string>>"
-
-
-def _score_pairs_global_dedup(pairs: DataFrame) -> DataFrame:
-    """Alternative pair scorer: bit-identical to _pair_score_udf but with
-    the per-pair Python term-building loop replaced by declarative JVM
-    term expansion and a GLOBAL Levenshtein-job dedup.  NOT the default —
-    see USE_GLOBAL_DEDUP_SCORER for the measured decision.
-
-    Shape (all codegen except two thin Arrow UDFs):
-
-    1. per pair, per field, the (x, y) term cross-product is built JVM-side
-       in the scalar path's x-outer/y-inner order (position = order);
-    2. the exploded term stream is deduped GLOBALLY on (x, y) — Python
-       scores only distinct unequal string pairs (_lev_batch, the same
-       kernel), typically 100-1000x fewer rows than terms;
-    3. sims join back to the term stream (equal terms are literal 1.0) and
-       a sort_array(collect_list(pos, f, val)) + F.aggregate fold re-sums
-       every field in the ORIGINAL term order — float-addition order is
-       preserved, so no 1-ulp drift vs the scalar scorer;
-    4. a per-pair Arrow UDF does only the final _blend_score (libm pow).
-
-    Scale posture: Python cost is O(distinct vocab pairs), not O(pairs x
-    terms); the term stream shuffles are slim fixed-width rows and AQE
-    broadcast-joins the tiny sims side.  Input must carry ord_a/ord_b as
-    the unique pair key plus the four field arrays, text_sim and
-    entity_overlap."""
-    from pyspark import StorageLevel
-
-    terms = F.concat(
-        _xy_terms(F.col("keywords_a"), F.col("keywords_b"), 0),
-        _xy_terms(F.col("links_a"), F.col("links_b"), 1),
-        _xy_terms(F.col("categories_a"), F.col("categories_b"), 2),
-        # entities: the prune already computed the overlap for every pair
-        # with both sides non-empty; re-expand only the defensive gap
-        F.when(
-            F.col("entity_overlap").isNull()
-            & (F.size("entities_a") > 0) & (F.size("entities_b") > 0),
-            _xy_terms(F.col("entities_a"), F.col("entities_b"), 3),
-        ).otherwise(F.array().cast(_EMPTY_TERMS)),
-    )
-    # persist the SLIM pair frame, not the term expansion: _terms repeats
-    # every x once per y, so caching it would store the cross product;
-    # recomputing the explode from cached arrays is pure codegen CPU
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    base = pairs.withColumn("_terms", terms)
-
-    ex = base.select(
-        "ord_a", "ord_b", F.posexplode("_terms").alias("pos", "t")
-    ).select("ord_a", "ord_b", "pos", "t.f", "t.x", "t.y")
-
-    jobs = ex.where(F.col("x") != F.col("y")).select("x", "y").distinct()
-    sims = jobs.withColumn("sim", _lev_sim_job_udf("x", "y"))
-
-    per_pair = (
-        ex.join(sims, ["x", "y"], "left")
-        .withColumn(
-            "val",
-            F.when(F.col("x") == F.col("y"), F.lit(1.0))
-            .otherwise(F.col("sim")),
-        )
-        .groupBy("ord_a", "ord_b")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("pos", "f", "val"))
-            ).alias("_tv")
-        )
-    )
-
-    scored = base.drop("_terms").join(
-        per_pair, ["ord_a", "ord_b"], "left"
-    ).withColumn(
-        "_tv",
-        F.coalesce(
-            F.col("_tv"), F.array().cast("array<struct<pos:int,f:int,val:double>>")
-        ),
-    )
-
-    def fsum(fid: int):
-        # left-to-right fold over the position-sorted terms of one field:
-        # the exact float-addition order of the scalar path
-        return F.aggregate(
-            F.filter("_tv", lambda t: t["f"] == F.lit(fid)),
-            F.lit(0.0),
-            lambda acc, t: acc + t["val"],
-        )
-
-    def sj(fid: int, a: str, b: str, nullable: bool):
-        sa, sb = F.size(a), F.size(b)
-        den = (sa + sb).cast("double")
-        val = F.when(den == 0, F.lit(0.0)).otherwise(fsum(fid) / den)
-        if nullable:
-            return F.when((sa == 0) & (sb == 0), F.lit(None).cast("double")) \
-                    .otherwise(val)
-        return val
-
-    sa, sb = F.size("entities_a"), F.size("entities_b")
-    ent_overlap = (
-        F.when(F.col("entity_overlap").isNotNull(), F.col("entity_overlap"))
-        .when((sa > 0) & (sb > 0), fsum(3))
-        .otherwise(F.lit(0.0))
-    )
-    entity_sim = F.when(
-        (sa == 0) & (sb == 0), F.lit(None).cast("double")
-    ).otherwise(ent_overlap / (sa + sb).cast("double"))
-
-    return scored.withColumn(
-        "score",
-        _blend_udf(
-            sj(0, "keywords_a", "keywords_b", True),
-            sj(1, "links_a", "links_b", False),
-            entity_sim,
-            sj(2, "categories_a", "categories_b", True),
-            F.col("text_sim"),
-        ),
-    ).drop("_tv")
 
 
 @F.pandas_udf(T.DoubleType())
@@ -1020,17 +835,14 @@ def _reconcile_scored(views: DataFrame, theta: float,
     else:
         pairs = pairs.withColumn("text_sim", F.lit(None).cast("double"))
 
-    if USE_GLOBAL_DEDUP_SCORER:
-        scored = _score_pairs_global_dedup(pairs)
-    else:
-        scored = pairs.withColumn(
-            "score",
-            _pair_score_udf(
-                "keywords_a", "keywords_b", "links_a", "links_b",
-                "entities_a", "entities_b", "categories_a", "categories_b",
-                "text_sim", "entity_overlap",
-            ),
-        )
+    scored = pairs.withColumn(
+        "score",
+        _pair_score_udf(
+            "keywords_a", "keywords_b", "links_a", "links_b",
+            "entities_a", "entities_b", "categories_a", "categories_b",
+            "text_sim", "entity_overlap",
+        ),
+    )
     return scored.filter(F.col("score") > theta).select(
         "ord_a", "ord_b",
         F.col("cw_uri_a").alias("cw_a"), F.col("cw_uri_b").alias("cw_b"),

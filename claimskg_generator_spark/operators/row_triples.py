@@ -12,8 +12,8 @@ Only operators that need a global view stay out: keyword families (winner
 aggregate + broadcast joins), duplicate alignment, reconciliation, static
 triples.
 
-Semantics are identical to operators/triples.py + operators/mentions.py
-(the golden tests pin both paths against the oracle).
+The batch pipeline and the streaming micro-batches both emit through
+here (the golden tests pin the output against the oracle).
 """
 
 from pyspark.sql import Column, DataFrame
@@ -43,8 +43,12 @@ def _truthy(col: Column) -> Column:
 
 
 def core_triple_array(model_uri: str, include_body: bool) -> Column:
-    """The conditional fixed-size family (see operators/triples.py
-    core_claim_triples for the reference citations)."""
+    """The conditional fixed-size family: ClaimReview + Organization +
+    CreativeWork(base) + both Rating nodes — the per-row families of
+    reference _create_schema_claim_review (:271-315), _create_organization
+    (:317-331), _create_creative_work core (:363-371, 442-473),
+    _create_review_rating (:475-518) and the generate_model edges
+    (:697-709)."""
     english = model_uri + "language/English"
     claimskg_org = model_uri + "organization/claimskg"
     c = F.col
@@ -101,6 +105,8 @@ def core_triple_array(model_uri: str, include_body: bool) -> Column:
 
 
 def citation_triple_array() -> Column:
+    """(cw, schema:citation, cleaned-url) from the scrubbed link list
+    (reference :412-437 via the clean_citations pandas UDF)."""
     return F.transform(
         F.coalesce(F.col("citations"),
                    F.array().cast("array<struct<cleaned:string,uri:string>>")),
@@ -110,6 +116,8 @@ def citation_triple_array() -> Column:
 
 
 def author_mention_triple_array() -> Column:
+    """Creative-work-author mentions: no threshold, direct dbr link
+    (reference :456-463)."""
     arr = F.transform(
         F.coalesce(F.col("m_author"), F.array().cast(
             "array<struct<begin:bigint,end:bigint,text:string,entity:string,"

@@ -1,18 +1,15 @@
-"""Triple-family emission: one wide claims row -> many (subj, pred, obj,
-okind) rows, as a single-pass ``explode(array_compact(...))`` projection —
-column-wise re-expression of the reference's per-row graph.add() sequences
-(SURVEY.md EP2).  No shuffle happens here; the only shuffle in the triple
-path is the final set-semantics dropDuplicates (A3).
+"""Triple building blocks shared by every family emitter: the
+(subj, pred, obj, okind) struct and the object-kind tags, plus the
+duplicate-title alignment family.  The per-row families (SURVEY.md EP2)
+are emitted in one explode by operators/row_triples.py; the mention and
+keyword families live in operators/mentions.py and operators/keywords.py.
 """
-
-from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from claimskg_generator_spark.constants.namespaces import NS
 from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
-from claimskg_generator_spark.functions.udfs import escape_b64, pyfloat_str
 
 OKIND_URI = "uri"
 OKIND_PLAIN = ""
@@ -27,120 +24,6 @@ def triple_struct(s, p, o, okind) -> Column:
     return F.struct(
         _c(s).alias("subj"), _c(p).alias("pred"),
         _c(o).alias("obj"), _c(okind).alias("okind"),
-    )
-
-
-Family = Tuple[Optional[Column], object, object, object, object]
-
-
-def emit(df: DataFrame, families: List[Family]) -> DataFrame:
-    """families: (condition_or_None, s, p, o, okind) -> exploded triples."""
-    entries = []
-    for cond, s, p, o, okind in families:
-        t = triple_struct(s, p, o, okind)
-        entries.append(t if cond is None else F.when(cond, t))
-    return (
-        df.select(F.explode(F.array_compact(F.array(*entries))).alias("t"))
-        .select("t.*")
-    )
-
-
-def _truthy(col: Column) -> Column:
-    return col.isNotNull() & (F.length(col) > 0)
-
-
-def core_claim_triples(claims: DataFrame, model_uri: str,
-                       include_body: bool = False) -> DataFrame:
-    """ClaimReview + Organization + CreativeWork(base) + both Rating nodes —
-    the per-row families of reference _create_schema_claim_review (:271-315),
-    _create_organization (:317-331), _create_creative_work core (:363-371,
-    442-473), _create_review_rating (:475-518) and the generate_model edges
-    (:697-709)."""
-    english = model_uri + "language/English"
-    claimskg_org = model_uri + "organization/claimskg"
-    c = F.col
-
-    fams: List[Family] = [
-        (None, c("cr_uri"), NS.RDF_TYPE, NS.SCHEMA_CLAIM_REVIEW, OKIND_URI),
-        (_truthy(c("headline")), c("cr_uri"), NS.SCHEMA_HEADLINE, c("headline"), OKIND_LANG_EN),
-        (c("raw_claim_review_url").isNotNull(),
-         c("cr_uri"), NS.SCHEMA_URL, c("raw_claim_review_url"), OKIND_URI),
-        (_truthy(c("review_date")),
-         c("cr_uri"), NS.SCHEMA_DATE_PUBLISHED, c("review_date"), NS.XSD_DATE),
-        (None, c("cr_uri"), NS.SCHEMA_IN_LANGUAGE, english, OKIND_URI),
-        # organization
-        (None, c("org_uri"), NS.RDF_TYPE, NS.SCHEMA_ORGANIZATION, OKIND_URI),
-        (None, c("org_uri"), NS.SCHEMA_NAME, c("raw_author_name"), OKIND_LANG_EN),
-        (_truthy(c("source")),
-         c("org_uri"), NS.SCHEMA_URL, c("source_homepage"), OKIND_URI),
-        (None, c("cr_uri"), NS.SCHEMA_AUTHOR, c("org_uri"), OKIND_URI),
-        # creative work (base)
-        (None, c("cw_uri"), NS.RDF_TYPE, NS.SCHEMA_CREATIVE_WORK, OKIND_URI),
-        (_truthy(c("claim_date")),
-         c("cw_uri"), NS.SCHEMA_DATE_PUBLISHED, c("claim_date"), NS.XSD_DATE),
-        (None, c("cw_uri"), NS.SCHEMA_TEXT, c("claim_text"), OKIND_LANG_EN),
-        (c("cwa_uri").isNotNull(), c("cwa_uri"), NS.RDF_TYPE, NS.SCHEMA_THING, OKIND_URI),
-        (c("cwa_uri").isNotNull(),
-         c("cwa_uri"), NS.SCHEMA_NAME, c("cw_author"), OKIND_LANG_EN),
-        (c("cwa_uri").isNotNull(),
-         c("cw_uri"), NS.SCHEMA_AUTHOR, c("cwa_uri"), OKIND_URI),
-        (None, c("cr_uri"), NS.SCHEMA_ITEM_REVIEWED, c("cw_uri"), OKIND_URI),
-        # original rating
-        (c("raw_rating_alt").isNotNull() & (F.length(c("raw_rating_alt")) > 0),
-         c("original_rating_uri"), NS.SCHEMA_ALTERNATE_NAME,
-         escape_b64(c("raw_rating_alt")), NS.XSD_B64),
-        (None, c("original_rating_uri"), NS.RDF_TYPE, NS.SCHEMA_RATING, OKIND_URI),
-        # non-empty AND numeric: a failed try_cast drops the triple (the
-        # reference would raise on float(); "nan"^^xsd:float is never emitted)
-        (_truthy(c("rating_value_clean"))
-         & c("rating_value_clean").try_cast("double").isNotNull(),
-         c("original_rating_uri"), NS.SCHEMA_RATING_VALUE,
-         pyfloat_str(c("rating_value_clean").try_cast("double")), NS.XSD_FLOAT),
-        (None, c("original_rating_uri"), NS.SCHEMA_AUTHOR, c("org_uri"), OKIND_URI),
-        # normalized rating
-        (None, c("normalized_rating_uri"), NS.RDF_TYPE, NS.SCHEMA_RATING, OKIND_URI),
-        (None, c("normalized_rating_uri"), NS.SCHEMA_ALTERNATE_NAME,
-         c("norm_rating_name"), OKIND_LANG_EN),
-        (None, c("normalized_rating_uri"), NS.SCHEMA_RATING_VALUE,
-         c("norm_rating_value").cast("string"), NS.XSD_INTEGER),
-        (None, c("normalized_rating_uri"), NS.SCHEMA_AUTHOR, claimskg_org, OKIND_URI),
-        (None, c("cr_uri"), NS.SCHEMA_REVIEW_RATING, c("original_rating_uri"), OKIND_URI),
-        (None, c("cr_uri"), NS.SCHEMA_REVIEW_RATING, c("normalized_rating_uri"), OKIND_URI),
-    ]
-    if include_body:
-        fams.insert(2, (_truthy(c("body")),
-                        c("cr_uri"), NS.SCHEMA_REVIEW_BODY, c("body"), OKIND_LANG_EN))
-    return emit(claims, fams)
-
-
-def author_mention_triples(claims: DataFrame) -> DataFrame:
-    """creative-work-author mentions: no threshold, direct dbr link
-    (reference :456-463)."""
-    return (
-        claims.filter(F.col("cwa_uri").isNotNull() & (F.size("m_author") > 0))
-        .select("cwa_uri", F.explode("m_author").alias("m"))
-        .select(
-            F.col("cwa_uri").alias("subj"),
-            F.lit(NS.SCHEMA_MENTIONS).alias("pred"),
-            F.concat(F.lit(NS.DBR),
-                     F.replace(F.col("m.entity"), F.lit(" "), F.lit("_"))).alias("obj"),
-            F.lit(OKIND_URI).alias("okind"),
-        )
-    )
-
-
-def citation_triples(claims: DataFrame) -> DataFrame:
-    """(cw, schema:citation, cleaned-url) from the scrubbed link list
-    (reference :412-437 via the clean_citations pandas UDF)."""
-    return (
-        claims.filter(F.size("citations") > 0)
-        .select("cw_uri", F.explode("citations").alias("cit"))
-        .select(
-            F.col("cw_uri").alias("subj"),
-            F.lit(NS.SCHEMA_CITATION).alias("pred"),
-            F.col("cit.uri").alias("obj"),
-            F.lit(OKIND_URI).alias("okind"),
-        )
     )
 
 

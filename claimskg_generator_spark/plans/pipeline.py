@@ -85,19 +85,6 @@ class PipelineConfig:
     # real word-vector text file for the embeddings term (None -> the
     # deterministic hash-vector fixture)
     embeddings_file: Optional[str] = None
-    # graph-set dedup plan: "wide" (plain dropDuplicates) or "two_phase"
-    # (narrow 128-bit-key shuffle + broadcast duplicate keyspace —
-    # operators/dedup.py two_phase_distinct).  MEASURED default: at the
-    # triples stage's 27% duplicate rate the duplicates are overwhelmingly
-    # intra-partition (one claim re-emitting a triple), so dropDuplicates'
-    # map-side combine removes them before the exchange and the wide
-    # shuffle adds only ~8% to the stage (raw-union count 36.5 s vs
-    # dedup'd count 39.7 s at 320k rows / 4 cores), while two_phase pays a
-    # full cache materialization of the raw 16.7M-triple frame (68 s vs
-    # 54 s end-to-end).  two_phase is the right plan for LOW-dup-rate
-    # wide-row corpora where the dup keyspace is broadcastable; here it
-    # is not the bottleneck.
-    dedup_strategy: str = "wide"
     # rewrite pairwise owl:sameAs edges (reconcile + align families) into
     # star form: every equivalence-class member points at the class's
     # minimum URI (operators/components.py canonicalize_sameas).  The
@@ -175,7 +162,7 @@ class ClaimsKGPipeline:
 
     def triples_raw(self, input_df: DataFrame) -> DataFrame:
         """Stage 2a: union of all triple families, PRE-dedup (exposed so
-        the dedup strategy can be measured/swapped; not a user surface)."""
+        the dedup can be measured on its own; not a user surface)."""
         cfg = self.config
         claims = self.claims(input_df)
 
@@ -239,19 +226,12 @@ class ClaimsKGPipeline:
 
     def triples(self, input_df: DataFrame) -> DataFrame:
         """Stage 2: all triple families, deduplicated (graph set semantics,
-        A3).  Dedup plan per config.dedup_strategy — two_phase shuffles a
-        128-bit key per triple instead of the full-width row (see
-        operators/dedup.py two_phase_distinct)."""
-        out = self.triples_raw(input_df)
-        dedup_cols = ["subj", "pred", "obj", "okind"]
-        if self.config.dedup_strategy == "two_phase":
-            from claimskg_generator_spark.operators.dedup import (
-                two_phase_distinct,
-            )
-
-            deduped = two_phase_distinct(out, dedup_cols)
-        else:
-            deduped = out.dropDuplicates(dedup_cols)
+        A3).  A plain dropDuplicates: the duplicates are mostly one claim
+        re-emitting a triple within its partition, so the map-side combine
+        drops them before the exchange (docs/PLANS.md, graph-set dedup)."""
+        deduped = self.triples_raw(input_df).dropDuplicates(
+            ["subj", "pred", "obj", "okind"]
+        )
         if self.config.sameas_canonical:
             from claimskg_generator_spark.operators.components import (
                 canonicalize_sameas,
@@ -271,10 +251,10 @@ class ClaimsKGPipeline:
         result = self.checkpoints.materialize("triples", deduped, token)
         if self.config.checkpoint_dir:
             # materialize() above was eager (checkpoint write): the stage
-            # caches feeding it (two_phase_distinct's persisted raw-triples
-            # frame, the exploded-keywords cache) are spent — free them so
-            # long-lived drivers don't accumulate per-run caches.  The
-            # result itself is a fresh parquet scan, unaffected.
+            # caches feeding it (the exploded-keywords cache and the keyword
+            # winner/distinct caches) are spent — free them so long-lived
+            # drivers don't accumulate per-run caches.  The result itself is
+            # a fresh parquet scan, unaffected.
             self.spark.catalog.clearCache()
         return result
 
@@ -698,51 +678,15 @@ def _nt_escape(col):
     return out
 
 
-def write_ntriples(triples: DataFrame, path: str) -> None:
-    """Canonical sorted N-Triples sink for ANY (subj, pred, obj, okind)
-    frame — module-level so non-claims graphs (the code KG) serialize
-    without constructing a pipeline; ClaimsKGPipeline.write_ntriples
-    delegates here (byte output pinned by tests/test_golden_ntriples)."""
-    # blank-node labels are legal N-Triples terms in subject/object
-    # position and must NOT be angle-bracketed (sources/turtle.py can
-    # ingest them; operators/skolem.skolemize is the bridge to sinks
-    # that cannot express them).  The claims/code KGs mint URIs only,
-    # so this branch leaves their byte goldens untouched.
-    subj_t = F.when(F.col("subj").startswith("_:"), F.col("subj")) \
-        .otherwise(F.concat(F.lit("<"), F.col("subj"), F.lit(">")))
-    uri_obj = F.when(F.col("obj").startswith("_:"), F.col("obj")) \
-        .otherwise(F.concat(F.lit("<"), F.col("obj"), F.lit(">")))
-    nt = triples.select(
-        F.concat(
-            subj_t, F.lit(" <"), F.col("pred"),
-            F.lit("> "),
-            F.when(F.col("okind") == "uri", uri_obj)
-            .when(F.col("okind") == "",
-                  F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                           F.lit('"')))
-            .when(F.col("okind").startswith("@"),
-                  F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                           F.lit('"'), F.col("okind")))
-            .otherwise(F.concat(F.lit('"'), _nt_escape(F.col("obj")),
-                                F.lit('"^^<'), F.col("okind"),
-                                F.lit(">"))),
-            F.lit(" ."),
-        ).alias("value")
-    ).orderBy("value")
-    nt.write.mode("overwrite").text(path)
+def _nt_terms() -> Tuple[Column, Column]:
+    """(subject, object) N-Triples term columns of a (subj, pred, obj,
+    okind) row, shared by the N-Triples and N-Quads sinks.
 
-
-def write_nquads(triples: DataFrame, path: str,
-                 graph_col: str = "graph") -> None:
-    """Canonical sorted N-Quads sink — the named-graph form of
-    :func:`write_ntriples` (W3C N-Quads 1.1): every row carries a
-    fourth term naming the graph it belongs to, the interop format for
-    publishing a KG WITH its provenance partition (per-source,
-    per-stage, per-snapshot graphs — e.g.
-    ``with_graph(triples, F.lit(source_uri))``).  Rows whose graph
-    column is NULL or empty serialize as plain triples (the default
-    graph, per spec).  Same term rendering as write_ntriples — blank
-    labels legal and unbracketed, the shared escaper for literals."""
+    Blank-node labels are legal N-Triples terms in subject/object position
+    and must NOT be angle-bracketed (sources/turtle.py can ingest them;
+    operators/skolem.skolemize is the bridge to sinks that cannot express
+    them).  The claims/code KGs mint URIs only, so this branch leaves their
+    byte goldens untouched."""
     subj_t = F.when(F.col("subj").startswith("_:"), F.col("subj")) \
         .otherwise(F.concat(F.lit("<"), F.col("subj"), F.lit(">")))
     uri_obj = F.when(F.col("obj").startswith("_:"), F.col("obj")) \
@@ -757,6 +701,34 @@ def write_nquads(triples: DataFrame, path: str,
         .otherwise(F.concat(F.lit('"'), _nt_escape(F.col("obj")),
                             F.lit('"^^<'), F.col("okind"), F.lit(">")))
     )
+    return subj_t, obj_t
+
+
+def write_ntriples(triples: DataFrame, path: str) -> None:
+    """Canonical sorted N-Triples sink for ANY (subj, pred, obj, okind)
+    frame — module-level so non-claims graphs (the code KG) serialize
+    without constructing a pipeline; ClaimsKGPipeline.write_ntriples
+    delegates here (byte output pinned by tests/test_golden_ntriples)."""
+    subj_t, obj_t = _nt_terms()
+    nt = triples.select(
+        F.concat(subj_t, F.lit(" <"), F.col("pred"), F.lit("> "),
+                 obj_t, F.lit(" .")).alias("value")
+    ).orderBy("value")
+    nt.write.mode("overwrite").text(path)
+
+
+def write_nquads(triples: DataFrame, path: str,
+                 graph_col: str = "graph") -> None:
+    """Canonical sorted N-Quads sink — the named-graph form of
+    :func:`write_ntriples` (W3C N-Quads 1.1): every row carries a
+    fourth term naming the graph it belongs to, the interop format for
+    publishing a KG WITH its provenance partition (per-source,
+    per-stage, per-snapshot graphs — e.g.
+    ``with_graph(triples, F.lit(source_uri))``).  Rows whose graph
+    column is NULL or empty serialize as plain triples (the default
+    graph, per spec).  Same term rendering as write_ntriples
+    (:func:`_nt_terms`)."""
+    subj_t, obj_t = _nt_terms()
     g = F.col(graph_col)
     graph_t = F.when(
         g.isNull() | (g == ""), F.lit("")

@@ -22,13 +22,18 @@ Design:
   of checkpoint-resumable batch.
 """
 
+import dataclasses
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.mentions import (
+    review_and_body_mention_triples,
+)
+from claimskg_generator_spark.operators.row_triples import (
+    single_pass_row_triples,
+)
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
-from claimskg_generator_spark.sources.claims import derive_claims, parse_records
 from claimskg_generator_spark.sources.synth import INPUT_SCHEMA
 
 
@@ -42,7 +47,9 @@ def stream_triples(spark: SparkSession, input_dir: str, output_dir: str,
     the directory and stops — the testable/batch-catch-up mode; without it,
     it runs continuously per micro-batch.
     """
-    cfg = config or PipelineConfig(materialize_parsed=False)
+    cfg = dataclasses.replace(
+        config or PipelineConfig(), checkpoint_dir=None, materialize_parsed=False
+    )
     pipe = ClaimsKGPipeline(spark, cfg)
 
     stream = (
@@ -53,30 +60,12 @@ def stream_triples(spark: SparkSession, input_dir: str, output_dir: str,
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # stateless families only; global-view families come from compaction
-        from claimskg_generator_spark.operators.mentions import (
-            review_and_body_mention_triples,
-        )
-        from claimskg_generator_spark.operators.ratings_join import (
-            with_normalized_rating,
-        )
-        from claimskg_generator_spark.operators.triples import (
-            author_mention_triples,
-            citation_triples,
-            core_claim_triples,
-        )
-        from claimskg_generator_spark.functions.udfs import clean_citations
-
-        claims = derive_claims(parse_records(batch_df, cfg.order_col), cfg.model_uri)
-        claims = with_normalized_rating(claims, batch_df.sparkSession, cfg.model_uri)
-        claims = claims.withColumn(
-            "citations", clean_citations(F.col("links"), F.col("source"))
-        )
+        claims = pipe.claims(batch_df)
         out = (
-            core_claim_triples(claims, cfg.model_uri, cfg.include_body)
+            single_pass_row_triples(claims, cfg.model_uri, cfg.include_body,
+                                    cfg.threshold)
             .unionByName(review_and_body_mention_triples(claims, cfg.model_uri,
                                                          cfg.threshold))
-            .unionByName(author_mention_triples(claims))
-            .unionByName(citation_triples(claims))
             .dropDuplicates(["subj", "pred", "obj", "okind"])
         )
         out.write.mode("append").parquet(output_dir)

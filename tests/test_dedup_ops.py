@@ -284,42 +284,6 @@ def test_lsh_cosine_dim_required(spark, vecs):
         lsh_cosine_pairs(vecs, bands=2, planes_per_band=2, threshold=0.9)
 
 
-def test_two_phase_distinct_matches_drop_duplicates(spark):
-    """two_phase_distinct (narrow-key count + broadcast dup keyspace +
-    exact slow path) must equal dropDuplicates exactly — including under a
-    heavy duplicate rate and rows differing only in one column."""
-    from claimskg_generator_spark.operators.dedup import two_phase_distinct
-
-    rows = []
-    for i in range(2000):
-        rows.append((f"s{i % 500}", f"p{i % 7}", f"o{i % 250}", "uri"))
-        if i % 3 == 0:  # same (s,p,o) with a different okind: NOT a dup
-            rows.append((f"s{i % 500}", f"p{i % 7}", f"o{i % 250}", ""))
-    df = spark.createDataFrame(rows, "subj string, pred string, obj string, okind string")
-    cols = ["subj", "pred", "obj", "okind"]
-    expected = sorted(map(tuple, df.dropDuplicates(cols).collect()))
-    got = sorted(map(tuple, two_phase_distinct(df, cols).collect()))
-    assert got == expected
-
-
-def test_pipeline_dedup_strategies_agree(spark, tmp_path):
-    """Both graph-dedup strategies produce the identical triple set."""
-    from claimskg_generator_spark.plans.pipeline import (
-        ClaimsKGPipeline,
-        PipelineConfig,
-    )
-    from claimskg_generator_spark.sources.synth import synthesize_corpus
-
-    corpus = synthesize_corpus(spark, 40, seed=11)
-    outs = {}
-    for strat in ("wide", "two_phase"):
-        pipe = ClaimsKGPipeline(
-            spark, PipelineConfig(dedup_strategy=strat, input_id="t:40:11")
-        )
-        outs[strat] = sorted(map(tuple, pipe.triples(corpus).collect()))
-    assert outs["wide"] == outs["two_phase"]
-
-
 def test_ivf_trained_recall_vs_brute_force(spark):
     """VERDICT r3 #8: ivf_topk(n_iters=1) — one Lloyd pass over the
     hash-sampled init — measured against exact brute-force top-k.  The

@@ -54,7 +54,9 @@ def test_rating_join_is_broadcast(spark):
 def test_family_prunes_parsed_columns(spark):
     """A family that doesn't read mention arrays must not scan them from
     the parsed parquet."""
-    from claimskg_generator_spark.operators.triples import citation_triples
+    from claimskg_generator_spark.operators.row_triples import (
+        single_pass_row_triples,
+    )
     from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
     from claimskg_generator_spark.sources.claims import parse_records
     from claimskg_generator_spark.sources.synth import gen_rows
@@ -62,9 +64,11 @@ def test_family_prunes_parsed_columns(spark):
     path = tempfile.mkdtemp(prefix="parsed_") + "/p"
     parse_records(spark.createDataFrame(gen_rows(50))).write.parquet(path)
     parsed = spark.read.parquet(path)
-    pipe = ClaimsKGPipeline(spark, PipelineConfig(materialize_parsed=False))
+    cfg = PipelineConfig(materialize_parsed=False)
+    pipe = ClaimsKGPipeline(spark, cfg)
     pipe.parsed = lambda _i: parsed
-    fam = citation_triples(pipe.claims(None))
+    fam = single_pass_row_triples(pipe.claims(None), cfg.model_uri,
+                                  cfg.include_body, cfg.threshold)
     plan = _plan(fam)
     reads = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     read = ",".join(reads)

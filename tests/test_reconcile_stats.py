@@ -308,16 +308,11 @@ def test_reconcile_exact_sample_matches_reference_stream(spark, claims_df):
     )
 
 
-def test_global_dedup_scorer_bit_exact(spark):
-    """The production global-dedupe scorer (_score_pairs_global_dedup:
-    JVM term expansion + global Levenshtein-job dedup + order-preserving
-    JVM sums) must equal BOTH the retained batched Arrow scorer and the
+def test_batched_scorer_bit_exact(spark):
+    """The batched Arrow pair scorer (_pair_score_udf) must equal the
     scalar claim_pair_score bit-for-bit — no rounding tolerance."""
-    from pyspark.sql import functions as F
-
     from claimskg_generator_spark.operators.reconcile import (
         _pair_score_udf,
-        _score_pairs_global_dedup,
         claim_pair_score,
         soft_overlap,
     )
@@ -328,9 +323,9 @@ def test_global_dedup_scorer_bit_exact(spark):
          ["Obama"], ["Obamacare"], ["politics"], ["policy"], None),
         # all-empty fields except links
         ([], [], ["a"], ["b"], [], [], [], [], None),
-        # zero-term pair: everything empty (collect_list group absent)
+        # zero-term pair: everything empty
         ([], [], [], [], [], [], [], [], None),
-        # repeated vocab across rows (exercises the global dedup)
+        # repeated vocab across rows (exercises the batch-wide term dedup)
         (["tax", "economy"], ["taxes", "econ"], ["u1"], ["u1"],
          ["Obama"], ["Obamacare"], [], [], 0.5),
         # equal strings only (no Levenshtein jobs at all)
@@ -357,10 +352,6 @@ def test_global_dedup_scorer_bit_exact(spark):
 
     got = {
         r["ord_a"]: r["score"]
-        for r in _score_pairs_global_dedup(pairs).select("ord_a", "score").collect()
-    }
-    old = {
-        r["ord_a"]: r["score"]
         for r in pairs.withColumn(
             "score",
             _pair_score_udf(
@@ -374,5 +365,22 @@ def test_global_dedup_scorer_bit_exact(spark):
         kw_a, kw_b, ln_a, ln_b, en_a, en_b, ca, cb, ts = r
         want = claim_pair_score(kw_a, kw_b, ln_a, ln_b, en_a, en_b,
                                 ca, cb, text_sim=ts)
-        assert got[str(i)] == want, f"row {i}: jvm-dedup {got[str(i)]} != scalar {want}"
-        assert old[str(i)] == want, f"row {i}: batched {old[str(i)]} != scalar {want}"
+        assert got[str(i)] == want, f"row {i}: batched {got[str(i)]} != scalar {want}"
+
+
+def test_pair_keys_reject_oversized_vocabulary():
+    """_soft_overlap_sums_batch packs two term codes per uint64 key; a
+    batch vocabulary of 2**32 terms cannot be packed and must fail loudly
+    (driven directly: such a batch cannot be built in a test)."""
+    import numpy as np
+
+    from claimskg_generator_spark.operators.reconcile import _pair_keys
+
+    xc = np.array([0, 5, (1 << 32) - 1])
+    yc = np.array([(1 << 32) - 1, 7, 3])
+    keys = _pair_keys(xc, yc, (1 << 32) - 1)
+    assert [(k >> 32, k & 0xFFFFFFFF) for k in keys.tolist()] == list(
+        zip(xc.tolist(), yc.tolist())
+    )
+    with pytest.raises(ValueError, match=str(1 << 32)):
+        _pair_keys(xc, yc, 1 << 32)

@@ -1,12 +1,19 @@
 """Streaming ingest: the stateless triple log drained via availableNow must
-be a subset of the batch result, and compaction must converge to the exact
-batch triple set (= oracle set)."""
+equal the batch emitters' stateless families (a strict subset of the batch
+result), and compaction must converge to the exact batch triple set
+(= oracle set)."""
 
 import tempfile
 
 import pytest
 
-from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline
+from claimskg_generator_spark.operators.mentions import (
+    review_and_body_mention_triples,
+)
+from claimskg_generator_spark.operators.row_triples import (
+    single_pass_row_triples,
+)
+from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
 from claimskg_generator_spark.sources.synth import gen_rows
 from claimskg_generator_spark.streaming.ingest import (
     compact_triple_log,
@@ -34,11 +41,21 @@ def test_stream_then_compact_converges(spark, dirs):
     q.awaitTermination(300)
 
     log = spark.read.parquet(dirs["log"])
-    batch = ClaimsKGPipeline(spark).triples(spark.read.parquet(dirs["input"]))
+    input_df = spark.read.parquet(dirs["input"])
+    batch = ClaimsKGPipeline(spark).triples(input_df)
     batch_set = {tuple(r) for r in batch.collect()}
     log_set = {tuple(r) for r in log.collect()}
     # stateless families only -> strict subset (no keyword/static families)
     assert log_set and log_set < batch_set
+    # ... and exactly the batch emitters' stateless families
+    cfg = PipelineConfig(materialize_parsed=False)
+    claims = ClaimsKGPipeline(spark, cfg).claims(input_df)
+    stateless = single_pass_row_triples(
+        claims, cfg.model_uri, cfg.include_body, cfg.threshold
+    ).unionByName(
+        review_and_body_mention_triples(claims, cfg.model_uri, cfg.threshold)
+    )
+    assert log_set == {tuple(r) for r in stateless.collect()}
 
     compacted = compact_triple_log(
         spark, dirs["input"], dirs["log"], dirs["compacted"]
