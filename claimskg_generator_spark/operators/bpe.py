@@ -26,9 +26,9 @@ its occurrences.  The shapes here:
   one pass is exact — no rescan loop.
 * :func:`bpe_train` — the iteration.  Each round collects exactly ONE
   row (the chosen pair): merge selection is sequential by definition
-  — same documented driver-action class as IVF's Lloyd step.  The
-  dictionary is localCheckpoint'ed every few merges to truncate the
-  fold lineage (the iterative-operator convention).
+  — same documented driver-action class as IVF's Lloyd step.  Both
+  the pair statistics and the merge read the dictionary, so the
+  iteration driver (operators/iterate.py) checkpoints it every round.
 
 Scale shape: after :func:`word_freqs`' single corpus-sized exchange,
 every iteration runs over the distinct-word dictionary (typically
@@ -43,10 +43,13 @@ the training loop are pinned by pure-Python-twin pytests
 relational reading.
 """
 
+from functools import partial
 from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from claimskg_generator_spark.operators.iterate import Iteration
 
 END = "</w>"
 
@@ -218,25 +221,29 @@ def bpe_encode(docs: DataFrame, merges: List[Tuple[str, str, int]],
     )
 
 
+def _merge_step(merges: List[Tuple[str, str, int]], words: DataFrame,
+                _r: int) -> DataFrame:
+    """Pick the best pair and merge it; a fully merged dictionary comes
+    back unchanged."""
+    pick = best_merge(bpe_pair_stats(words))
+    if pick is None:
+        return words
+    merges.append(pick)
+    return apply_merge(words, pick[0], pick[1])
+
+
 def bpe_train(docs: DataFrame, n_merges: int, text_col: str = "text",
-              lowercase: bool = True, checkpoint_every: int = 8,
+              lowercase: bool = True,
               ) -> Tuple[List[Tuple[str, str, int]], DataFrame]:
     """Learn ``n_merges`` BPE merges: returns (merge list in training
     order with their frequencies, the final symbolized dictionary).
-    Stops early when no pair remains (fully merged corpus)."""
+    Stops early when no pair remains (fully merged corpus): the probe
+    is the merge count, which stops growing."""
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}")
-    words = with_symbols(word_freqs(docs, text_col, lowercase))
     merges: List[Tuple[str, str, int]] = []
-    for it in range(n_merges):
-        pick = best_merge(bpe_pair_stats(words))
-        if pick is None:
-            break
-        merges.append(pick)
-        words = apply_merge(words, pick[0], pick[1])
-        if (it + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=False)
+    with Iteration() as it:
+        words = it.run(with_symbols(word_freqs(docs, text_col, lowercase)),
+                       partial(_merge_step, merges), n_merges,
+                       lambda _: len(merges))
     return merges, words

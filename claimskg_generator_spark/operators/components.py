@@ -26,18 +26,29 @@ Scale posture:
 - No collect_list: each star is groupBy(min) + a same-key join, so a hub
   node (a template document duplicated 10^8 times) never materializes
   its neighborhood in one task; AQE handles the skewed join.
-- Lineage is truncated every round (localCheckpoint) — iterative plans
-  otherwise grow exponentially in the optimizer.  For production
-  cluster runs, set a reliable checkpoint dir and swap to checkpoint().
 - Convergence test is a one-pass (count, xxhash64-xor) signature of the
   canonicalized edge set — no exceptAll anti-join per round.
+
+Every iterative operator here is a seed state plus a module-level step
+function run by the one driver, operators/iterate.py, which alone
+persists, checkpoints and unpersists: (a) it truncates the lineage of a
+state the next round reads once every ``TRUNCATE_EVERY`` rounds; (b) it
+materializes every round a state that two or more branches of the next
+round, or a convergence probe, read — lazily when the probe is the
+round's action; (c) it runs the probe and raises the operator's own
+error at the round cap; (d) it returns a materialized result and
+unpersists every frame the call persisted.  On a production cluster,
+swap localCheckpoint for checkpoint() with a reliable checkpoint dir.
 """
 
-from typing import List, Optional, Tuple
+from functools import partial
+from typing import Optional, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from claimskg_generator_spark.operators.iterate import Iteration, last_round
 
 
 class ComponentsDidNotConverge(RuntimeError):
@@ -82,23 +93,21 @@ def _small_star(directed: DataFrame) -> DataFrame:
     return re_lo.union(re_hi).where(F.col("u") != F.col("v")).distinct()
 
 
-def _star_round(e: DataFrame) -> Tuple[DataFrame, List[DataFrame]]:
+def _star_round(keep, e: DataFrame, _r: int) -> DataFrame:
     """One large-star + small-star pass.  The symmetrized and oriented
     edge frames each feed TWO consumers (the min aggregation and the
     re-attach join); without persistence each consumer recomputes the
     frame's distinct shuffle — at scale that doubles the heaviest
-    exchange of every round.  Returns (result, frames to unpersist once
-    the result is materialized)."""
-    sym = _sym(e).persist(StorageLevel.MEMORY_AND_DISK)
+    exchange of every round.  The driver's ``keep`` frees them."""
+    sym = keep(_sym(e))
     ls = _large_star(sym)
-    directed = (
+    directed = keep(
         ls.select(F.greatest("u", "v").alias("u"),
                   F.least("u", "v").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    return _small_star(directed), [sym, directed]
+    return _small_star(directed)
 
 
 def _signature(edges: DataFrame) -> Tuple[int, int]:
@@ -128,9 +137,18 @@ def _signature(edges: DataFrame) -> Tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _star_members(e: DataFrame) -> DataFrame:
+    """A converged edge set is a star forest: (node -> root) + roots."""
+    members = e.select(F.greatest("u", "v").alias("node"),
+                       F.least("u", "v").alias("component"))
+    roots = members.select(
+        F.col("component").alias("node"), F.col("component")
+    ).distinct()
+    return members.union(roots).distinct()
+
+
 def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 50,
-                         truncate_lineage: bool = True) -> DataFrame:
+                         dst: str = "dst", max_iter: int = 50) -> DataFrame:
     """(node, component) for every node appearing in ``edges``;
     ``component`` is the minimum node id of the connected component.
 
@@ -140,35 +158,12 @@ def connected_components(edges: DataFrame, src: str = "src",
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     e = e.where(F.col("u") != F.col("v"))
-    if truncate_lineage:
-        e = e.localCheckpoint(eager=True)
-    prev: Optional[Tuple[int, int]] = None
-    for _ in range(max_iter):
-        e, scratch = _star_round(e)
-        if truncate_lineage:
-            # LAZY checkpoint: the convergence probe right below is the
-            # round's action anyway, and it materializes the checkpoint as
-            # a side effect — one job per round instead of two (the eager
-            # form paid a separate materialization job before the probe).
-            e = e.localCheckpoint(eager=False)
-        sig = _signature(e)
-        for frame in scratch:
-            # the round's result is materialized (checkpoint or signature
-            # action) — the per-round caches are dead weight now
-            frame.unpersist()
-        if sig == prev:
-            break
-        prev = sig
-    else:
-        raise ComponentsDidNotConverge(
-            f"no convergence in {max_iter} star rounds")
-    # converged edge set is a star forest: (node -> root); add the roots
-    members = e.select(F.greatest("u", "v").alias("node"),
-                       F.least("u", "v").alias("component"))
-    roots = members.select(
-        F.col("component").alias("node"), F.col("component")
-    ).distinct()
-    return members.union(roots).distinct()
+    with Iteration() as it:
+        return it.run(
+            e, partial(_star_round, it.keep), max_iter, _signature,
+            reread=True, finish=_star_members,
+            fail=ComponentsDidNotConverge(
+                f"no convergence in {max_iter} star rounds"))
 
 
 def dedup_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
@@ -240,7 +235,6 @@ def canonicalize_sameas(triples: DataFrame,
 
 
 def smush_sameas(triples: DataFrame, max_iter: int = 50,
-                 broadcast_mapping: bool = True,
                  keep_links: bool = True) -> DataFrame:
     """Full identity resolution ("smushing"): resolve the graph's
     ``owl:sameAs`` equivalence classes and REWRITE every triple's
@@ -262,12 +256,11 @@ def smush_sameas(triples: DataFrame, max_iter: int = 50,
 
     Scale shape: the class mapping is proportional to the number of
     DUPLICATE entities — orders of magnitude smaller than the graph —
-    so it broadcasts (``broadcast_mapping=True``; pass False to let
-    AQE pick a shuffled join for pathological duplication rates) and
-    the 100 TB triple frame is touched by two broadcast left joins +
-    the one set-dedup exchange.  Class resolution itself is
-    :func:`connected_components` over the sameAs sliver only
-    (O(log^2 n) rounds on the duplicate subgraph, bounded lineage)."""
+    so it broadcasts and the 100 TB triple frame is touched by two
+    broadcast left joins + the one set-dedup exchange.  Class
+    resolution itself is :func:`connected_components` over the sameAs
+    sliver only (O(log^2 n) rounds on the duplicate subgraph, bounded
+    lineage)."""
     from claimskg_generator_spark.constants.namespaces import NS
 
     is_same = F.col("pred") == NS.OWL_SAME_AS
@@ -278,7 +271,7 @@ def smush_sameas(triples: DataFrame, max_iter: int = 50,
                              max_iter=max_iter)
         .where(F.col("node") != F.col("component"))
     )
-    m = F.broadcast(mapping) if broadcast_mapping else mapping
+    m = F.broadcast(mapping)
     ms = m.select(F.col("node").alias("__sn"),
                   F.col("component").alias("__sr"))
     mo = m.select(F.col("node").alias("__on"),
@@ -312,14 +305,40 @@ def smush_sameas(triples: DataFrame, max_iter: int = 50,
     return out
 
 
+def _both_ways(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(s, t) in both directions."""
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+    return e.unionByName(
+        e.select(F.col("t").alias("s"), F.col("s").alias("t")))
+
+
+def _with_out_degree(sym: DataFrame) -> DataFrame:
+    """(s, t, od): every directed edge with its source's out-degree."""
+    return sym.join(sym.groupBy("s").agg(F.count("*").alias("od")), "s")
+
+
+def _rank_step(out_edges: DataFrame, teleport: float, damping: float,
+               ranks: DataFrame, _r: int) -> DataFrame:
+    """One power iteration."""
+    contrib = (
+        out_edges.join(ranks, out_edges["s"] == ranks["node"])
+        .select(
+            F.col("t").alias("node"),
+            (F.col("rank") / F.col("od")).alias("c"),
+        )
+    )
+    return (
+        contrib.groupBy("node")
+        .agg((F.lit(teleport) + damping * F.sum("c")).alias("rank"))
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     n_iters: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 8,
-    tol: Optional[float] = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected edge list (each edge
     contributes both directions).  r_{k+1}(v) = (1-d)/N + d * sum over
@@ -332,70 +351,42 @@ def pagerank(
     re-read every iteration); the rank frame stays (node, rank) slim.
     Fixed n_iters keeps the result deterministic and oracle-checkable
     (an unrolled SQL twin).
-
-    ``checkpoint_every``: localCheckpoint the rank frame every that many
-    iterations (same truncation connected_components applies per round) —
-    without it the logical plan grows linearly in n_iters and a
-    30-iteration run pays multi-megabyte optimizer passes per action.
-    Values and the per-iteration shuffle profile are unchanged; pinned by
-    tests/test_components.py::test_pagerank_deep_iteration_plan_bounded.
-
-    ``tol``: optional convergence stop (the production variant) — after
-    each iteration the max |r_{k+1} - r_k| over nodes is checked (one
-    small action per iteration, piggybacking the same slim rank frames)
-    and the loop exits early once it drops below ``tol``.  n_iters then
-    acts as the iteration CAP.  Leave None (default) for the fixed-
-    iteration oracle-deterministic behavior.
     """
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-    sym = e.unionByName(
-        e.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    deg = sym.groupBy("s").agg(F.count("*").alias("od"))
-    out_edges = sym.join(deg, "s").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = sym.select(F.col("s").alias("node")).distinct()
-    n_nodes = nodes.count()  # one intentional action: sizes the teleport term
-    if n_nodes == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    teleport = (1.0 - damping) / n_nodes
-    for i in range(n_iters):
-        prev_ranks = ranks
-        contrib = (
-            out_edges.join(ranks, out_edges["s"] == ranks["node"])
-            .select(
-                F.col("t").alias("node"),
-                (F.col("rank") / F.col("od")).alias("c"),
-            )
-        )
-        ranks = (
-            contrib.groupBy("node")
-            .agg((F.lit(teleport) + damping * F.sum("c")).alias("rank"))
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
-            ranks = ranks.localCheckpoint(eager=True)
-        if tol is not None:
-            delta = (
-                ranks.join(
-                    prev_ranks.select("node",
-                                      F.col("rank").alias("prev_rank")),
-                    "node", "left")
-                .agg(F.max(F.abs(
-                    F.col("rank") - F.coalesce("prev_rank", F.lit(0.0))
-                )).alias("d"))
-                .collect()[0]["d"]
-            )
-            if delta is not None and delta < tol:
-                break
-    out = nodes.join(ranks, "node", "left").select(
-        "node",
-        F.round(F.coalesce("rank", F.lit(teleport)), 6).alias("rank"),
+    with Iteration() as it:
+        sym = it.keep(_both_ways(edges, src, dst))
+        out_edges = it.keep(_with_out_degree(sym))
+        nodes = sym.select(F.col("s").alias("node")).distinct()
+        # one intentional action: sizes the teleport term (an empty
+        # graph keeps its empty result)
+        n_nodes = nodes.count() or 1
+        teleport = (1.0 - damping) / n_nodes
+        return it.run(
+            nodes.withColumn("rank", F.lit(1.0 / n_nodes)),
+            partial(_rank_step, out_edges, teleport, damping), n_iters,
+            finish=lambda ranks: nodes.join(ranks, "node", "left").select(
+                "node",
+                F.round(F.coalesce("rank", F.lit(teleport)), 6)
+                .alias("rank")))
+
+
+def _label_step(sym: DataFrame, labels: DataFrame, _r: int) -> DataFrame:
+    """Every node adopts its neighbors' most frequent label."""
+    neigh = (
+        sym.join(labels, sym["s"] == labels["node"])
+        .select(F.col("t").alias("node"), "label")
+        .groupBy("node", "label")
+        .agg(F.count("*").alias("c"))
     )
-    return out
+    w = Window.partitionBy("node").orderBy(
+        F.desc("c"), F.asc("label")
+    )
+    return (
+        neigh.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("node", "label")
+    )
 
 
 def label_propagation(
@@ -403,7 +394,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     n_iters: int = 2,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Synchronous label propagation (community detection) over an
     undirected edge list.  Each iteration every node adopts the most
@@ -415,45 +405,20 @@ def label_propagation(
     Per iteration: one co-partitioned labels x edges join, a
     (node, label) count aggregate, and a row_number window for the
     argmax — all keyed on the node, the same shuffle profile as one
-    PageRank step.  ``checkpoint_every`` truncates the label frame's
-    lineage every that many iterations, exactly as in pagerank — deep
-    runs keep a bounded plan, values unchanged.
+    PageRank step.
     """
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-    sym = e.unionByName(
-        e.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    from pyspark.sql import Window
-
-    for i in range(n_iters):
-        neigh = (
-            sym.join(labels, sym["s"] == labels["node"])
-            .select(F.col("t").alias("node"), "label")
-            .groupBy("node", "label")
-            .agg(F.count("*").alias("c"))
+    with Iteration() as it:
+        sym = it.keep(_both_ways(edges, src, dst))
+        labels = sym.select(F.col("s").alias("node")).distinct().withColumn(
+            "label", F.col("node")
         )
-        w = Window.partitionBy("node").orderBy(
-            F.desc("c"), F.asc("label")
-        )
-        labels = (
-            neigh.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node", "label")
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+        return it.run(labels, partial(_label_step, sym), n_iters)
 
 
 def triangle_count(edges: DataFrame, src: str = "src",
-                   dst: str = "dst", persist: bool = True) -> DataFrame:
+                   dst: str = "dst") -> DataFrame:
     """Per-vertex triangle counting with degree-ordered orientation —
     the clustering-coefficient / community-density primitive of the
     graph family (components, PageRank, LPA all live in this module).
@@ -473,9 +438,8 @@ def triangle_count(edges: DataFrame, src: str = "src",
     degree attachments, one wedge closure) + two groupBys — no
     collect_list neighborhood materialization, so a 10^8-degree hub
     never lands in one task; the skewed wedge join is AQE skew-split
-    territory.  ``persist`` (default True) materializes the oriented
-    edge frame once — it is consumed three times (both wedge sides and
-    the closure probe).
+    territory.  The oriented edge frame is persisted once — it is
+    consumed three times (both wedge sides and the closure probe).
 
     Output, one row per vertex: ``vertex``, ``degree`` (undirected,
     deduped), ``n_triangles`` (triangles the vertex participates in;
@@ -508,9 +472,7 @@ def triangle_count(edges: DataFrame, src: str = "src",
         F.when(a_lower, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_lower, F.col("b")).otherwise(F.col("a")).alias("w"),
         F.when(a_lower, F.col("db")).otherwise(F.col("da")).alias("dw"),
-    )
-    if persist:
-        fwd = fwd.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     f1 = fwd.select("u", F.col("w").alias("w1"), F.col("dw").alias("dw1"))
     f2 = fwd.select("u", F.col("w").alias("w2"), F.col("dw").alias("dw2"))
     # wedge (w1, w2) kept in orientation order so the closing edge, if
@@ -538,9 +500,28 @@ def triangle_count(edges: DataFrame, src: str = "src",
     )
 
 
+def _degrees(frame: DataFrame) -> DataFrame:
+    return (
+        frame.select(F.col("u").alias("node"))
+        .unionAll(frame.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
+    )
+
+
+def _peel_step(k: int, e: DataFrame, _r: int) -> DataFrame:
+    """Drop the nodes of degree < k and the edges touching them."""
+    bad = _degrees(e).filter(F.col("degree") < k).select("node")
+    return (
+        e.join(bad.withColumnRenamed("node", "u"), "u", "left_anti")
+        .join(bad.withColumnRenamed("node", "v"), "v", "left_anti")
+        .select("u", "v")
+    )
+
+
 def kcore_peel(edges: DataFrame, k: int, n_rounds: Optional[int] = None,
-               max_rounds: int = 50, src: str = "src", dst: str = "dst",
-               checkpoint_every: int = 5) -> DataFrame:
+               max_rounds: int = 50, src: str = "src",
+               dst: str = "dst") -> DataFrame:
     """Iterative k-core peel: repeatedly drop nodes whose degree over
     the SURVIVING edge set is below ``k`` (and the edges touching
     them), then return per-node degrees of what remains — the standard
@@ -550,14 +531,12 @@ def kcore_peel(edges: DataFrame, k: int, n_rounds: Optional[int] = None,
     ``n_rounds`` fixed pins the round count (the q55 pagerank
     fixed-iteration pattern — unrollable by a SQL twin); ``n_rounds=
     None`` peels to the true k-core, probing convergence with ONE
-    tiny-row count per round (the connected_components probe shape)
-    and giving up loudly after ``max_rounds``.
+    count of the surviving edges per round (a peel that drops nothing
+    leaves it unchanged) and giving up loudly after ``max_rounds``.
 
     Scale shape: each round is a map-side-combinable degree groupBy
     plus two anti joins keyed on the node id — no all-pairs, no
-    collect of the node set; lineage is truncated every
-    ``checkpoint_every`` rounds (localCheckpoint) exactly like
-    connected_components, so deep peels keep a bounded plan.
+    collect of the node set; the edge set is materialized every round.
 
     Output: ``node``, ``degree`` (degree within the peeled core).
     """
@@ -565,49 +544,36 @@ def kcore_peel(edges: DataFrame, k: int, n_rounds: Optional[int] = None,
         raise ValueError(f"k must be >= 1, got {k}")
     if n_rounds is not None and n_rounds < 0:
         raise ValueError(f"n_rounds must be >= 0, got {n_rounds}")
-
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    rounds = n_rounds if n_rounds is not None else max_rounds
-    cached = []
+    with Iteration() as it:
+        return it.run(
+            e, partial(_peel_step, k),
+            max_rounds if n_rounds is None else n_rounds,
+            DataFrame.count if n_rounds is None else None,
+            reread=True, finish=_degrees,
+            fail=RuntimeError(
+                f"kcore_peel(k={k}) did not converge in {max_rounds} "
+                "rounds"))
 
-    def _degrees(frame: DataFrame) -> DataFrame:
-        return (
-            frame.select(F.col("u").alias("node"))
-            .unionAll(frame.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
 
-    converged = n_rounds is not None
-    for r in range(rounds):
-        bad = _degrees(e).filter(F.col("degree") < k).select("node")
-        if n_rounds is None:
-            bad = bad.persist(StorageLevel.MEMORY_AND_DISK)
-            cached.append(bad)
-            if bad.isEmpty():
-                converged = True
-                break
-        e = (
-            e.join(bad.withColumnRenamed("node", "u"), "u", "left_anti")
-            .join(bad.withColumnRenamed("node", "v"), "v", "left_anti")
-            .select("u", "v")
-        )
-        if (r + 1) % checkpoint_every == 0:
-            e = e.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"kcore_peel(k={k}) did not converge in {max_rounds} rounds"
-        )
-    return _degrees(e)
+def _bfs_step(e: DataFrame, visited: DataFrame, r: int) -> DataFrame:
+    """Nodes one hop from those first reached in round r-1 join at
+    distance r."""
+    frontier = visited.where(F.col("dist") == r - 1)
+    nxt = (
+        frontier.join(e, frontier["node"] == e["u"])
+        .select(F.col("v").alias("node"))
+        .distinct()
+        .join(visited.select("node"), "node", "left_anti")
+        .withColumn("dist", F.lit(r).cast("int"))
+    )
+    return visited.unionAll(nxt)
 
 
 def bfs_layers(edges: DataFrame, sources: DataFrame,
                n_rounds: Optional[int] = None, max_rounds: int = 50,
                src: str = "src", dst: str = "dst",
-               directed: bool = False,
-               checkpoint_every: int = 5) -> DataFrame:
+               directed: bool = False) -> DataFrame:
     """Multi-source BFS: shortest hop distance from any source node —
     the reachability/radius primitive the graph family was missing
     (seed-set expansion, contamination blast radius around a known-bad
@@ -617,15 +583,14 @@ def bfs_layers(edges: DataFrame, sources: DataFrame,
     report dist 0 even when isolated.  ``n_rounds`` fixed pins the
     depth (the q55/q77 fixed-iteration pattern — replayable by a
     bounded recursive-CTE SQL twin); ``n_rounds=None`` expands until
-    the frontier empties, probing with ONE tiny isEmpty per round and
-    giving up loudly after ``max_rounds``.
+    the frontier empties, probing with ONE tiny max(dist) aggregate per
+    round and giving up loudly after ``max_rounds``.
 
     Scale shape: each round is one frontier ⋈ edges equi-join + a
     distinct + an anti join against the visited set — all keyed on the
-    node id, never all-pairs; the visited/frontier frames persist and
-    lineage truncates every ``checkpoint_every`` rounds exactly like
-    connected_components, so deep walks keep a bounded plan.  Output:
-    ``node``, ``dist``.
+    node id, never all-pairs; the frontier is the visited rows at the
+    previous round's distance.  The edge frame persists; the visited
+    frame is materialized every round.  Output: ``node``, ``dist``.
     """
     if n_rounds is not None and n_rounds < 0:
         raise ValueError(f"n_rounds must be >= 0, got {n_rounds}")
@@ -633,48 +598,114 @@ def bfs_layers(edges: DataFrame, sources: DataFrame,
     if not directed:
         e = e.unionAll(e.select(F.col("v").alias("u"),
                                 F.col("u").alias("v")))
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-
     visited = (sources.select(F.col(sources.columns[0]).alias("node"))
                .distinct()
-               .withColumn("dist", F.lit(0).cast("int"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    frontier = visited
-    cached = [e, visited]
-    rounds = n_rounds if n_rounds is not None else max_rounds
-    converged = n_rounds is not None
-    for r in range(1, rounds + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["u"])
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(r).cast("int"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+               .withColumn("dist", F.lit(0).cast("int")))
+    with Iteration() as it:
+        return it.run(
+            visited, partial(_bfs_step, it.keep(e)),
+            max_rounds if n_rounds is None else n_rounds,
+            last_round("dist") if n_rounds is None else None,
+            reread=True,
+            fail=RuntimeError(
+                f"bfs_layers did not drain the frontier in {max_rounds} "
+                "rounds; raise max_rounds or pin n_rounds"))
+
+
+def _ranked_neighbors(e: DataFrame) -> DataFrame:
+    """Each edge's neighbor rank (by destination id) and out-degree."""
+    return (e.withColumn(
+        "rk", F.row_number().over(
+            Window.partitionBy("u").orderBy("v")))
+        .withColumn("deg", F.count(F.lit(1)).over(
+            Window.partitionBy("u"))))
+
+
+def _walk_seed(e: DataFrame, num_walks: int) -> DataFrame:
+    """``num_walks`` one-node walks from every node."""
+    nodes = (e.select(F.col("u").alias("start"))
+             .unionAll(e.select(F.col("v").alias("start")))
+             .distinct())
+    return nodes.select(
+        "start",
+        F.explode(F.sequence(F.lit(0),
+                             F.lit(num_walks - 1))).alias("walk_idx"),
+    ).select(
+        "start", "walk_idx",
+        F.lit(None).cast("string").alias("prev"),
+        F.col("start").alias("cur"),
+        F.col("start").alias("walk"),
+        F.lit(1).cast("int").alias("n_nodes"),
+        F.lit(False).alias("done"),
+    )
+
+
+def _walk_hash(seed: str, step: int):
+    """60-bit positive md5 slice of (seed, walk identity, step) —
+    nonnegative, so % == pmod and the DuckDB twin's % agrees."""
+    return F.conv(F.substring(F.md5(F.concat_ws(
+        ":", F.lit(seed), F.col("start"),
+        F.col("walk_idx").cast("string"),
+        F.lit(str(step)))), 1, 15), 16, 10).cast("long")
+
+
+def _walk_step(ranked: DataFrame,
+               weights: Optional[Tuple[int, int, int]], seed: str,
+               walks: DataFrame, step: int) -> DataFrame:
+    """One hop.  DeepWalk (``weights`` None) and node2vec's first hop
+    (no prev yet) pick uniformly; later node2vec hops weight each
+    candidate by its relation to the previous node."""
+    h = _walk_hash(seed, step)
+    cand = walks.join(
+        ranked, (walks["cur"] == ranked["u"]) & ~walks["done"],
+        "left")
+    if weights is None or step == 1:
+        picked = cand.where(
+            F.col("u").isNull()
+            | (F.col("rk") == (h % F.col("deg") + 1).cast("int")))
+    else:
+        w_return, w_inward, w_outward = weights
+        probe = ranked.select(F.col("u").alias("pu"),
+                              F.col("v").alias("pv"))
+        cand = cand.join(
+            probe,
+            (cand["prev"] == probe["pu"]) & (cand["v"] == probe["pv"]),
+            "left")
+        wt = (F.when(F.col("u").isNull(), F.lit(None))
+              .when(F.col("v") == F.col("prev"), F.lit(w_return))
+              .when(F.col("pu").isNotNull(), F.lit(w_inward))
+              .otherwise(F.lit(w_outward))).cast("long")
+        wwin = Window.partitionBy("start", "walk_idx")
+        scored = cand.withColumn("wt", wt).select(
+            "start", "walk_idx", "prev", "cur", "walk", "n_nodes",
+            "done", "u", "v", "wt",
+            F.sum("wt").over(wwin.orderBy("rk")).alias("cum"),
+            F.sum("wt").over(wwin).alias("tot"),
         )
-        cached.append(nxt)
-        if n_rounds is None and nxt.isEmpty():
-            converged = True
-            break
-        visited = visited.unionAll(nxt)
-        frontier = nxt
-        if r % checkpoint_every == 0:
-            visited = visited.localCheckpoint(eager=True)
-            frontier = frontier.localCheckpoint(eager=True)
-    out = visited.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"bfs_layers did not drain the frontier in {max_rounds} "
-            "rounds; raise max_rounds or pin n_rounds")
-    return out
+        r = h % F.col("tot")
+        picked = scored.where(
+            F.col("u").isNull()
+            | ((F.col("cum") - F.col("wt") <= r) & (r < F.col("cum"))))
+    return picked.select(
+        "start", "walk_idx",
+        F.col("cur").alias("prev"),
+        F.coalesce(F.col("v"), F.col("cur")).alias("cur"),
+        F.when(F.col("v").isNotNull(),
+               F.concat_ws(" ", "walk", "v"))
+        .otherwise(F.col("walk")).alias("walk"),
+        (F.col("n_nodes")
+         + F.col("v").isNotNull().cast("int")).alias("n_nodes"),
+        (F.col("done") | F.col("v").isNull()).alias("done"),
+    )
+
+
+def _walk_output(walks: DataFrame) -> DataFrame:
+    return walks.select("start", "walk_idx", "walk", "n_nodes")
 
 
 def random_walks(edges: DataFrame, walk_length: int, num_walks: int,
                  seed: str = "walks", src: str = "src",
-                 dst: str = "dst",
-                 checkpoint_every: int = 8) -> DataFrame:
+                 dst: str = "dst") -> DataFrame:
     """DeepWalk-style random-walk corpus generation (Perozzi et al.,
     KDD 2014) with DETERMINISTIC md5 picks — the graph-to-sequence
     operator that turns a KG into training sentences for skip-gram /
@@ -697,10 +728,8 @@ def random_walks(edges: DataFrame, walk_length: int, num_walks: int,
     Scale shape: one ranked-neighbor dim (row_number per source over
     the DISTINCT edge set + out-degrees, persisted once) and
     ``walk_length - 1`` equi-joins keyed on the current node — never
-    all-pairs, no driver actions; the walk frame's lineage truncates
-    every ``checkpoint_every`` steps like every iterative operator
-    here.  State per walk is O(1) columns plus the growing sentence
-    string.
+    all-pairs, no driver actions in the loop.  State per walk is O(1)
+    columns plus the growing sentence string.
     """
     if walk_length < 1:
         raise ValueError(f"walk_length must be >= 1, got {walk_length}")
@@ -708,67 +737,18 @@ def random_walks(edges: DataFrame, walk_length: int, num_walks: int,
         raise ValueError(f"num_walks must be >= 1, got {num_walks}")
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .distinct())
-    from pyspark.sql import Window
-
-    ranked = (e.withColumn(
-        "rk", F.row_number().over(
-            Window.partitionBy("u").orderBy("v")))
-        .withColumn("deg", F.count(F.lit(1)).over(
-            Window.partitionBy("u")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-
-    nodes = (e.select(F.col("u").alias("start"))
-             .unionAll(e.select(F.col("v").alias("start")))
-             .distinct())
-    walks = nodes.select(
-        "start",
-        F.explode(F.sequence(F.lit(0),
-                             F.lit(num_walks - 1))).alias("walk_idx"),
-    ).select(
-        "start", "walk_idx",
-        F.col("start").alias("cur"),
-        F.col("start").alias("walk"),
-        F.lit(1).cast("int").alias("n_nodes"),
-        F.lit(False).alias("done"),
-    )
-    for step in range(1, walk_length):
-        # 60-bit positive md5 slice — nonnegative, so % == pmod and
-        # the DuckDB twin's % agrees
-        h = F.conv(F.substring(F.md5(F.concat_ws(
-            ":", F.lit(seed), F.col("start"),
-            F.col("walk_idx").cast("string"),
-            F.lit(str(step)))), 1, 15), 16, 10).cast("long")
-        pick = (h % F.col("deg") + 1).cast("int")
-        stepped = (
-            walks.join(
-                ranked,
-                (walks["cur"] == ranked["u"]) & ~walks["done"],
-                "left")
-            .where(F.col("u").isNull() | (F.col("rk") == pick))
-            .select(
-                "start", "walk_idx",
-                F.coalesce(F.col("v"), F.col("cur")).alias("cur"),
-                F.when(F.col("v").isNotNull(),
-                       F.concat_ws(" ", "walk", "v"))
-                .otherwise(F.col("walk")).alias("walk"),
-                (F.col("n_nodes")
-                 + F.col("v").isNotNull().cast("int")).alias("n_nodes"),
-                (F.col("done") | F.col("v").isNull()).alias("done"),
-            ))
-        walks = stepped
-        if step % checkpoint_every == 0:
-            walks = walks.localCheckpoint(eager=False)
-    # ranked stays pinned for the job (the bfs_layers/pagerank
-    # convention); the session frees it
-    return walks.select("start", "walk_idx", "walk", "n_nodes")
+    with Iteration() as it:
+        return it.run(
+            _walk_seed(e, num_walks),
+            partial(_walk_step, it.keep(_ranked_neighbors(e)), None, seed),
+            walk_length - 1, finish=_walk_output)
 
 
 def biased_random_walks(edges: DataFrame, walk_length: int,
                         num_walks: int, w_return: int = 1,
                         w_inward: int = 1, w_outward: int = 1,
                         seed: str = "n2v", src: str = "src",
-                        dst: str = "dst",
-                        checkpoint_every: int = 8) -> DataFrame:
+                        dst: str = "dst") -> DataFrame:
     """node2vec-style SECOND-ORDER biased walks (Grover & Leskovec,
     KDD 2016) with deterministic md5 picks — :func:`random_walks`'
     DeepWalk corpus, upgraded with the return/in-out bias that lets
@@ -798,8 +778,7 @@ def biased_random_walks(edges: DataFrame, walk_length: int,
     fan-out — never all-pairs), ONE probe equi-join against the same
     persisted edge dim marking the ``prev``-neighbor class, and ONE
     window exchange keyed by the walk id for the cumulative pick —
-    walk state is O(1) columns, lineage truncates every
-    ``checkpoint_every`` steps.  The second-order bias is why a probe
+    walk state is O(1) columns.  The second-order bias is why a probe
     join exists at all: "is the candidate a neighbor of where I came
     from" is a data question, not a row-local one (the reference has
     no graph-embedding analog; this serves the KG's training-corpus
@@ -816,86 +795,44 @@ def biased_random_walks(edges: DataFrame, walk_length: int,
                 "node2vec p/q as integer class weights (w_return ∝ 1/p,"
                 " w_inward ∝ 1, w_outward ∝ 1/q, scaled by a common "
                 "factor)")
-    from pyspark.sql import Window
-
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .distinct())
-    ranked = (e.withColumn(
-        "rk", F.row_number().over(
-            Window.partitionBy("u").orderBy("v")))
-        .withColumn("deg", F.count(F.lit(1)).over(
-            Window.partitionBy("u")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-
-    nodes = (e.select(F.col("u").alias("start"))
-             .unionAll(e.select(F.col("v").alias("start")))
-             .distinct())
-    walks = nodes.select(
-        "start",
-        F.explode(F.sequence(F.lit(0),
-                             F.lit(num_walks - 1))).alias("walk_idx"),
-    ).select(
-        "start", "walk_idx",
-        F.lit(None).cast("string").alias("prev"),
-        F.col("start").alias("cur"),
-        F.col("start").alias("walk"),
-        F.lit(1).cast("int").alias("n_nodes"),
-        F.lit(False).alias("done"),
-    )
-    probe = ranked.select(F.col("u").alias("pu"), F.col("v").alias("pv"))
-    wwin = Window.partitionBy("start", "walk_idx")
-    for step in range(1, walk_length):
-        # the shared 60-bit positive md5 slice (q128's discipline)
-        h = F.conv(F.substring(F.md5(F.concat_ws(
-            ":", F.lit(seed), F.col("start"),
-            F.col("walk_idx").cast("string"),
-            F.lit(str(step)))), 1, 15), 16, 10).cast("long")
-        cand = walks.join(
-            ranked, (walks["cur"] == ranked["u"]) & ~walks["done"],
-            "left")
-        if step == 1:
-            # no prev yet: uniform over the neighbor list
-            picked = cand.where(
-                F.col("u").isNull()
-                | (F.col("rk") == (h % F.col("deg") + 1).cast("int")))
-        else:
-            cand = cand.join(
-                probe,
-                (cand["prev"] == probe["pu"]) & (cand["v"] == probe["pv"]),
-                "left")
-            wt = (F.when(F.col("u").isNull(), F.lit(None))
-                  .when(F.col("v") == F.col("prev"), F.lit(w_return))
-                  .when(F.col("pu").isNotNull(), F.lit(w_inward))
-                  .otherwise(F.lit(w_outward))).cast("long")
-            scored = cand.withColumn("wt", wt).select(
-                "start", "walk_idx", "prev", "cur", "walk", "n_nodes",
-                "done", "u", "v", "wt",
-                F.sum("wt").over(wwin.orderBy("rk")).alias("cum"),
-                F.sum("wt").over(wwin).alias("tot"),
-            )
-            r = h % F.col("tot")
-            picked = scored.where(
-                F.col("u").isNull()
-                | ((F.col("cum") - F.col("wt") <= r) & (r < F.col("cum"))))
-        stepped = picked.select(
-            "start", "walk_idx",
-            F.col("cur").alias("prev"),
-            F.coalesce(F.col("v"), F.col("cur")).alias("cur"),
-            F.when(F.col("v").isNotNull(),
-                   F.concat_ws(" ", "walk", "v"))
-            .otherwise(F.col("walk")).alias("walk"),
-            (F.col("n_nodes")
-             + F.col("v").isNotNull().cast("int")).alias("n_nodes"),
-            (F.col("done") | F.col("v").isNull()).alias("done"),
-        )
-        walks = stepped
-        if step % checkpoint_every == 0:
-            walks = walks.localCheckpoint(eager=False)
-    return walks.select("start", "walk_idx", "walk", "n_nodes")
+    with Iteration() as it:
+        return it.run(
+            _walk_seed(e, num_walks),
+            partial(_walk_step, it.keep(_ranked_neighbors(e)),
+                    (w_return, w_inward, w_outward), seed),
+            walk_length - 1, finish=_walk_output)
 
 
-def wl_colors(triples: DataFrame, n_iters: int = 2,
-              checkpoint_every: int = 3) -> DataFrame:
+def _wl_step(e: DataFrame, colors: DataFrame, _r: int) -> DataFrame:
+    """Rehash each color with its sorted incident messages."""
+    cd = colors.select(F.col("node").alias("__n"),
+                       F.col("color").alias("__c"))
+    out_msgs = (
+        e.join(cd, e["obj"] == cd["__n"])
+        .select(F.col("subj").alias("node"),
+                F.concat_ws(":", F.lit("o"), F.col("pred"),
+                            F.col("__c")).alias("msg")))
+    in_msgs = (
+        e.join(cd, e["subj"] == cd["__n"])
+        .select(F.col("obj").alias("node"),
+                F.concat_ws(":", F.lit("i"), F.col("pred"),
+                            F.col("__c")).alias("msg")))
+    msgs = (out_msgs.unionAll(in_msgs)
+            .groupBy("node")
+            .agg(F.concat_ws(
+                ",", F.sort_array(F.collect_list("msg")))
+                .alias("__m")))
+    return (colors.join(msgs, "node", "left")
+            .select("node",
+                    F.md5(F.concat_ws(
+                        "#", F.col("color"),
+                        F.coalesce(F.col("__m"), F.lit(""))))
+                    .alias("color")))
+
+
+def wl_colors(triples: DataFrame, n_iters: int = 2) -> DataFrame:
     """1-dimensional Weisfeiler-Leman color refinement over a triple
     graph: ``(node, color)`` rows where ``color`` is the node's
     structural-role fingerprint after ``n_iters`` rounds — the
@@ -918,11 +855,14 @@ def wl_colors(triples: DataFrame, n_iters: int = 2,
     Scale shape per round: two co-partitioned equi-joins (edge ⨝
     colors, once per direction) + one groupBy(node) whose state is
     the sorted message list — the PageRank shuffle profile
-    (components.pagerank:311); the edge frame persists once; color
-    lineage truncates every ``checkpoint_every`` rounds.  Message
-    lists are bounded by node degree: for 100 TB graphs cap
-    super-hub degree upstream (the q122 hub-overflow discipline) —
-    the hash is exact for every node whose messages fit.
+    (components.pagerank); the edge frame persists once.  Each round
+    reads the previous colors from THREE branches (both direction
+    joins + the rehash join), so the driver materializes every round
+    (unmaterialized, round 2 re-evaluated round 1 three times in
+    q155).  Message lists are bounded by node degree: for 100 TB
+    graphs cap super-hub degree upstream (the q122 hub-overflow
+    discipline) — the hash is exact for every node whose messages
+    fit.
 
     The reference has no analog (its graph lives in rdflib); this is
     part of the KG-publication family (graph diff/versioning:
@@ -930,52 +870,17 @@ def wl_colors(triples: DataFrame, n_iters: int = 2,
     anonymized/relabeled graphs are structurally equal)."""
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    # set semantics: a storage-duplicated triple must not duplicate WL
-    # messages, or the "relabeled-but-equal graphs share the hash"
-    # contract silently breaks (same discipline as hits_scores)
-    e = (triples.select("subj", "pred", "obj").distinct()
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    nodes = (e.select(F.col("subj").alias("node"))
-             .unionAll(e.select(F.col("obj").alias("node")))
-             .distinct())
-    colors = nodes.withColumn("color", F.md5(F.lit("")))
-    for i in range(1, n_iters + 1):
-        if i > 1:
-            # each round consumes the previous colors from THREE branches
-            # (both direction joins + the color-rehash join); without a
-            # per-round materialization the previous round's whole chain
-            # re-evaluates once per branch — measured 3x round-1 work in
-            # round 2 for q155.  localCheckpoint also truncates lineage
-            # (the node-sized frame is what pagerank checkpoints too).
-            colors = colors.localCheckpoint(eager=True)
-        cd = colors.select(F.col("node").alias("__n"),
-                           F.col("color").alias("__c"))
-        out_msgs = (
-            e.join(cd, e["obj"] == cd["__n"])
-            .select(F.col("subj").alias("node"),
-                    F.concat_ws(":", F.lit("o"), F.col("pred"),
-                                F.col("__c")).alias("msg")))
-        in_msgs = (
-            e.join(cd, e["subj"] == cd["__n"])
-            .select(F.col("obj").alias("node"),
-                    F.concat_ws(":", F.lit("i"), F.col("pred"),
-                                F.col("__c")).alias("msg")))
-        msgs = (out_msgs.unionAll(in_msgs)
-                .groupBy("node")
-                .agg(F.concat_ws(
-                    ",", F.sort_array(F.collect_list("msg")))
-                    .alias("__m")))
-        colors = (colors.join(msgs, "node", "left")
-                  .select("node",
-                          F.md5(F.concat_ws(
-                              "#", F.col("color"),
-                              F.coalesce(F.col("__m"), F.lit(""))))
-                          .alias("color")))
-        if i % checkpoint_every == 0:
-            colors = colors.localCheckpoint(eager=True)
-    out = colors.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    with Iteration() as it:
+        # set semantics: a storage-duplicated triple must not duplicate
+        # WL messages, or the "relabeled-but-equal graphs share the
+        # hash" contract silently breaks (same discipline as
+        # hits_scores)
+        e = it.keep(triples.select("subj", "pred", "obj").distinct())
+        nodes = (e.select(F.col("subj").alias("node"))
+                 .unionAll(e.select(F.col("obj").alias("node")))
+                 .distinct())
+        return it.run(nodes.withColumn("color", F.md5(F.lit(""))),
+                      partial(_wl_step, e), n_iters, reread=True)
 
 
 def wl_fingerprint(triples: DataFrame, n_iters: int = 2) -> DataFrame:
@@ -1003,11 +908,36 @@ def wl_fingerprint(triples: DataFrame, n_iters: int = 2) -> DataFrame:
                  .cast("decimal(38,0)").cast("string").alias("sum_h")))
 
 
+def _relax_step(e: DataFrame, dist: DataFrame, r: int) -> DataFrame:
+    """Relax the edges out of the nodes improved in round r-1 (``__at``)
+    and fold in the strict improvements, stamped ``__at = r``."""
+    # dist carries e in its lineage — rename its columns and resolve
+    # by name so the relaxation join is never an ambiguous self-join
+    fr = dist.where(F.col("__at") == r - 1).select(
+        F.col("node").alias("__fn"), F.col("dist").alias("__fd"))
+    cand = (
+        fr.join(e, F.col("__fn") == F.col("u"))
+        .select(F.col("v").alias("node"),
+                (F.col("__fd") + F.col("w")).alias("d"))
+        .groupBy("node").agg(F.min("d").alias("d"))
+    )
+    improved = (
+        cand.join(dist.select(F.col("node"),
+                              F.col("dist").alias("__cur")),
+                  "node", "left")
+        .where(F.col("__cur").isNull()
+               | (F.col("d") < F.col("__cur")))
+        .select("node", F.col("d").alias("dist"),
+                F.lit(r).alias("__at"))
+    )
+    return (dist.join(improved.select("node"), "node", "left_anti")
+            .unionByName(improved))
+
+
 def shortest_paths(edges: DataFrame, sources: DataFrame,
                    n_rounds: Optional[int] = None, max_rounds: int = 50,
                    src: str = "src", dst: str = "dst",
-                   weight: str = "w", directed: bool = True,
-                   checkpoint_every: int = 5) -> DataFrame:
+                   weight: str = "w", directed: bool = True) -> DataFrame:
     """Multi-source WEIGHTED shortest paths — frontier-only
     Bellman-Ford (semi-naive relaxation): ``(node, dist)`` with the
     minimal path weight from any source, the weighted twin of
@@ -1026,7 +956,7 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     q83/q55 fixed-iteration pattern, replayable by a bounded
     recursive-CTE twin: min over the hop-bounded walk — driver
     q156); ``n_rounds=None`` relaxes until NO distance improves
-    (one tiny isEmpty probe per round), giving up loudly after
+    (one tiny max(round) probe per round), giving up loudly after
     ``max_rounds``.
 
     Scale shape per round: one frontier ⋈ edges equi-join, one
@@ -1034,10 +964,11 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     relaxations, one left join against the current dist frame to
     keep IMPROVEMENTS only (the semi-naive delta — re-relaxing
     settled nodes is what naive BF wastes), then an anti-join +
-    union to fold improvements into dist; frontier = improvements,
-    so work is proportional to the wavefront, not the graph.
-    Lineage truncates every ``checkpoint_every`` rounds.  Sources
-    report dist 0 even when isolated."""
+    union to fold improvements into dist; the frontier is the rows
+    improved last round, so work is proportional to the wavefront,
+    not the graph.  The dist frame is materialized every round
+    (unmaterialized, the plan tripled per round).  Sources report dist
+    0 even when isolated."""
     if n_rounds is not None and n_rounds < 0:
         raise ValueError(f"n_rounds must be >= 0, got {n_rounds}")
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"),
@@ -1045,60 +976,47 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     if not directed:
         e = e.unionAll(e.select(F.col("v").alias("u"),
                                 F.col("u").alias("v"), F.col("w")))
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-
     dist = (sources.select(F.col(sources.columns[0]).alias("node"))
             .distinct()
             .withColumn("dist", F.lit(0).cast("long"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    frontier = dist
-    cached = [e, dist]
-    rounds = n_rounds if n_rounds is not None else max_rounds
-    converged = n_rounds is not None
-    for r in range(1, rounds + 1):
-        # frontier carries e in its lineage after round 1 — rename its
-        # columns and resolve by name so the relaxation join is never
-        # an ambiguous self-join
-        fr = frontier.select(F.col("node").alias("__fn"),
-                             F.col("dist").alias("__fd"))
-        cand = (
-            fr.join(e, F.col("__fn") == F.col("u"))
-            .select(F.col("v").alias("node"),
-                    (F.col("__fd") + F.col("w")).alias("d"))
-            .groupBy("node").agg(F.min("d").alias("d"))
-        )
-        improved = (
-            cand.join(dist.select(F.col("node"),
-                                  F.col("dist").alias("__cur")),
-                      "node", "left")
-            .where(F.col("__cur").isNull()
-                   | (F.col("d") < F.col("__cur")))
-            .select("node", F.col("d").alias("dist"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        cached.append(improved)
-        if n_rounds is None and improved.isEmpty():
-            converged = True
-            break
-        dist = (dist.join(improved.select("node"), "node", "left_anti")
-                .unionByName(improved))
-        frontier = improved
-        if r % checkpoint_every == 0:
-            dist = dist.localCheckpoint(eager=True)
-            frontier = frontier.localCheckpoint(eager=True)
-    out = dist.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"shortest_paths did not converge in {max_rounds} rounds; "
-            "raise max_rounds or pin n_rounds")
-    return out
+            .withColumn("__at", F.lit(0)))
+    with Iteration() as it:
+        return it.run(
+            dist, partial(_relax_step, it.keep(e)),
+            max_rounds if n_rounds is None else n_rounds,
+            last_round("__at") if n_rounds is None else None,
+            reread=True, finish=lambda d: d.select("node", "dist"),
+            fail=RuntimeError(
+                f"shortest_paths did not converge in {max_rounds} rounds; "
+                "raise max_rounds or pin n_rounds"))
+
+
+_DEC = "decimal(38,0)"
+
+
+def _auth_of(e: DataFrame, hub: DataFrame) -> DataFrame:
+    """Half-step: auth(v) = sum of hub(u) over the edges u -> v."""
+    h = hub.select(F.col("node").alias("__hn"), F.col("hub").alias("__h"))
+    return (e.join(h, e["u"] == F.col("__hn"))
+            .groupBy(F.col("v").alias("node"))
+            .agg(F.sum("__h").cast(_DEC).alias("auth")))
+
+
+def _hub_of(e: DataFrame, auth: DataFrame) -> DataFrame:
+    """Half-step: hub(u) = sum of auth(v) over the edges u -> v."""
+    a = auth.select(F.col("node").alias("__an"),
+                    F.col("auth").alias("__a"))
+    return (e.join(a, e["v"] == F.col("__an"))
+            .groupBy(F.col("u").alias("node"))
+            .agg(F.sum("__a").cast(_DEC).alias("hub")))
+
+
+def _hits_step(e: DataFrame, auth: DataFrame, _r: int) -> DataFrame:
+    return _auth_of(e, _hub_of(e, auth))
 
 
 def hits_scores(edges: DataFrame, n_iters: int = 2,
-                src: str = "src", dst: str = "dst",
-                checkpoint_every: int = 3) -> DataFrame:
+                src: str = "src", dst: str = "dst") -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) as a fixed-depth
     EXACT-INTEGER power iteration: ``(node, hub, auth)`` after
     ``n_iters`` rounds from the all-ones start, WITHOUT the usual
@@ -1110,8 +1028,7 @@ def hits_scores(edges: DataFrame, n_iters: int = 2,
     is invariant to the scale factor dropped here).  Growth is
     bounded by (max degree)^(2·n_iters): at the default 2 rounds a
     10^9-degree hub still fits decimal(38); deeper runs are the
-    caller's overflow responsibility (documented, like pagerank's
-    n_iters lineage note).  ADVICE r5 asymmetry note: under non-ANSI
+    caller's overflow responsibility.  ADVICE r5 asymmetry note: under non-ANSI
     Spark a decimal(38) overflow yields NULL and the final coalesce
     would report that node's hub/auth as "0" (silent), while the
     DuckDB oracle's HUGEINT errors loudly — for deep ``n_iters`` runs
@@ -1121,50 +1038,32 @@ def hits_scores(edges: DataFrame, n_iters: int = 2,
     Round shape (the pagerank profile): auth = one
     map-side-combinable groupBy(dst) sum over the edge frame joined
     with current hubs; hub = the dual groupBy(src) over the new
-    auths; edges persist once; lineage truncates every
-    ``checkpoint_every`` rounds.  Nodes with no incoming edges keep
-    auth 0, no outgoing keep hub 0 (coalesced — every node reports)."""
+    auths; edges persist once.  The iterated state is auth (round 1's
+    comes from the all-ones hubs); the final hubs are derived from the
+    final auths.  Nodes with no incoming edges keep auth 0, no
+    outgoing keep hub 0 (coalesced — every node reports)."""
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    dec = "decimal(38,0)"
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .distinct()
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    nodes = (e.select(F.col("u").alias("node"))
-             .unionAll(e.select(F.col("v").alias("node")))
-             .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    hub = nodes.withColumn("hub", F.lit(1).cast(dec))
-    cached = [e, nodes]
-    for i in range(1, n_iters + 1):
-        h = hub.select(F.col("node").alias("__hn"),
-                       F.col("hub").alias("__h"))
-        auth = (
-            e.join(h, e["u"] == F.col("__hn"))
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("__h").cast(dec).alias("auth")))
-        a = auth.select(F.col("node").alias("__an"),
-                        F.col("auth").alias("__a"))
-        hub = (
-            e.join(a, e["v"] == F.col("__an"))
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.sum("__a").cast(dec).alias("hub")))
-        # next round's lineage flows only through hub (auth is
-        # re-derived from it), so hub alone needs truncation
-        if i % checkpoint_every == 0:
-            hub = hub.localCheckpoint(eager=True)
-    out = (nodes
-           .join(hub, "node", "left")
-           .join(auth, "node", "left")
-           .select("node",
-                   F.coalesce(F.col("hub"), F.lit(0).cast(dec))
-                   .cast(dec).cast("string").alias("hub"),
-                   F.coalesce(F.col("auth"), F.lit(0).cast(dec))
-                   .cast(dec).cast("string").alias("auth"))
-           .localCheckpoint(eager=True))
-    for c in cached:
-        c.unpersist()
-    return out
+    with Iteration() as it:
+        e = it.keep(edges.select(F.col(src).alias("u"),
+                                 F.col(dst).alias("v")).distinct())
+        nodes = it.keep(e.select(F.col("u").alias("node"))
+                        .unionAll(e.select(F.col("v").alias("node")))
+                        .distinct())
+
+        def scores(auth: DataFrame) -> DataFrame:
+            return (nodes
+                    .join(_hub_of(e, auth), "node", "left")
+                    .join(auth, "node", "left")
+                    .select("node",
+                            F.coalesce(F.col("hub"), F.lit(0).cast(_DEC))
+                            .cast(_DEC).cast("string").alias("hub"),
+                            F.coalesce(F.col("auth"), F.lit(0).cast(_DEC))
+                            .cast(_DEC).cast("string").alias("auth")))
+
+        ones = nodes.withColumn("hub", F.lit(1).cast(_DEC))
+        return it.run(_auth_of(e, ones), partial(_hits_step, e),
+                      n_iters - 1, finish=scores)
 
 
 def neighbor_jaccard(edges: DataFrame, src: str = "src",
@@ -1246,10 +1145,26 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src",
     return res
 
 
+def _ppr_step(out_edges: DataFrame, tele: DataFrame, damping: float,
+              ranks: DataFrame, _r: int) -> DataFrame:
+    """One walk step plus the source-only teleport term."""
+    contrib = (
+        out_edges.join(ranks, out_edges["s"] == ranks["node"])
+        .select(F.col("t").alias("node"),
+                (F.col("rank") / F.col("od")).alias("c"))
+    )
+    walk = (contrib.groupBy("node")
+            .agg((damping * F.sum("c")).alias("w")))
+    return (walk.join(tele, "node", "full")
+            .select("node",
+                    (F.coalesce("w", F.lit(0.0))
+                     + F.coalesce("tp", F.lit(0.0))).alias("rank")))
+
+
 def personalized_pagerank(edges: DataFrame, sources: DataFrame,
                           src: str = "src", dst: str = "dst",
-                          n_iters: int = 3, damping: float = 0.85,
-                          checkpoint_every: int = 8) -> DataFrame:
+                          n_iters: int = 3,
+                          damping: float = 0.85) -> DataFrame:
     """Personalized PageRank / random walk with restart (Jeh & Widom
     2003; the entity-relatedness primitive): :func:`pagerank` with the
     teleport mass restricted to a SOURCE set — ``r_{k+1}(v) =
@@ -1260,8 +1175,7 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
 
     Same shape as pagerank (undirected symmetrized edges, one
     co-partitioned join + one combinable groupBy-sum per iteration,
-    degrees/edges persisted once, rank lineage truncated every
-    ``checkpoint_every`` rounds), plus one full-outer join per round
+    degrees/edges persisted once), plus one full-outer join per round
     folding the walk mass with the source-only teleport term (nodes
     the walk has not reached yet hold rank 0 and stay ABSENT from the
     slim rank frame — the frontier-growth property that makes PPR on
@@ -1272,45 +1186,19 @@ def personalized_pagerank(edges: DataFrame, sources: DataFrame,
     decimals like pagerank."""
     if n_iters < 0:
         raise ValueError("n_iters must be >= 0")
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-    sym = e.unionByName(
-        e.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    deg = sym.groupBy("s").agg(F.count("*").alias("od"))
-    out_edges = sym.join(deg, "s").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = sym.select(F.col("s").alias("node")).distinct()
-    srcs = (sources.select(F.col(sources.columns[0]).alias("node"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    n_src = srcs.count()  # one action: sizes the teleport term
-    if n_src == 0:
-        raise ValueError("sources must name at least one node")
-    teleport = (1.0 - damping) / n_src
-    tele = srcs.withColumn("tp", F.lit(teleport))
-    ranks = srcs.withColumn("rank", F.lit(1.0 / n_src))
-    for i in range(n_iters):
-        contrib = (
-            out_edges.join(ranks, out_edges["s"] == ranks["node"])
-            .select(F.col("t").alias("node"),
-                    (F.col("rank") / F.col("od")).alias("c"))
-        )
-        walk = (contrib.groupBy("node")
-                .agg((damping * F.sum("c")).alias("w")))
-        ranks = (walk.join(tele, "node", "full")
-                 .select("node",
-                         (F.coalesce("w", F.lit(0.0))
-                          + F.coalesce("tp", F.lit(0.0))).alias("rank")))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    out = nodes.join(ranks, "node", "left").select(
-        "node",
-        F.round(F.coalesce("rank", F.lit(0.0)), 6).alias("rank"),
-    ).localCheckpoint(eager=True)
-    # match the sibling operators' discipline (hits_scores, shortest_paths,
-    # wl_colors): eager-checkpoint the result, then free the per-call
-    # caches so a long-lived session doesn't accumulate them
-    for c in (sym, out_edges, srcs):
-        c.unpersist()
-    return out
+    with Iteration() as it:
+        sym = it.keep(_both_ways(edges, src, dst))
+        out_edges = it.keep(_with_out_degree(sym))
+        nodes = sym.select(F.col("s").alias("node")).distinct()
+        srcs = it.keep(sources.select(F.col(sources.columns[0]).alias("node"))
+                       .distinct())
+        n_src = srcs.count()  # one action: sizes the teleport term
+        if n_src == 0:
+            raise ValueError("sources must name at least one node")
+        tele = srcs.withColumn("tp", F.lit((1.0 - damping) / n_src))
+        return it.run(
+            srcs.withColumn("rank", F.lit(1.0 / n_src)),
+            partial(_ppr_step, out_edges, tele, damping), n_iters,
+            finish=lambda ranks: nodes.join(ranks, "node", "left").select(
+                "node",
+                F.round(F.coalesce("rank", F.lit(0.0)), 6).alias("rank")))

@@ -207,7 +207,7 @@ def transitive_entail(triples: DataFrame, trans_preds: Sequence[str],
     same bounded-recursion contract as path_closure / bfs_layers; a
     depth-d bound entails paths of <= d edges, and the value oracle
     replays exactly that bound as a recursive CTE).  ``early_stop=True``
-    stops as soon as a round adds nothing (one tiny isEmpty probe per
+    stops as soon as a round adds nothing (one tiny max(hops) probe per
     round); the default runs the fixed depth with zero driver actions.
 
     Entailed rows carry ``okind='uri'`` when ``okind_col`` is given —

@@ -190,12 +190,13 @@ describes.)
 
 import re
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import partial, reduce
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from claimskg_generator_spark.operators.iterate import Iteration, last_round
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -1632,10 +1633,24 @@ def _path_step_edges(triples: DataFrame, path) -> DataFrame:
     return cur.distinct()
 
 
+def _closure_step(e: DataFrame, reached: DataFrame, r: int) -> DataFrame:
+    """Extend the pairs first found at r hops by one edge; pairs not
+    reached before join at r + 1 hops."""
+    step = (reached.where(F.col("hops") == r)
+            .select("src", F.col("dst").alias("via")))
+    nxt = (
+        step.join(e, step["via"] == e["u"])
+        .select("src", F.col("v").alias("dst"))
+        .distinct()
+        .join(reached.select("src", "dst"), ["src", "dst"], "left_anti")
+        .withColumn("hops", F.lit(r + 1).cast("int"))
+    )
+    return reached.unionAll(nxt)
+
+
 def path_closure(edges: DataFrame, max_hops: int,
                  src: str = "src", dst: str = "dst",
-                 early_stop: bool = True,
-                 checkpoint_every: int = 3) -> DataFrame:
+                 early_stop: bool = True) -> DataFrame:
     """Bounded transitive closure with minimal hop counts — the SPARQL
     property path ``pred+`` over an edge relation (pair it with
     :func:`edges_from_triples`, or any derived edge frame).
@@ -1646,46 +1661,27 @@ def path_closure(edges: DataFrame, max_hops: int,
     ``pred+`` semantics, not bugs).
 
     Scale shape — semi-naive Datalog, the same discipline as
-    components.bfs_layers:531: each round joins only the LAST round's
-    frontier against the edge sliver (never the accumulated closure),
-    keyed equi-join + distinct + anti-join against the closure so far —
-    so a pair is found exactly once, at its minimal hop count, and
-    cycles cannot loop.  The edge frame persists once; closure and
-    frontier truncate lineage every ``checkpoint_every`` rounds.
-    ``early_stop=True`` probes the frontier per round (one tiny isEmpty
-    action each — the documented convergence probe); ``False`` runs
-    exactly ``max_hops`` rounds with no driver action, the fixed-depth
-    mode a bounded recursive-CTE SQL twin replays.
+    components.bfs_layers: each round joins only the LAST round's
+    frontier (the pairs at the previous hop count) against the edge
+    sliver (never the accumulated closure), keyed equi-join + distinct
+    + anti-join against the closure so far — so a pair is found
+    exactly once, at its minimal hop count, and cycles cannot loop.
+    The edge frame persists once; the closure feeds three branches of
+    the next round, so the iteration driver (operators/iterate.py)
+    materializes it every round.  ``early_stop=True`` probes the
+    closure per round (one tiny max(hops) aggregate each — the
+    documented convergence probe); ``False`` runs exactly
+    ``max_hops`` rounds with no driver action, the fixed-depth mode a
+    bounded recursive-CTE SQL twin replays.
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .distinct()
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    reached = (e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-               .withColumn("hops", F.lit(1).cast("int"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    frontier = reached
-    cached = [e, reached]
-    for h in range(2, max_hops + 1):
-        step = frontier.select("src", F.col("dst").alias("via"))
-        nxt = (
-            step.join(e, step["via"] == e["u"])
-            .select("src", F.col("v").alias("dst"))
-            .distinct()
-            .join(reached.select("src", "dst"), ["src", "dst"], "left_anti")
-            .withColumn("hops", F.lit(h).cast("int"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        cached.append(nxt)
-        if early_stop and nxt.isEmpty():
-            break
-        reached = reached.unionAll(nxt)
-        frontier = nxt
-        if h % checkpoint_every == 0:
-            reached = reached.localCheckpoint(eager=True)
-            frontier = frontier.localCheckpoint(eager=True)
-    out = reached.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    return out
+    with Iteration() as it:
+        e = it.keep(edges.select(F.col(src).alias("u"),
+                                 F.col(dst).alias("v")).distinct())
+        reached = (e.select(F.col("u").alias("src"),
+                            F.col("v").alias("dst"))
+                   .withColumn("hops", F.lit(1).cast("int")))
+        return it.run(reached, partial(_closure_step, e), max_hops - 1,
+                      last_round("hops") if early_stop else None,
+                      reread=True)

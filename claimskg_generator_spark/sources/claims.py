@@ -75,10 +75,6 @@ MENTION_SCHEMA = T.ArrayType(
 )
 
 
-def read_input(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_reference_csv(spark: SparkSession, path: str) -> DataFrame:
     """The reference's NATIVE wide-CSV dataset (export.py:105-113 —
     csv.DictReader, unix dialect, ',' delimiter, '\"' quote/escape) read
@@ -265,9 +261,3 @@ def derive_claims(parsed: DataFrame, model_uri: str = DEFAULT_MODEL_URI) -> Data
         "m_keywords",
         "m_author",
     )
-
-
-def parse_claims(input_df: DataFrame, model_uri: str = DEFAULT_MODEL_URI,
-                 order_col: str = "path") -> DataFrame:
-    """Convenience: parse + derive in one lazy plan (tests / small inputs)."""
-    return derive_claims(parse_records(input_df, order_col), model_uri)

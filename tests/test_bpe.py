@@ -112,11 +112,6 @@ def test_train_stops_when_fully_merged(spark):
         bpe_train(_sents(spark, ["a"]), n_merges=-1)
 
 
-def test_checkpoint_every_guard(spark):
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        bpe_train(_sents(spark, ["a"]), n_merges=1, checkpoint_every=0)
-
-
 def test_symbols_always_reconstruct_word(spark):
     """Invariant: at every point in training, concatenating a word's
     symbols yields word + END — merging never loses or duplicates a

@@ -211,9 +211,29 @@ def _plan_chars(df):
     return len(df._jdf.queryExecution().optimizedPlan().toString())
 
 
-def test_pagerank_deep_iteration_plan_bounded(spark):
+def _result_plan_chars(monkeypatch, truncate_every, run):
+    """Run ``run()`` with the driver truncating every ``truncate_every``
+    rounds; return the optimized-plan size of the frame the driver
+    materializes as the result (the returned frame is a checkpoint)."""
+    from claimskg_generator_spark.operators import iterate
+
+    seen = []
+    checkpoint = iterate._checkpoint
+
+    def spy(df, eager):
+        seen.append(_plan_chars(df))
+        return checkpoint(df, eager)
+
+    monkeypatch.setattr(iterate, "TRUNCATE_EVERY", truncate_every)
+    monkeypatch.setattr(iterate, "_checkpoint", spy)
+    out = run()
+    monkeypatch.undo()
+    return out, seen[-1]
+
+
+def test_pagerank_deep_iteration_plan_bounded(spark, monkeypatch):
     """VERDICT r4 #4: the rank frame's lineage used to grow linearly in
-    n_iters.  With checkpoint_every the optimized plan of a 30-iteration
+    n_iters.  With truncation the optimized plan of a 30-iteration
     run must stay bounded (no bigger than a few un-truncated iterations),
     and values must be identical to the un-truncated loop."""
     from pyspark.sql import functions as F
@@ -223,56 +243,38 @@ def test_pagerank_deep_iteration_plan_bounded(spark):
     edges = spark.createDataFrame(
         [(i, (i + 1) % 12) for i in range(12)] + [(0, 6), (3, 9)],
         "src long, dst long")
-    deep = pagerank(edges, n_iters=30, checkpoint_every=5)
-    unbounded_short = pagerank(edges, n_iters=10, checkpoint_every=10**9)
-    assert _plan_chars(deep) < _plan_chars(unbounded_short)
+    deep, deep_chars = _result_plan_chars(
+        monkeypatch, 5, lambda: pagerank(edges, n_iters=30))
+    _, unbounded_short = _result_plan_chars(
+        monkeypatch, 10**9, lambda: pagerank(edges, n_iters=10))
+    assert deep_chars < unbounded_short
     # truncation must not change values: 6 iters with and without it
-    a = sorted(map(tuple, pagerank(edges, n_iters=6,
-                                   checkpoint_every=2).collect()))
-    b = sorted(map(tuple, pagerank(edges, n_iters=6,
-                                   checkpoint_every=10**9).collect()))
-    assert a == b
+    a, _ = _result_plan_chars(
+        monkeypatch, 2, lambda: pagerank(edges, n_iters=6))
+    b, _ = _result_plan_chars(
+        monkeypatch, 10**9, lambda: pagerank(edges, n_iters=6))
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     total = deep.agg(F.sum("rank")).collect()[0][0]
     assert abs(total - 1.0) < 1e-3  # mass conserved through 30 rounds
-    with pytest.raises(ValueError):
-        pagerank(edges, n_iters=3, checkpoint_every=0)
 
 
-def test_pagerank_tol_early_stop_matches_deep_run(spark):
-    """The tol convergence stop (production variant) must land on the
-    power-iteration fixed point: ranks within tol-ish of a deep fixed-
-    iteration run, while stopping well before the cap."""
-    from claimskg_generator_spark.operators.components import pagerank
-
-    edges = spark.createDataFrame(
-        [(i, (i + 1) % 10) for i in range(10)] + [(0, 5)],
-        "src long, dst long")
-    tol = sorted(map(tuple, pagerank(edges, n_iters=200, tol=1e-9,
-                                     checkpoint_every=5).collect()))
-    deep = sorted(map(tuple, pagerank(edges, n_iters=60,
-                                      checkpoint_every=5).collect()))
-    assert [n for n, _ in tol] == [n for n, _ in deep]
-    for (_, a), (_, b) in zip(tol, deep):
-        assert abs(a - b) < 1e-6
-
-
-def test_label_propagation_deep_iteration_plan_bounded(spark):
+def test_label_propagation_deep_iteration_plan_bounded(spark, monkeypatch):
     from claimskg_generator_spark.operators.components import (
         label_propagation,
     )
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 9) for i in range(9)], "src long, dst long")
-    deep = label_propagation(edges, n_iters=20, checkpoint_every=4)
-    unbounded_short = label_propagation(edges, n_iters=8,
-                                        checkpoint_every=10**9)
-    assert _plan_chars(deep) < _plan_chars(unbounded_short)
-    a = sorted(map(tuple, label_propagation(edges, n_iters=4,
-                                            checkpoint_every=2).collect()))
-    b = sorted(map(tuple,
-                   label_propagation(edges, n_iters=4,
-                                     checkpoint_every=10**9).collect()))
-    assert a == b
+    _, deep = _result_plan_chars(
+        monkeypatch, 4, lambda: label_propagation(edges, n_iters=20))
+    _, unbounded_short = _result_plan_chars(
+        monkeypatch, 10**9, lambda: label_propagation(edges, n_iters=8))
+    assert deep < unbounded_short
+    a, _ = _result_plan_chars(
+        monkeypatch, 2, lambda: label_propagation(edges, n_iters=4))
+    b, _ = _result_plan_chars(
+        monkeypatch, 10**9, lambda: label_propagation(edges, n_iters=4))
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 # ---------------------------------------------------------------------------
@@ -353,7 +355,7 @@ def test_kcore_peel_random_graphs_match_naive(spark):
         df = spark.createDataFrame(sorted(edges), "src int, dst int")
         # convergence mode = true k-core
         got = {r.node: r.degree
-               for r in kcore_peel(df, k=3, checkpoint_every=2).collect()}
+               for r in kcore_peel(df, k=3).collect()}
         assert got == _naive_kcore(edges, 3)
         # fixed rounds = partial peel
         got1 = {r.node: r.degree
@@ -1140,3 +1142,68 @@ def test_ppr_guards(spark):
     s = spark.createDataFrame([("a",)], "node string")
     with pytest.raises(ValueError, match="n_iters"):
         personalized_pagerank(e, s, n_iters=-1)
+
+
+# ------------------------------------------- the shared iteration driver
+
+
+def test_shortest_paths_long_chain_plan_stays_flat(spark):
+    """Each round reads the previous dist frame from three branches;
+    unless the driver materializes every round, the plan roughly
+    triples per round and a 12-edge chain exhausts the driver heap."""
+    from claimskg_generator_spark.operators.components import (
+        shortest_paths,
+    )
+
+    e = spark.createDataFrame([(i, i + 1, 1) for i in range(12)],
+                              "src long, dst long, w long")
+    s = spark.createDataFrame([(0,)], "node long")
+    for n_rounds in (12, None):
+        got = {r["node"]: r["dist"]
+               for r in shortest_paths(e, s, n_rounds=n_rounds).collect()}
+        assert got == {i: i for i in range(13)}, n_rounds
+
+
+def _ring(spark):
+    nodes = "abcdefgh"
+    return spark.createDataFrame(
+        [(nodes[i], nodes[(i + 1) % 8]) for i in range(8)] + [("a", "e")],
+        "src string, dst string")
+
+
+def _seeds(spark):
+    return spark.createDataFrame([("a",)], "node string")
+
+
+def _iterative_operators():
+    from claimskg_generator_spark.operators import components as c
+    from claimskg_generator_spark.operators.bpe import bpe_train
+    from claimskg_generator_spark.operators.sparql import path_closure
+
+    return {
+        "connected_components": lambda sp: c.connected_components(_ring(sp)),
+        "pagerank": lambda sp: c.pagerank(_ring(sp)),
+        "label_propagation": lambda sp: c.label_propagation(_ring(sp)),
+        "kcore_peel": lambda sp: c.kcore_peel(_ring(sp), k=2),
+        "bfs_layers": lambda sp: c.bfs_layers(_ring(sp), _seeds(sp)),
+        "random_walks": lambda sp: c.random_walks(_ring(sp), 3, 2),
+        "biased_random_walks":
+            lambda sp: c.biased_random_walks(_ring(sp), 3, 2),
+        "wl_colors": lambda sp: c.wl_colors(_ring(sp).selectExpr(
+            "src AS subj", "'p' AS pred", "dst AS obj")),
+        "shortest_paths": lambda sp: c.shortest_paths(
+            _ring(sp).selectExpr("*", "1L AS w"), _seeds(sp)),
+        "hits_scores": lambda sp: c.hits_scores(_ring(sp)),
+        "personalized_pagerank":
+            lambda sp: c.personalized_pagerank(_ring(sp), _seeds(sp)),
+        "path_closure": lambda sp: path_closure(_ring(sp), max_hops=4),
+        "bpe_train": lambda sp: bpe_train(sp.createDataFrame(
+            [("low lower lowest",)], "text string"), 4)[1],
+    }
+
+
+@pytest.mark.parametrize("name", list(_iterative_operators()))
+def test_iterative_operator_leaves_no_cache(spark, name):
+    spark.catalog.clearCache()
+    _iterative_operators()[name](spark).count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

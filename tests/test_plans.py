@@ -964,12 +964,28 @@ def test_triple_pr_fold_never_joins(spark):
 
 def test_biased_walks_hash_joins_no_cartesian(spark):
     """q146: each step is candidate fan-out + prev-neighbor probe as
-    equi hash joins over the persisted ranked dim plus one window pass
-    per biased step — never a cartesian, and the integer pick keeps
-    Python out of the plan."""
+    equi hash joins over the ranked dim plus one window pass per
+    biased step — never a cartesian, and the integer pick keeps
+    Python out of the plan.  The operator returns a checkpoint, so
+    its first two steps are built with its own step function."""
     import __spark_entry__ as e
+    from claimskg_generator_spark.operators.code_kg import (
+        repo_dependencies,
+    )
+    from claimskg_generator_spark.operators.components import (
+        _ranked_neighbors,
+        _walk_seed,
+        _walk_step,
+    )
 
-    plan = _plan(e.q146_kg_biased_walks(spark, SF))
+    deps = repo_dependencies(e._code_files(spark, SF))
+    g = deps.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    g = g.distinct()
+    ranked = _ranked_neighbors(g)
+    walks = _walk_seed(g, 2)
+    for step in (1, 2):
+        walks = _walk_step(ranked, (1, 4, 2), "n2v", walks, step)
+    plan = _plan(walks)
     assert "CartesianProduct" not in plan
     assert not re.search(r"EvalPython|PythonUDF", plan)
     assert re.search(r"\(\d+\) Window", plan)
@@ -1094,11 +1110,11 @@ def test_wl_colors_pagerank_shuffle_profile(spark):
     """q155: each WL round is two equi hash joins (one per direction)
     + one groupBy whose state is the sorted message list — no
     cartesian, no Python, in-row sort_array (never a window sort).
-    wl_colors localCheckpoints its output (lineage truncation), so
-    the round shape is pinned by replaying ONE round inline with the
-    same expressions."""
+    wl_colors returns a checkpoint, so the round shape is pinned by
+    building ONE round with the operator's own step function."""
     import __spark_entry__ as e
     from claimskg_generator_spark.operators.code_kg import code_triples
+    from claimskg_generator_spark.operators.components import _wl_step
 
     files = e._code_files(spark, SF)
     g = (code_triples(files).where(F.col("okind") == "uri")
@@ -1106,25 +1122,7 @@ def test_wl_colors_pagerank_shuffle_profile(spark):
     nodes = (g.select(F.col("subj").alias("node"))
              .unionAll(g.select(F.col("obj").alias("node"))).distinct())
     colors = nodes.withColumn("color", F.md5(F.lit("")))
-    cd = colors.select(F.col("node").alias("__n"),
-                       F.col("color").alias("__c"))
-    msgs = (
-        g.join(cd, g["obj"] == cd["__n"])
-        .select(F.col("subj").alias("node"),
-                F.concat_ws(":", F.lit("o"), "pred", "__c").alias("msg"))
-        .unionAll(
-            g.join(cd, g["subj"] == cd["__n"])
-            .select(F.col("obj").alias("node"),
-                    F.concat_ws(":", F.lit("i"), "pred",
-                                "__c").alias("msg")))
-        .groupBy("node")
-        .agg(F.concat_ws(",", F.sort_array(F.collect_list("msg")))
-             .alias("__m")))
-    rnd = colors.join(msgs, "node", "left").select(
-        "node", F.md5(F.concat_ws("#", "color",
-                                  F.coalesce("__m", F.lit(""))))
-        .alias("color"))
-    plan = _plan(rnd)
+    plan = _plan(_wl_step(g, colors, 1))
     assert "CartesianProduct" not in plan
     assert not re.search(r"EvalPython|PythonUDF", plan)
     assert re.search(r"\(\d+\) (BroadcastHash|SortMerge)Join", plan)
@@ -1134,20 +1132,15 @@ def test_wl_colors_pagerank_shuffle_profile(spark):
 def test_shortest_paths_round_is_join_plus_combinable_min(spark):
     """q156: one relaxation round = frontier ⋈ edges equi-join + a
     map-side-combinable min groupBy + the improvement left join — no
-    cartesian, no Python, no window.  (The loop localCheckpoints, so
-    one round is built inline with the operator's own expressions.)"""
+    cartesian, no Python, no window.  (The operator returns a
+    checkpoint, so one round is built with its own step function.)"""
+    from claimskg_generator_spark.operators.components import _relax_step
+
     e = spark.createDataFrame(
-        [("a", "b", 3), ("b", "c", 1)], "src string, dst string, w long")
-    fr = spark.createDataFrame([("a", 0)], "node string, dist long")
-    cand = (fr.select(F.col("node").alias("__fn"),
-                      F.col("dist").alias("__fd"))
-            .join(e.select(F.col("src").alias("u"),
-                           F.col("dst").alias("v"), "w"),
-                  F.col("__fn") == F.col("u"))
-            .select(F.col("v").alias("node"),
-                    (F.col("__fd") + F.col("w")).alias("d"))
-            .groupBy("node").agg(F.min("d").alias("d")))
-    plan = _plan(cand)
+        [("a", "b", 3), ("b", "c", 1)], "u string, v string, w long")
+    dist = spark.createDataFrame([("a", 0, 0)],
+                                 "node string, dist long, __at int")
+    plan = _plan(_relax_step(e, dist, 1))
     assert "CartesianProduct" not in plan
     assert not re.search(r"EvalPython|PythonUDF", plan)
     assert re.search(r"partial_min", plan)
@@ -1194,17 +1187,15 @@ def test_pmi_collocations_one_explode_shared_bigram_frame(spark):
 def test_hits_power_step_combinable_sums(spark):
     """q158: each HITS half-step is one edge ⋈ scores equi-join into a
     map-side-combinable sum groupBy — the pagerank profile; no
-    cartesian, no Python, no window.  (hits_scores localCheckpoints;
-    one half-step is replayed inline.)"""
+    cartesian, no Python, no window.  (hits_scores returns a
+    checkpoint; one round is built with its own step function.)"""
+    from claimskg_generator_spark.operators.components import _hits_step
+
     e = spark.createDataFrame([("a", "b"), ("a", "c")],
                               "u string, v string")
-    h = spark.createDataFrame([("a", 1)], "node string, hub long")
-    step = (e.join(h.select(F.col("node").alias("__hn"),
-                            F.col("hub").alias("__h")),
-                   e["u"] == F.col("__hn"))
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("__h").alias("auth")))
-    plan = _plan(step)
+    auth = spark.createDataFrame([("b", 1)], "node string, auth long")
+    auth = auth.withColumn("auth", F.col("auth").cast("decimal(38,0)"))
+    plan = _plan(_hits_step(e, auth, 1))
     assert "CartesianProduct" not in plan
     assert not re.search(r"EvalPython|PythonUDF", plan)
     assert re.search(r"partial_sum", plan)
@@ -1248,21 +1239,19 @@ def test_neighbor_jaccard_in_row_pairs_no_self_join(spark):
 def test_ppr_round_join_sum_fold(spark):
     """q160: one PPR round = the pagerank join+combinable-sum plus the
     walk/teleport full-outer fold — no cartesian, no Python, no
-    window; the teleport side is the tiny seed frame."""
+    window; the teleport side is the tiny seed frame.  (The operator
+    returns a checkpoint; one round is built with its own step
+    function.)"""
+    from claimskg_generator_spark.operators.components import (
+        _ppr_step,
+        _with_out_degree,
+    )
+
     e = spark.createDataFrame([("a", "b"), ("b", "c")],
                               "s string, t string")
-    deg = e.groupBy("s").agg(F.count("*").alias("od"))
-    oe = e.join(deg, "s")
     ranks = spark.createDataFrame([("a", 1.0)], "node string, rank double")
     tele = spark.createDataFrame([("a", 0.15)], "node string, tp double")
-    contrib = (oe.join(ranks, oe["s"] == ranks["node"])
-               .select(F.col("t").alias("node"),
-                       (F.col("rank") / F.col("od")).alias("c")))
-    walk = contrib.groupBy("node").agg((0.85 * F.sum("c")).alias("w"))
-    rnd = (walk.join(tele, "node", "full")
-           .select("node", (F.coalesce("w", F.lit(0.0))
-                            + F.coalesce("tp", F.lit(0.0))).alias("rank")))
-    plan = _plan(rnd)
+    plan = _plan(_ppr_step(_with_out_degree(e), tele, 0.85, ranks, 1))
     assert "CartesianProduct" not in plan
     assert not re.search(r"EvalPython|PythonUDF", plan)
     assert re.search(r"partial_sum", plan)
