@@ -267,11 +267,24 @@ def main(argv=None) -> int:
         .getOrCreate()
     )
 
-    thesaurus_kwargs = {}
+    config_kwargs = dict(
+        model_uri=args.model_uri,
+        threshold=args.threshold,
+        recognizer=args.recognizer,
+        include_body=args.include_body,
+        align_duplicated=args.align_duplicated,
+        sameas_canonical=args.sameas_canonical,
+        reconcile_theta=args.reconcile,
+        reconcile_sample=args.sample,
+        reconcile_samples=args.samples,
+        reconcile_seed=args.seed,
+        reconcile_embeddings=args.embeddings,
+        embeddings_file=args.embeddings_file,
+    )
     if args.categories:
         from claimskg_generator_spark.sources.turtle import parse_turtle_file
 
-        thesaurus_kwargs["category_triples"] = parse_turtle_file(
+        config_kwargs["category_triples"] = parse_turtle_file(
             args.categories
         )
     if args.thesaurus:
@@ -284,7 +297,7 @@ def main(argv=None) -> int:
             entries.extend(
                 entries_from_skos_xml(path, vocab, skos_xl_labels=skos_xl)
             )
-        thesaurus_kwargs["thesaurus_entries"] = entries
+        config_kwargs["thesaurus_entries"] = entries
 
     if args.streaming:
         from claimskg_generator_spark.streaming.ingest import (
@@ -292,24 +305,9 @@ def main(argv=None) -> int:
             stream_triples,
         )
 
-        scfg = PipelineConfig(
-            model_uri=args.model_uri,
-            **thesaurus_kwargs,
-            threshold=args.threshold,
-            recognizer=args.recognizer,
-            include_body=args.include_body,
-            align_duplicated=args.align_duplicated,
-            sameas_canonical=args.sameas_canonical,
-            reconcile_theta=args.reconcile,
-            reconcile_sample=args.sample,
-            reconcile_samples=args.samples,
-            reconcile_seed=args.seed,
-            reconcile_embeddings=args.embeddings,
-            embeddings_file=args.embeddings_file,
-            # args.checkpoint_dir is the STREAM's progress log, not the
-            # batch-pipeline memo; compaction recomputes from the corpus
-            materialize_parsed=False,
-        )
+        # args.checkpoint_dir is the STREAM's progress log, not the
+        # batch-pipeline memo; compaction recomputes from the corpus
+        scfg = PipelineConfig(**config_kwargs, materialize_parsed=False)
         q = stream_triples(spark, args.input, args.output,
                            args.checkpoint_dir, scfg)
         q.awaitTermination()
@@ -321,19 +319,7 @@ def main(argv=None) -> int:
         return 0
 
     cfg = PipelineConfig(
-        model_uri=args.model_uri,
-        **thesaurus_kwargs,
-        threshold=args.threshold,
-        recognizer=args.recognizer,
-        include_body=args.include_body,
-        align_duplicated=args.align_duplicated,
-        sameas_canonical=args.sameas_canonical,
-        reconcile_theta=args.reconcile,
-        reconcile_sample=args.sample,
-        reconcile_samples=args.samples,
-        reconcile_seed=args.seed,
-        reconcile_embeddings=args.embeddings,
-        embeddings_file=args.embeddings_file,
+        **config_kwargs,
         checkpoint_dir=args.checkpoint_dir,
         # durable checkpoint identity across driver restarts: synth corpora
         # are identified by (n, seed); file inputs by path + a CONTENT

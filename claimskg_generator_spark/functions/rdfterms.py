@@ -26,8 +26,6 @@ emitted triple set matches the reference generator:
 
 import base64
 
-from claimskg_generator_spark.constants.namespaces import NS
-
 OKIND_URI = "uri"
 OKIND_PLAIN = ""
 OKIND_LANG_EN = "@en"
@@ -41,10 +39,6 @@ def uri(s, p, o):
 
 def lit(s, p, lexical, okind=OKIND_PLAIN):
     return (s, p, lexical, okind)
-
-
-def lit_en(s, p, lexical):
-    return (s, p, lexical, OKIND_LANG_EN)
 
 
 def float_lexical(value: float) -> str:
@@ -95,7 +89,3 @@ def to_ntriples_line(subj: str, pred: str, obj: str, okind: str) -> str:
     else:
         o = f'"{_escape_nt(obj)}"^^<{okind}>'
     return f"{s} {p} {o} ."
-
-
-def xsd_date(value: str):
-    return NS.XSD_DATE

@@ -29,7 +29,7 @@ fingerprint/hash groupBys whose rows are (key, small-array) aggregates.
 Reference parity anchor: the reference has no code-corpus analog (its
 corpus is fact-check claims, claimskg/generator/__init__.py); these
 operators extend the engine along the graft's north-rule input, with
-semantics pinned by the DuckDB value oracles in __spark_entry__
+semantics pinned by the DuckDB value oracles in queries/code_kg.py
 (q92-q97).
 """
 

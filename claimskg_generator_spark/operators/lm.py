@@ -24,7 +24,7 @@ Scale shape (what matters at 100 TB):
 
 No Window, no UDF, no ``collect``.  Every arithmetic step is a plain
 column expression so a DuckDB oracle re-derives the scores to the
-rounded digit (see __spark_entry__.q61 oracle).
+rounded digit (see the q61 oracle in queries/curation.py).
 """
 
 from __future__ import annotations

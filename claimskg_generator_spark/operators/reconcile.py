@@ -458,7 +458,7 @@ def _pair_keys(xc, yc, n_terms: int):
 def _soft_overlap_sums_batch(xs_list, ys_list):
     """Vectorized soft_overlap for a whole batch: per-pair sum over the
     x-outer/y-inner (x, y) term cross-product, bit-identical to the
-    scalar loop (_overlap_terms + _sum_terms).
+    scalar ``soft_overlap`` loop.
 
     Why this is exact:
 
@@ -534,49 +534,6 @@ def _soft_overlap_sums_batch(xs_list, ys_list):
                 cache[(pa[k], pb[k])] = v
         vals[neq] = sims_u[inv]
     return np.bincount(seg, weights=vals, minlength=n)
-
-
-def _overlap_terms(xs, ys, pa, pb, memo):
-    """Encode soft_overlap as a term list: float = resolved value (equal
-    pair -> 1.0, or a process-cache hit), int = index of a deduped (x, y)
-    Levenshtein job.  Preserves the x-outer/y-inner term order of the
-    scalar path."""
-    terms = []
-    cache = _SIM_CACHE
-    for x in xs:
-        for y in ys:
-            if x == y:
-                terms.append(1.0)
-            else:
-                key = (x, y)
-                v = cache.get(key)
-                if v is not None:
-                    terms.append(v)
-                    continue
-                j = memo.get(key)
-                if j is None:
-                    j = len(pa)
-                    memo[key] = j
-                    pa.append(x)
-                    pb.append(y)
-                terms.append(j)
-    return terms
-
-
-def _fill_sim_cache(memo, sims) -> None:
-    if len(_SIM_CACHE) + len(memo) > _SIM_CACHE_MAX:
-        _SIM_CACHE.clear()
-    for key, j in memo.items():
-        # plain float, not numpy.float64: _sum_terms discriminates resolved
-        # terms by `type(t) is float` (value is identical either way)
-        _SIM_CACHE[key] = float(sims[j])
-
-
-def _sum_terms(terms, sims) -> float:
-    total = 0.0
-    for t in terms:
-        total += t if type(t) is float else sims[t]
-    return total
 
 
 @F.pandas_udf(_PAIR_SCORE_TYPE)

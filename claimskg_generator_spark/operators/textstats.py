@@ -1,8 +1,7 @@
 """Text-analysis operators for large-scale corpus work (training-data
-pipeline ops): token counting, quality scoring, language-ID heuristic,
-document fingerprinting.  All pure column expressions (codegen, no Python),
-designed so an equivalent ANSI-SQL oracle exists for the driver's DuckDB
-check."""
+pipeline ops): token counting, quality scoring, language-ID heuristic.
+All pure column expressions (codegen, no Python), designed so an
+equivalent ANSI-SQL oracle exists for the driver's DuckDB check."""
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -192,17 +191,6 @@ def with_repetition_metrics(
         ]
         return d.select(*keep)
     return d.select("doc_id", "n_tokens", "dup_token_frac", top_bigram_frac)
-
-
-def with_fingerprint(documents: DataFrame) -> DataFrame:
-    """Document fingerprint: md5 over whitespace-normalized lowercase text
-    (exact-dup key); plus a 64-bit rolling-style prefix hash."""
-    norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    return documents.select(
-        "doc_id",
-        F.md5(norm).alias("fingerprint"),
-        F.xxhash64(norm).alias("fingerprint64"),
-    )
 
 
 def distribution_stats(

@@ -17,9 +17,8 @@ Everything else is map-side (broadcast dims, within-row array ops).
 import dataclasses
 import hashlib
 import json
-import time
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,7 +109,6 @@ class ClaimsKGPipeline:
             self.config.thesaurus_entries, self.config.recognizer
         )
         self.checkpoints = CheckpointManager(spark, self.config.checkpoint_dir)
-        self.stage_timings: List[Dict] = []
         self._input_token: Optional[str] = None
 
     def _config_blob(self) -> str:
@@ -456,18 +454,12 @@ class ClaimsKGPipeline:
          .orderBy("k", "value").select("value")
          .write.mode("overwrite").text(path))
 
-    def lineage(self, input_df: DataFrame,
-                with_triple_counts: bool = True) -> DataFrame:
+    def lineage(self, input_df: DataFrame) -> DataFrame:
         """Per-partition lineage rows (north_rule): input split id, row
         count, combined content sha256, min/max order key, and the number
         of row-local triples emitted from the split (pre-dedup; the
         global-view families — keywords, alignment, reconciliation, static
         — are not attributable to a single split by construction)."""
-        base_cols = [
-            F.spark_partition_id().alias("input_split"),
-            F.sha2(F.col("content"), 256).alias("h"),
-            F.col(self.config.order_col).alias("o"),
-        ]
         aggs = [
             F.count("*").alias("n_rows"),
             F.sha2(F.concat_ws("", F.sort_array(F.collect_list("h"))), 256)
@@ -475,8 +467,6 @@ class ClaimsKGPipeline:
             F.min("o").alias("min_ord"),
             F.max("o").alias("max_ord"),
         ]
-        if not with_triple_counts:
-            return input_df.select(*base_cols).groupBy("input_split").agg(*aggs)
 
         from claimskg_generator_spark.operators.row_triples import (
             row_triple_array,
@@ -503,9 +493,7 @@ class ClaimsKGPipeline:
         )
 
     def run(self, input_df: DataFrame) -> DataFrame:
-        t0 = time.time()
         out = self.triples(input_df)
-        self.stage_timings.append({"stage": "triples", "wall_s": time.time() - t0})
         self.checkpoints.write_manifest()
         return out
 

@@ -5,8 +5,8 @@ repositories with columns ``(repo, path, commit, lang, content)``.  The
 sandbox's synthetic ``documents`` parquet is prose, so this module lifts
 it into that exact shape with a derivation that is a pure function of
 ``(doc_id, text)`` — expressible identically as Spark column expressions
-here and as a DuckDB CTE in the driver oracle (``__spark_entry__.
-_CODE_FILES_CTE``), which is what lets every code-curation query carry a
+here and as a DuckDB CTE in the driver oracle (``queries/common.py``
+``_CODE_FILES_CTE``), which is what lets every code-curation query carry a
 full value oracle.
 
 Shape of one synthesized file (all branches keyed off ``doc_id`` so the

@@ -38,7 +38,7 @@ def _files(spark, rows):
 def test_code_files_parity_with_duckdb_twin(spark):
     """Every derived column — content included, via md5 — is byte-equal
     between the Spark lift and the oracle CTE."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import common as e
 
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM "

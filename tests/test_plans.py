@@ -23,14 +23,14 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import claims as e
 
     plan = _plan(e.q01_pricing_summary(spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate" in plan
 
 
 def test_column_pruning_on_scan(spark):
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import claims as e
 
     plan = _plan(e.q01_pricing_summary(spark, SF))
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
@@ -78,7 +78,7 @@ def test_family_prunes_parsed_columns(spark):
 
 
 def test_cosine_topk_broadcasts_queries(spark):
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import dedup as e
 
     assert "BroadcastNestedLoopJoin" in _plan(e.q11_cosine_topk(spark, SF))
 
@@ -199,7 +199,7 @@ def test_decontamination_train_side_never_shuffles(spark):
     """q58's 100 TB posture: the train span stream must reach its
     LeftSemi probe with ZERO exchanges (broadcast semi against the
     benchmark-sized eval key set), and no sort-merge join anywhere."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q58_decontaminate(spark, SF))
     assert "SortMergeJoin" not in plan
@@ -220,7 +220,7 @@ def test_budget_cap_two_phase_window_shape(spark):
     """q59: the big-side window must be partitioned by (group, bucket) —
     never by group alone (single-partition hot-domain trap) and never a
     global orderBy window."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q59_token_budget_mix(spark, SF))
     wins = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
@@ -250,7 +250,7 @@ def test_dsir_models_broadcast_and_corpus_single_tokenize(spark):
     sort-merge join of the scored corpus against anything), and with the
     feature frame persisted the text is tokenized once — the plan shows
     InMemoryTableScans feeding the model regroups and scoring branch."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q64_dsir_select(spark, SF))
     # the only SMJ allowed is the <= 16^h-row ct/cr FULL OUTER model
@@ -268,7 +268,7 @@ def test_semantic_dedup_assignment_is_broadcast_map(spark):
     ONE-ROW centroid array (a pure map in effect) — no N x C row
     explosion join; the only hash joins are the cluster-id self-join
     and the left attach of max_cos_prev."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import dedup as e
 
     plan = _plan(e.q63_semantic_dedup(spark, SF))
     assert "CartesianProduct" not in plan
@@ -278,7 +278,7 @@ def test_semantic_dedup_assignment_is_broadcast_map(spark):
 def test_triangle_count_no_cartesian_and_wedge_joins_hashed(spark):
     """q65: wedge generation and closure must be equi (hash) joins —
     never a cartesian / nested-loop over the edge set."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import graph as e
 
     plan = _plan(e.q65_triangle_count(spark, SF))
     assert "CartesianProduct" not in plan
@@ -289,7 +289,7 @@ def test_weighted_sample_take_ordered_no_global_sort(spark):
     """q66: the global draw must plan as TakeOrderedAndProject (per-
     partition top-k heaps) — never a rangepartitioning sort of the
     corpus."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q66_weighted_sample(spark, SF))
     assert "TakeOrderedAndProject" in plan
@@ -300,7 +300,7 @@ def test_zorder_key_is_pure_map_after_bounds(spark):
     """q67: after the one-row bounds aggregate broadcasts, the key
     computation is a within-row projection — no shuffle of the events
     scan, no hash join."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q67_zorder_key(spark, SF))
     assert "BroadcastNestedLoopJoin" in plan  # one-row bounds attach
@@ -314,7 +314,7 @@ def test_zorder_key_is_pure_map_after_bounds(spark):
 def test_scd2_join_single_shuffle_union_window(spark):
     """q68: the as-of composition must shuffle ONCE on (key, ts) for the
     union frame — no second exchange of fact rows, no SMJ."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q68_scd2_join(spark, SF))
     assert "SortMergeJoin" not in plan
@@ -327,7 +327,7 @@ def test_setjoin_verify_only_on_candidates(spark):
     """q71: verification arrays must attach to the candidate frame (the
     join inputs carry the token arrays only on the two candidate
     attaches, never through the prefix-token self-join)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import dedup as e
 
     plan = _plan(e.q71_set_similarity_join(spark, SF))
     assert "CartesianProduct" not in plan
@@ -342,7 +342,7 @@ def test_minhash_cross_reference_side_broadcasts(spark):
     """q73: with broadcast_left=True the banded bucket join must be a
     BroadcastHashJoin (train side streams; zero bucket-join shuffles of
     the train corpus)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import dedup as e
 
     plan = _plan(e.q73_minhash_cross(spark, SF))
     assert re.search(r"BroadcastHashJoin", plan)
@@ -353,7 +353,7 @@ def test_hll_two_combinable_aggregates_no_join(spark):
     """q81: the whole sketch is two map-side-combinable groupBys
     (value->register, register->estimate) — no join anywhere, and the
     register fold carries partial_max (combiner) before its exchange."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     # the est path itself is join-free; only include_exact (the q81
     # benchmark-honesty column) adds the count-distinct attach join
@@ -373,7 +373,7 @@ def test_cdc_fold_is_combinable_no_window(spark):
     """q80: the latest-wins fold is max_by with a partial (map-side)
     phase — never a row_number window that would sort whole hot keys
     in one task."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q80_cdc_apply(spark, SF))
     assert "partial_max_by" in plan
@@ -384,7 +384,7 @@ def test_rollup_increments_stay_partial_until_merge(spark):
     """q82: each increment is one combinable groupBy; the merge is one
     more groupBy over rollup-sized rows — three exchanges total, no
     join, no window."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q82_rollup_maintenance(spark, SF))
     assert "Join" not in plan and "Window" not in plan
@@ -402,7 +402,7 @@ def test_assign_shards_unordered_is_pure_map(spark):
     flat = _plan(assign_shards(docs, "doc_id", 16, ordered=False))
     assert "Exchange" not in flat and "Window" not in flat
 
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
     plan = _plan(e.q84_shard_assign(spark, SF))
     assert "Join" not in plan
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
@@ -414,7 +414,7 @@ def test_grouped_quantiles_value_count_plan(spark):
     partial_count before the exchange), every q answered in the same
     pass — two exchanges (value-count groupBy + per-group window),
     no join, one scan."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q85_grouped_quantiles(spark, SF))
     assert "partial_count" in plan
@@ -427,7 +427,7 @@ def test_robust_outliers_no_cartesian_group_joins(spark):
     """q86: the med/mad frames are one-row-per-group equi-joins —
     no CartesianProduct anywhere, and the scan stays pruned to the
     three consumed columns."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q86_robust_outliers(spark, SF))
     assert "CartesianProduct" not in plan
@@ -438,7 +438,7 @@ def test_host_cap_no_python_udf_single_window(spark):
     """q87: canonical_host is regexp/case-fold row expressions inside
     codegen — no Python/Arrow eval node — and the cap is ONE window
     rank (one exchange)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q87_host_cap(spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -453,7 +453,7 @@ def test_boilerplate_no_window_totals_broadcast(spark):
     """q88: reassembly is an in-row array_sort under groupBy — no
     per-group Window sort — and the one-row-per-group totals frame
     joins by broadcast."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q88_boilerplate_lines(spark, SF))
     assert "Window" not in plan
@@ -464,7 +464,7 @@ def test_boilerplate_no_window_totals_broadcast(spark):
 def test_constraint_report_single_pass_no_join(spark):
     """q89: every metric compiles into ONE aggregation over one scan —
     no join, no window; the long report is a plan-time unpivot."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q89_constraint_report(spark, SF))
     assert "Join" not in plan and "Window" not in plan
@@ -475,7 +475,7 @@ def test_fuse_records_combinable_no_window(spark):
     """q90: the simple survivorship rules fold in ONE combinable
     groupBy (partial max over rank structs) and mode adds count
     aggregates plus key equi-joins — no Window, no Cartesian."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q90_record_fusion(spark, SF))
     assert "Window" not in plan
@@ -487,7 +487,7 @@ def test_histogram_sketch_combinable_no_join(spark):
     """q91: registers fold map-side (partial_count) and stay bounded at
     groups x n_bins rows; merge is one more combinable groupBy and the
     estimate one per-group window — no join anywhere in the sketch."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q91_histogram_quantiles(spark, SF))
     assert "Join" not in plan
@@ -500,7 +500,7 @@ def test_code_triples_single_exchange_no_join(spark):
     (scan -> project -> Generate) feeding the set-dedup; the distinct's
     hash exchange is the ONLY shuffle, there are no joins anywhere, and
     the map side runs a partial distinct before it."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     # tests share one session: an earlier test's persisted frame (e.g.
     # triple_diff's cached deduped sides, which embed a code_triples
@@ -519,7 +519,7 @@ def test_module_canonicalize_three_phase_shuffle(spark):
     """q99: the salted A5 shape — exactly three exchanges (salt phase 1,
     (surface, entity) merge, final surface phase), no joins; rows are
     vocabulary-bounded after phase 1."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q99_module_canonicalize(spark, SF))
     assert "Join" not in plan
@@ -531,7 +531,7 @@ def test_module_links_vocab_bounded_window(spark):
     """q100: two-phase distinct aggregate + ONE lang-partitioned window
     over module-level rows — three exchanges total, no sort-merge join,
     no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q100_module_links(spark, SF))
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
@@ -546,7 +546,7 @@ def test_sparql_select_compiles_to_bgp_plan(spark):
     literals planned as plain Filters feeding each sliver, the
     disjunctive FILTER one Filter node, and zero Python anywhere (the
     parser runs driver-side only)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q107_kg_sparql_select(spark, SF))
     assert "CartesianProduct" not in plan
@@ -563,7 +563,7 @@ def test_sparql_agg_single_final_aggregate(spark):
     """q108: GROUP BY compiles to ONE logical aggregate after the
     binding joins (partial + final + the distinct-lang expand pass —
     never one aggregate per SPARQL aggregate item)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q108_kg_sparql_agg(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -575,7 +575,7 @@ def test_sparql_construct_one_union_set_dedup(spark):
     """q109: both template triples project the SAME binding subtree —
     one Union feeding one distinct (its exchange), no Python, no
     cartesian."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q109_kg_sparql_construct(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -588,7 +588,7 @@ def test_sparql_minus_is_anti_join_ask_is_limit1(spark):
     unioned frame), never a subtract-via-join-and-filter; ASK's plan is
     the binding chain capped by a limit-1 early-out feeding one
     aggregate, no Python, no cartesian."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q113_kg_sparql_minus_alt(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -603,7 +603,7 @@ def test_rdfs_entail_broadcast_rules_only(spark):
     schema-sized literal relation — the DATA side never sort-merge
     joins or self-joins, and the only wide exchanges are the final
     set-dedup's."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q116_kg_rdfs_entailment(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -616,7 +616,7 @@ def test_shacl_report_anti_joins_no_smj(spark):
     pred-filtered slivers, minCount-zero and sh:class are left-anti
     joins, and with a broadcast-sized focus set nothing sort-merge
     joins."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q117_kg_shacl_report(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -711,7 +711,7 @@ def test_sparql_graph_patterns_filtered_slivers(spark, tmp_path):
     pred-sliver predicates — even better than a graph filter; the
     pushdown pin below runs on a PARQUET quads table, where all three
     graph-term forms must reach the scan as PushedFilters.)"""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
     from claimskg_generator_spark.operators.sparql import sparql_select
 
     plan = _plan(e.q130_kg_sparql_graph(spark, SF))
@@ -743,7 +743,7 @@ def test_bgp_charsets_order_changes_only_join_seed(spark):
     plan stays the same SHAPE — 4 patterns -> 3 equi-joins over
     filtered slivers, no cartesian, no Python (the estimator runs
     driver-side on a KB-sized dict)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q131_kg_bgp_star_order(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -757,7 +757,7 @@ def test_charset_incremental_joinless_pair_regroup(spark):
     the way down — state build, delta fold, and summary derive carry
     (subj, pred, n) PAIRS through groupBys; no join anywhere in the
     refresh path."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q132_kg_charsets_incremental(spark, SF))
     assert "Join" not in plan
@@ -771,7 +771,7 @@ def test_sparql_from_dataset_filters_before_joins(spark):
     constructed dataset stay 2 equi-joins, no cartesian, no Python,
     and the FROM merge is visible as exactly one dedup aggregate over
     (subj, pred, obj)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q133_kg_sparql_from_dataset(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -788,7 +788,7 @@ def test_sparql_subquery_aggregate_below_join(spark):
     aggregate and GlobalLimit sit BELOW the outer join (top-k first,
     annotate after), no cartesian, no Python; the limit keeps the
     outer join's left side 10 rows."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q134_kg_sparql_subquery(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -809,7 +809,7 @@ def test_sparql_exists_semi_and_anti_joins(spark):
     NOT EXISTS to ONE left-anti join, each probing a predicate sliver
     — no cartesian, no Python, and the group frames never widen the
     output (the semi/anti join is the last thing that touches them)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q135_kg_sparql_exists(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -823,7 +823,7 @@ def test_sparql_update_broadcast_anti_joins_no_g_shuffle(spark):
     subtrees), so the plan carries THREE anti-joins, and every one
     must be a BROADCAST anti (D and I are bindings-derived slivers) —
     G itself is never repartitioned; no cartesian, no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q136_kg_sparql_update(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -837,7 +837,7 @@ def test_sparql_star_path_zero_rows_union(spark):
     """q137: p* = the p+ closure frame UNIONed with the zero-length
     term-domain rows, set-deduped — one Union feeding a distinct
     aggregate; no cartesian, no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q137_kg_sparql_star_path(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -852,7 +852,7 @@ def test_update_request_plan(spark):
     is visible as repeated scans; apply_request(persist=True) / the
     table face collapse it — here we pin only sanity, not join
     strategy (AQE resizes bindings-derived sides at runtime)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     plan = _plan(e.q139_kg_update_request(spark, SF))
     # INSERT DATA's literal relation renders as an RDD whose
@@ -872,7 +872,7 @@ def test_graph_management_plan(spark):
     (broadcast) — everything else is filters and relabel projections:
     at 10^12 quads a management request rewrites only the touched
     graphs, never shuffling the store."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     spark.catalog.clearCache()
 
@@ -890,7 +890,7 @@ def test_graph_scoped_update_plan(spark):
     clearCache first: a cached subtree left by another test can
     substitute into this plan (Spark's CacheManager matches plan
     fragments) and flip a broadcast decision via its statistics."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     spark.catalog.clearCache()
     plan = _plan(e.q141_kg_graph_scoped_update(spark, SF))
@@ -904,7 +904,7 @@ def test_negated_pset_plan(spark):
     """q142: the negated property set is ONE filtered scan (pred
     NOT IN pushed into the scan filter) joined on the shared variable
     — never a widening construct; bag semantics add no distinct."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     spark.catalog.clearCache()
 
@@ -920,7 +920,7 @@ def test_sparql_load_plan(spark):
     """q143: LOAD is the driver-parsed literal relation anti-joined
     (dedup) against the store and unioned in — ONE join, and the
     store side is never repartitioned."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import sparql as e
 
     spark.catalog.clearCache()
 
@@ -936,7 +936,7 @@ def test_prov_lineage_single_exchange_no_join(spark):
     """q144: one groupBy(repo) fold then an in-row 8-fact explode —
     zero joins, exactly one shuffle, no Python in the plan (sha2 /
     sort_array / explode are all JVM expressions)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q144_kg_prov_lineage(spark, SF))
     assert not re.search(r"\(\d+\) \w+Join", plan)
@@ -951,7 +951,7 @@ def test_triple_pr_fold_never_joins(spark):
     exchange twice).  Exactly two exchanges: the triple-key flag-max
     (map-side combinable — partial_max in the partial aggregate) and
     the one-row global fold."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import code_kg as e
 
     plan = _plan(e.q145_kg_triple_pr(spark, SF))
     assert not re.search(r"\(\d+\) \w+Join", plan)
@@ -968,7 +968,7 @@ def test_biased_walks_hash_joins_no_cartesian(spark):
     biased step — never a cartesian, and the integer pick keeps
     Python out of the plan.  The operator returns a checkpoint, so
     its first two steps are built with its own step function."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import common as e
     from claimskg_generator_spark.operators.code_kg import (
         repo_dependencies,
     )
@@ -995,7 +995,7 @@ def test_skipgram_vocab_join_hashed_no_python(spark):
     """q147: pair generation is an in-row Generate; the negative pick
     reaches the vocabulary through an equi hash join (never a
     cartesian over the vocab), and the whole path stays JVM-side."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q147_skipgram_negatives(spark, SF))
     assert "CartesianProduct" not in plan
@@ -1008,7 +1008,7 @@ def test_bpe_stats_two_combinable_aggregates_no_join(spark):
     """q149: word-freq groupBy + pair groupBy — two exchanges, both
     map-side combinable (partial_count / partial_sum), pairs generated
     in-row (Generate), no joins, no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q149_bpe_pair_stats(spark, SF))
     assert not re.search(r"\(\d+\) \w+Join", plan)
@@ -1022,7 +1022,7 @@ def test_ngram_overlap_single_fold_no_join_no_explode(spark):
     """q150: clipped counts are in-row HOFs — no explode, no join;
     the only exchange is the one-row global fold (map-side partials
     first)."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q150_ngram_overlap_bleu(spark, SF))
     assert not re.search(r"\(\d+\) \w+Join", plan)
@@ -1037,7 +1037,7 @@ def test_gap_fill_spine_in_row_single_left_join(spark):
     after an aggregate — O(keys) shuffle rows, never a bucket-range
     relation), then ONE left join back and one per-key window; no
     cartesian, no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q151_gap_fill_locf(spark, SF))
     assert "CartesianProduct" not in plan
@@ -1053,7 +1053,7 @@ def test_kn_table_slim_regroups_one_broadcast(spark):
     frame; the grand total attaches as a one-row broadcast (a
     BroadcastNestedLoopJoin over a single row, never a cartesian of
     data relations); no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q152_kn_bigram_table(spark, SF))
     assert "CartesianProduct" not in plan
@@ -1069,7 +1069,7 @@ def test_group_path_step_union_of_slivers(spark):
     from claimskg_generator_spark.operators.sparql import (
         _path_step_edges,
     )
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import common as e
 
     files = e._code_files(spark, SF)
     from claimskg_generator_spark.operators.code_kg import (
@@ -1095,7 +1095,7 @@ def test_kg_train_pairs_equi_join_filtered_anti(spark):
     equi hash join on the dense index, the filtered protocol ONE
     left-anti join — no cartesian beyond the broadcast one-row E
     total, no Python."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import graph as e
 
     plan = _plan(e.q154_kg_train_pairs(spark, SF))
     assert not re.search(r"EvalPython|PythonUDF", plan)
@@ -1112,7 +1112,7 @@ def test_wl_colors_pagerank_shuffle_profile(spark):
     cartesian, no Python, in-row sort_array (never a window sort).
     wl_colors returns a checkpoint, so the round shape is pinned by
     building ONE round with the operator's own step function."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import common as e
     from claimskg_generator_spark.operators.code_kg import code_triples
     from claimskg_generator_spark.operators.components import _wl_step
 
@@ -1158,7 +1158,7 @@ def test_pmi_collocations_one_explode_shared_bigram_frame(spark):
         doc_bigrams,
         pmi_collocations,
     )
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import curation as e
 
     plan = _plan(e.q157_pmi_collocations(spark, SF))
     assert not re.search(r"EvalPython|PythonUDF", plan)
@@ -1208,7 +1208,7 @@ def test_neighbor_jaccard_in_row_pairs_no_self_join(spark):
     node-level self-join before the cap), counted by one combinable
     groupBy; the degree attach is equi-joins and the adjacency
     exclusion a left-anti — no Python, no window."""
-    import __spark_entry__ as e
+    from claimskg_generator_spark.queries import graph as e
 
     plan = _plan(e.q159_kg_link_prediction(spark, SF))
     assert not re.search(r"EvalPython|PythonUDF", plan)

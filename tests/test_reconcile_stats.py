@@ -175,9 +175,7 @@ def test_batched_levenshtein_matches_scalar():
 
 def test_batched_overlap_terms_match_soft_overlap():
     from claimskg_generator_spark.operators.reconcile import (
-        _lev_batch,
-        _overlap_terms,
-        _sum_terms,
+        _soft_overlap_sums_batch,
         soft_overlap,
     )
 
@@ -187,11 +185,10 @@ def test_batched_overlap_terms_match_soft_overlap():
         (["same", "same"], ["same"]),
         (["kw one", "kw two"], ["kw two", "kw threee"]),
     ]
-    pa, pb, memo = [], [], {}
-    term_lists = [_overlap_terms(xs, ys, pa, pb, memo) for xs, ys in cases]
-    sims = _lev_batch(pa, pb) if pa else ()
-    for (xs, ys), terms in zip(cases, term_lists):
-        assert _sum_terms(terms, sims) == soft_overlap(xs, ys)
+    sums = _soft_overlap_sums_batch([xs for xs, _ in cases],
+                                    [ys for _, ys in cases])
+    for (xs, ys), got in zip(cases, sums):
+        assert got == soft_overlap(xs, ys)
 
 
 def test_myers_kernel_matches_dp_and_scalar():
@@ -226,25 +223,23 @@ def test_myers_kernel_matches_dp_and_scalar():
         assert myers[i] == want and dp[i] == want, (repr(a), repr(b))
 
 
-def test_sim_cache_resolves_terms_identically():
-    """Process-level similarity cache: a second _overlap_terms pass over
-    the same vocabulary must resolve every unequal pair from the cache
-    (no new jobs) with identical summed overlap."""
+def test_sim_cache_resolves_terms_identically(monkeypatch):
+    """Process-level similarity cache: a second _soft_overlap_sums_batch
+    call over the same vocabulary must resolve every unequal pair from the
+    cache (no new Levenshtein jobs) with identical summed overlap."""
     from claimskg_generator_spark.operators import reconcile as R
 
     xs = ["alpha one", "beta two"]
     ys = ["beta two", "gamma threee"]
     R._SIM_CACHE.clear()
-    pa, pb, memo = [], [], {}
-    t1 = R._overlap_terms(xs, ys, pa, pb, memo)
-    sims = R._lev_batch(pa, pb)
-    R._fill_sim_cache(memo, sims)
-    first = R._sum_terms(t1, sims)
+    first = R._soft_overlap_sums_batch([xs], [ys])
 
-    pa2, pb2, memo2 = [], [], {}
-    t2 = R._overlap_terms(xs, ys, pa2, pb2, memo2)
-    assert not pa2, "cache miss: jobs were re-enqueued"
-    assert R._sum_terms(t2, ()) == first == R.soft_overlap(xs, ys)
+    def no_jobs(pa, pb):
+        raise AssertionError("cache miss: jobs were re-enqueued")
+
+    monkeypatch.setattr(R, "_lev_batch", no_jobs)
+    second = R._soft_overlap_sums_batch([xs], [ys])
+    assert list(second) == list(first) == [R.soft_overlap(xs, ys)]
     R._SIM_CACHE.clear()
 
 
