@@ -24,6 +24,7 @@ import sys
 from pyspark.sql import SparkSession
 
 from claimskg_generator_spark.constants.namespaces import DEFAULT_MODEL_URI
+from claimskg_generator_spark.operators.cache import release
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
 
 
@@ -213,6 +214,13 @@ def _run_update(args, update_text: str) -> int:
 
 
 def main(argv=None) -> int:
+    try:
+        return _main(argv)
+    finally:
+        release()
+
+
+def _main(argv) -> int:
     parser = build_arg_parser()
     args = parser.parse_args(argv)
     update_text = args.update

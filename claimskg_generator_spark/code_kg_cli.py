@@ -59,6 +59,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import release
+
 
 def build_arg_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
@@ -291,6 +293,7 @@ def main(argv=None) -> int:
         print(json.dumps(summary))
         return 0
     finally:
+        release()
         if created:
             spark.stop()
 

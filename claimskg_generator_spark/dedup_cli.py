@@ -38,6 +38,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import release, share
+
 
 def build_arg_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
@@ -162,6 +164,13 @@ def _pairs(args, docs):
 
 
 def main(argv=None) -> int:
+    try:
+        return _main(argv)
+    finally:
+        release()
+
+
+def _main(argv) -> int:
     parser = build_arg_parser()
     args = parser.parse_args(argv)
     if args.method == "embedding" and args.dim is None:
@@ -211,9 +220,7 @@ def main(argv=None) -> int:
     # pairs feed up to three consumers (pairs/groups/survivors): keep the
     # accepted pair stream materialized once instead of re-running the
     # candidate machinery per sink
-    from pyspark import StorageLevel
-
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = share(pairs)
     if args.pairs_output:
         pairs.write.mode("overwrite").parquet(args.pairs_output)
     if args.groups_output:
@@ -259,7 +266,6 @@ def main(argv=None) -> int:
         survivors = survivors.withColumnRenamed("doc_id", args.id_col)
     survivors.write.mode("overwrite").parquet(args.output)
     n_pairs = pairs.count()
-    pairs.unpersist()
     print(f"method={args.method} pairs={n_pairs} survivors at "
           f"{args.output}")
     return 0

@@ -54,6 +54,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.code import (
     IMPORT_PATTERNS,
     extract_imports,
@@ -355,18 +356,16 @@ def triple_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     "what changed between graph versions" primitive, and the building
     block for incremental downstream refresh (only added/removed
     triples re-enter a consumer)."""
-    from pyspark import StorageLevel
-
     cols = ["subj", "pred", "obj", "okind"]
     # Each side feeds BOTH directions (left of one anti-join, right of the
     # other).  Without a cache the full upstream chain (for code_triples: an
     # explode + set-dedup over the corpus) runs twice per side — measured 4
-    # subtree evaluations for q102.  Persist the DEDUPED frames once
-    # (MEMORY_AND_DISK, the repo-wide multi-consumer pattern) and anti-join
-    # against the deduped right side — equivalent by set semantics, and it
-    # drops the second full-width dedup exchange per direction.
-    od = old.select(*cols).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    nd = new.select(*cols).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    # subtree evaluations for q102.  Share the DEDUPED frames once and
+    # anti-join against the deduped right side — equivalent by set
+    # semantics, and it drops the second full-width dedup exchange per
+    # direction.
+    od = share(old.select(*cols).distinct())
+    nd = share(new.select(*cols).distinct())
     added = (nd.join(od, cols, "left_anti")
              .withColumn("change", F.lit("added")))
     removed = (od.join(nd, cols, "left_anti")

@@ -46,8 +46,8 @@ from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.iterate import Iteration, last_round
 
 
@@ -468,11 +468,11 @@ def triangle_count(edges: DataFrame, src: str = "src",
     a_lower = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    fwd = e.select(
+    fwd = share(e.select(
         F.when(a_lower, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_lower, F.col("b")).otherwise(F.col("a")).alias("w"),
         F.when(a_lower, F.col("db")).otherwise(F.col("da")).alias("dw"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     f1 = fwd.select("u", F.col("w").alias("w1"), F.col("dw").alias("dw1"))
     f2 = fwd.select("u", F.col("w").alias("w2"), F.col("dw").alias("dw2"))
     # wedge (w1, w2) kept in orientation order so the closing edge, if
@@ -1101,17 +1101,15 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src",
     if max_degree is not None and max_degree < 2:
         raise ValueError(f"max_degree must be >= 2, got {max_degree}")
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = (e.unionAll(e.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
-           .where(F.col("u") != F.col("v"))
-           .distinct()
-           .persist(StorageLevel.MEMORY_AND_DISK))
+    sym = share(e.unionAll(e.select(F.col("v").alias("u"),
+                                    F.col("u").alias("v")))
+                .where(F.col("u") != F.col("v"))
+                .distinct())
     # ONE aggregation serves both consumers: sym is distinct, so the
     # collected neighbor set's size IS the true degree — a separate
     # count groupBy would be a second graph-wide exchange for nothing
-    lists_all = (sym.groupBy("u")
-                 .agg(F.sort_array(F.collect_set("v")).alias("ns"))
-                 .persist(StorageLevel.MEMORY_AND_DISK))
+    lists_all = share(sym.groupBy("u")
+                      .agg(F.sort_array(F.collect_set("v")).alias("ns")))
     deg = lists_all.select("u", F.size("ns").cast("long").alias("deg"))
     lists = lists_all
     if max_degree is not None:
@@ -1135,14 +1133,11 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src",
         out = out.join(sym.select(F.col("u").alias("a"),
                                   F.col("v").alias("b")),
                        ["a", "b"], "left_anti")
-    res = out.select(
+    return out.select(
         "a", "b", "common", "deg_a", "deg_b",
         F.col("common").alias("jn"),
         (F.col("deg_a") + F.col("deg_b") - F.col("common")).alias("jd"),
     ).localCheckpoint(eager=True)
-    sym.unpersist()
-    lists_all.unpersist()
-    return res
 
 
 def _ppr_step(out_edges: DataFrame, tele: DataFrame, damping: float,

@@ -21,6 +21,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
+
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
     """Groups of byte-identical (whitespace-normalized, lowercased) docs:
@@ -283,10 +285,8 @@ def _verify_candidate_jaccard(documents: DataFrame, candidates: DataFrame,
     (streaming's per-trigger verify) skips the persists — a persist per
     trigger would accumulate caches across the query's lifetime — but
     keeps the semi-join reduction."""
-    from pyspark import StorageLevel
-
     if persist_sets:
-        candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
+        candidates = share(candidates)
     members = (
         candidates.select(F.col("id_a").alias("doc_id"))
         .unionByName(candidates.select(F.col("id_b").alias("doc_id")))
@@ -299,7 +299,7 @@ def _verify_candidate_jaccard(documents: DataFrame, candidates: DataFrame,
         .join(members, "doc_id", "left_semi")
     )
     if persist_sets:
-        shingle_sets = shingle_sets.persist(StorageLevel.MEMORY_AND_DISK)
+        shingle_sets = share(shingle_sets)
     return (
         candidates
         .join(shingle_sets.select(F.col("doc_id").alias("id_a"),
@@ -381,17 +381,12 @@ def _minhash_banded_pairs(documents: DataFrame, shingle_hash_mod_p, n: int,
     """Shared MinHash+LSH back half: bucket membership (minhash_band_keys)
     -> bucket equi-self-join -> exact n-gram-Jaccard verify on candidates
     only."""
-    from pyspark import StorageLevel
-
-    banded = (
-        minhash_band_keys(documents, shingle_hash_mod_p, n, num_hashes,
-                          bands, seed, compact_keys)
-        # both sides of the bucket self-join consume this frame; the
-        # signature chain (num_hashes interpreted array passes over the
-        # shingle hashes) is the front half's dominant cost, so compute it
-        # once — the cached rows are slim (doc_id, band, key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # both sides of the bucket self-join consume this frame; the
+    # signature chain (num_hashes interpreted array passes over the
+    # shingle hashes) is the front half's dominant cost, so compute it
+    # once — the cached rows are slim (doc_id, band, key)
+    banded = share(minhash_band_keys(documents, shingle_hash_mod_p, n,
+                                     num_hashes, bands, seed, compact_keys))
     a, b = banded.alias("a"), banded.alias("b")
     candidates = (
         a.join(
@@ -612,13 +607,10 @@ def simhash_near_dups(documents: DataFrame, max_hamming: int = 3,
     # pair that the exact hamming verification below then filters — and
     # equal blocks still always collide, so pigeonhole recall is intact).
     # The signature rides along (8 bytes) so no re-attach join is needed.
-    from pyspark import StorageLevel
-
     # both self-join sides consume the banded frame; without a cache the
     # 64-way vote aggregate (one shuffle + wide aggregation) runs once per
     # side — the cached rows are slim (doc_id, simhash, t, k)
-    banded = (simhash_table_keys(sigs, max_hamming, n_blocks)
-              .persist(StorageLevel.MEMORY_AND_DISK))
+    banded = share(simhash_table_keys(sigs, max_hamming, n_blocks))
     a = banded.select(F.col("doc_id").alias("id_a"),
                       F.col("simhash").alias("s_a"), "t", "k")
     b = banded.select(F.col("doc_id").alias("id_b"),

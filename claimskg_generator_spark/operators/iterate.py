@@ -19,7 +19,8 @@ from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from claimskg_generator_spark.operators.cache import share
 
 # rounds between lineage truncations of a state the next round reads once
 TRUNCATE_EVERY = 4
@@ -55,7 +56,7 @@ class Iteration:
         del self._kept[start:]
 
     def keep(self, df: DataFrame) -> DataFrame:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        df = share(df)
         self._kept.append(df)
         return df
 

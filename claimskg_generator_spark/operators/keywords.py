@@ -31,6 +31,7 @@ from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
 from claimskg_generator_spark.functions.textmatch import PhraseMatcher
 from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.mentions import explode_raw_mentions
 from claimskg_generator_spark.operators.triples import (
     OKIND_LANG_EN,
@@ -87,7 +88,7 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
     # consumed by the edge projection, the winner aggregate and the winner
     # join — cache so the tag explode + containment filter runs once
     if ex is None:
-        ex = exploded_keywords(claims, model_uri).cache()
+        ex = share(exploded_keywords(claims, model_uri))
 
     # (cw, schema:keywords, kw) for every occurrence (:410)
     edges = ex.select(
@@ -100,11 +101,10 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
     # distinct keywords: node triples + broadcast thesaurus matching (J3).
     # Cached: tiny (distinct keywords), consumed by three plan branches.
     kw_match = make_keyword_match_udf(matchers)
-    distinct_kw = (
+    distinct_kw = share(
         ex.select("keyword", "kw_uri")
         .dropDuplicates(["kw_uri"])
         .withColumn("cm", kw_match(F.col("keyword")))
-        .cache()
     )
     node_triples = distinct_kw.select(F.explode(F.array_compact(F.array(
         triple_struct(F.col("kw_uri"), NS.RDF_TYPE, NS.SCHEMA_THING, OKIND_URI),
@@ -126,12 +126,11 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
 
     # first-writer-wins winner per keyword (slim aggregate, broadcast back)
     per_row = ex.withColumn("has_match", F.size("matched") > 0)
-    winners = (
+    winners = share(
         per_row.groupBy("kw_uri")
         .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
         .filter(F.col("win_ord").isNotNull())
         .select(F.col("kw_uri").alias("w_kw_uri"), "win_ord")
-        .cache()
     )
     win_rows = (
         per_row.join(

@@ -34,6 +34,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
+
 
 def doc_bigrams(documents: DataFrame, doc_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
@@ -76,7 +78,6 @@ def train_bigram_lm(doc_bg: DataFrame) -> DataFrame:
 def bigram_lm_perplexity(documents: DataFrame, alpha: float = 0.1,
                          max_ppl: Optional[float] = None,
                          lm: Optional[DataFrame] = None,
-                         persist: bool = True,
                          doc_col: str = "doc_id",
                          text_col: str = "text") -> DataFrame:
     """Score every document with an add-``alpha`` bigram LM.
@@ -91,22 +92,17 @@ def bigram_lm_perplexity(documents: DataFrame, alpha: float = 0.1,
     model with a pre-trained (w1, w2, c12, c1) frame (the CCNet
     configuration: LM from a reference corpus, scores on the target).
 
-    ``persist`` (default True) materializes the per-doc bigram-count
-    frame once (MEMORY_AND_DISK): the scoring branch and the LM
-    derivations all consume it, and exchange reuse only dedups one of
-    those branches in practice (canonicalization of the re-aliased
-    self-join subtrees is partial), so without the persist the TEXT —
-    the 100 TB side — is tokenized up to four times.  The persisted
+    The per-doc bigram-count frame is shared once: the scoring branch
+    and the LM derivations all consume it, and exchange reuse only
+    dedups one of those branches in practice (canonicalization of the
+    re-aliased self-join subtrees is partial), so without the cache the
+    TEXT — the 100 TB side — is tokenized up to four times.  The cached
     frame is the slim aggregated (doc, w1, w2, m) table, a fraction of
     the raw text bytes, and spills to disk when it doesn't fit.
     """
     if alpha <= 0:
         raise ValueError("alpha must be positive")
-    bg = doc_bigrams(documents, doc_col=doc_col, text_col=text_col)
-    if persist:
-        from pyspark import StorageLevel
-
-        bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
+    bg = share(doc_bigrams(documents, doc_col=doc_col, text_col=text_col))
     model = train_bigram_lm(bg) if lm is None else lm
     vsz = model.agg(F.countDistinct("w2").alias("vsz"))
     scored = bg.join(model, ["w1", "w2"]).crossJoin(F.broadcast(vsz))
@@ -130,8 +126,7 @@ def bigram_lm_perplexity(documents: DataFrame, alpha: float = 0.1,
 
 def kn_bigram_table(documents: DataFrame, discount: float = 0.75,
                     doc_col: str = "doc_id",
-                    text_col: str = "text",
-                    persist: bool = True) -> DataFrame:
+                    text_col: str = "text") -> DataFrame:
     """Interpolated Kneser-Ney bigram table (Kneser & Ney, ICASSP
     1995; Chen & Goodman 1998) — the smoothing the add-alpha LM above
     trades away, built from the SAME slim count frames.
@@ -160,21 +155,17 @@ def kn_bigram_table(documents: DataFrame, discount: float = 0.75,
     Scale shape: after doc_bigrams' single corpus explode, everything
     regroups vocabulary-sized count frames; the w1/w2 joins are slim
     dimension joins and the grand total rides a one-row broadcast.
-    ``persist`` (default True) materializes the slim (w1, w2, c12)
-    frame once: FOUR branches consume it (the output join plus the
-    c1/bw/tot regroups) and exchange reuse dedups re-aliased subtrees
-    only partially (see bigram_lm_perplexity's note above) — without
-    it the 100 TB text side can be tokenized once per branch.
+    The slim (w1, w2, c12) frame is shared once: FOUR branches consume
+    it (the output join plus the c1/bw/tot regroups) and exchange reuse
+    dedups re-aliased subtrees only partially (see
+    bigram_lm_perplexity's note above) — without the cache the 100 TB
+    text side can be tokenized once per branch.
     """
     if not (0.0 < discount < 1.0):
         raise ValueError(
             f"discount must be in (0, 1), got {discount}")
     bg = doc_bigrams(documents, doc_col, text_col)
-    c12 = bg.groupBy("w1", "w2").agg(F.sum("m").alias("c12"))
-    if persist:
-        from pyspark import StorageLevel
-
-        c12 = c12.persist(StorageLevel.MEMORY_AND_DISK)
+    c12 = share(bg.groupBy("w1", "w2").agg(F.sum("m").alias("c12")))
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"),
                                F.count(F.lit(1)).alias("n1p_fw"))
     bw = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_bw"))

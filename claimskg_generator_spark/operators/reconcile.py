@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from claimskg_generator_spark.constants.namespaces import NS
+from claimskg_generator_spark.operators.cache import share
 
 
 def reference_pair_sample_indices(count: int, sample_size: int,
@@ -647,13 +648,11 @@ def _reconcile_scored(views: DataFrame, theta: float,
     # covers the identically-shuffled self-join sides, but the re-attach
     # joins shuffle on a different key, so an unmaterialized upstream (the
     # parse pipeline when called end-to-end) re-executes per branch.
-    # Persist the slim parsed view once — MEMORY_AND_DISK so a corpus that
-    # outgrows executor memory spills instead of failing; at production
-    # scale the input is already a materialized claims table and this holds
-    # only the projected scoring columns.
-    from pyspark import StorageLevel
-
-    views = views.persist(StorageLevel.MEMORY_AND_DISK)
+    # Share the slim parsed view once — it spills to disk when a corpus
+    # outgrows executor memory; at production scale the input is already a
+    # materialized claims table and this holds only the projected scoring
+    # columns.
+    views = share(views)
 
     # SLIM blocking self-join: only the block key, prune-predicate columns
     # and the pair identity go through the candidate explosion — a hot

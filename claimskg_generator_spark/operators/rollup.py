@@ -38,6 +38,8 @@ from typing import List, Sequence, Tuple, Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
+
 #: measure fn -> (partial aggregate, merge combiner)
 _MONOIDS = {
     "count": (lambda c: F.count(c), F.sum),
@@ -123,7 +125,6 @@ def gap_fill(
     bucket_col: str = "bucket",
     locf_cols: Sequence[str] = (),
     zero_cols: Sequence[str] = (),
-    persist: bool = True,
 ) -> DataFrame:
     """Densify an epoch-second bucketed rollup to a gapless per-key
     time spine — the `time_bucket_gapfill` face of a hypertable stack:
@@ -150,11 +151,11 @@ def gap_fill(
 
     Scale shape: one bounds groupBy, the spine dedup, one co-keyed
     left join, and (only when ``locf_cols`` is non-empty) one window
-    exchange per key — the spine explode is in-row.  ``persist``
-    (default True) materializes the input once: the bounds branch and
-    the observation branch both consume it, and exchange reuse dedups
-    re-aliased subtrees only partially — without it the upstream
-    rollup (and the raw scan under it) can run twice.  A key with a
+    exchange per key — the spine explode is in-row.  The input is
+    shared once: the bounds branch and the observation branch both
+    consume it, and exchange reuse dedups re-aliased subtrees only
+    partially — without the cache the upstream rollup (and the raw scan
+    under it) can run twice.  A key with a
     pathological bucket range fans out to range/step rows exactly
     like the real timeline it models; cap the range upstream if that
     is not intended.
@@ -162,10 +163,7 @@ def gap_fill(
     if step <= 0:
         raise ValueError(f"step must be > 0, got {step}")
     ks = list(keys)
-    if persist:
-        from pyspark import StorageLevel
-
-        rolled = rolled.persist(StorageLevel.MEMORY_AND_DISK)
+    rolled = share(rolled)
     spine = (
         rolled.groupBy(*ks).agg(
             F.min(bucket_col).alias("__b0"),

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
+
 
 def _doc_feature_counts(documents: DataFrame, bucket_hex_len: int,
                         doc_col: str, text_col: str) -> DataFrame:
@@ -86,7 +88,6 @@ def dsir_select(
     alpha: float = 1.0,
     bucket_hex_len: int = 3,
     exact: bool = True,
-    persist: bool = True,
     doc_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -106,11 +107,10 @@ def dsir_select(
     engine-stable), ``keep`` (1 iff log_importance is at or above the
     exact (1 − fraction) percentile of the raw corpus' scores).
 
-    ``persist`` (default True) materializes the slim (doc, flag,
-    bucket, m) frame once (MEMORY_AND_DISK): both model regroups and
-    the scoring branch consume it, and without the persist the TEXT —
-    the 100 TB side — is tokenized and exploded three times (the
-    bigram_lm_perplexity persist rationale, operators/lm.py).
+    The slim (doc, flag, bucket, m) frame is shared once: both model
+    regroups and the scoring branch consume it, and without the cache
+    the TEXT — the 100 TB side — is tokenized and exploded three times
+    (the bigram_lm_perplexity rationale, operators/lm.py).
     """
     if not 0.0 < fraction <= 1.0:
         raise ValueError(f"fraction must be in (0, 1], got {fraction}")
@@ -118,11 +118,7 @@ def dsir_select(
 
     docs = documents.select(F.col(doc_col), F.col(text_col),
                             is_target.alias("__is_target"))
-    fb = _doc_feature_counts(docs, bucket_hex_len, doc_col, text_col)
-    if persist:
-        from pyspark import StorageLevel
-
-        fb = fb.persist(StorageLevel.MEMORY_AND_DISK)
+    fb = share(_doc_feature_counts(docs, bucket_hex_len, doc_col, text_col))
 
     ct = (
         fb.filter("__is_target").groupBy("bucket")

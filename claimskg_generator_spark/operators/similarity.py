@@ -13,6 +13,8 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
+
 
 def _dot(a, b):
     # cast each float32 to double BEFORE multiplying — same arithmetic as a
@@ -194,14 +196,9 @@ def ivf_topk(embeddings: DataFrame, query_ids: List[int], k: int = 5,
         # centroid lineage, and cent_arr is broadcast from at least two
         # places (final assignment + probe lists): without a cache each
         # broadcast re-runs every preceding Lloyd pass over the whole
-        # corpus.  The cached frames are one row of n_centroids * dim
-        # doubles per iteration — negligible, and deliberately left
-        # cached (the plan is lazy, so there is no post-action hook here
-        # to unpersist from; callers holding a long-lived session can
-        # spark.catalog.clearCache() if the few KB matter).
-        from pyspark import StorageLevel
-
-        cent_arr = cent_arr.persist(StorageLevel.MEMORY_AND_DISK)
+        # corpus.  The shared frames are one row of n_centroids * dim
+        # doubles per iteration.
+        cent_arr = share(cent_arr)
 
     for _ in range(n_iters):
         # Lloyd pass: argmax assignment (pure map) + element-wise cluster
@@ -235,9 +232,7 @@ def ivf_topk(embeddings: DataFrame, query_ids: List[int], k: int = 5,
                 ).alias("cv"),
             )
         )
-        from pyspark import StorageLevel
-
-        cent_arr = to_cent_arr(cents).persist(StorageLevel.MEMORY_AND_DISK)
+        cent_arr = share(to_cent_arr(cents))
 
     assigned = assign(cent_arr)
     # probe lists: the n_probe nearest centroids per query — same within-row
@@ -342,14 +337,11 @@ def lsh_cosine_pairs(embeddings: DataFrame, bands: int = 8,
     """Embedding-cosine near-dup pairs: multi-band bucket equi-join
     candidates (see hyperplane_band_keys), then exact cosine verification
     on candidates only — the scale path for embedding dedup."""
-    from pyspark import StorageLevel
-
     # both self-join sides consume the banded frame; the sign-pattern
     # keys are bands*planes interpreted 64-element folds per vector, so
     # compute them once — the cached rows are slim (id, band, key)
-    b = (hyperplane_band_keys(embeddings, bands, planes_per_band, seed,
-                              dim=dim, id_col=id_col, vec_col=vec_col)
-         .persist(StorageLevel.MEMORY_AND_DISK))
+    b = share(hyperplane_band_keys(embeddings, bands, planes_per_band, seed,
+                                   dim=dim, id_col=id_col, vec_col=vec_col))
     a = b.select(F.col(id_col).alias("id_a"), "band", "key")
     c = b.select(F.col(id_col).alias("id_b"), "band", "key")
     cand = (

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.dedup import md5_hash_mod_p
 
 
@@ -58,17 +59,16 @@ def countmin_heavy_hitters(
     depth: int = 4,
     width: int = 32768,
     ngram: int = 2,
-    persist: bool = True,
     text_col: str = "text",
 ) -> DataFrame:
     """Terms whose count-min ESTIMATE reaches ``min_count``, with the
     exact count alongside so the sketch's one-sided error is visible.
 
     ``ngram`` terms are generated WITHIN the document row (transform
-    over adjacent token windows — no join).  ``persist`` (default True)
-    materializes the slim (term, exact_count) frame once: the sketch
-    build and the candidate probe both consume it, and without the
-    persist the 100 TB text side is tokenized and exploded twice.
+    over adjacent token windows — no join).  The slim (term,
+    exact_count) frame is shared once: the sketch build and the
+    candidate probe both consume it, and without the cache the 100 TB
+    text side is tokenized and exploded twice.
 
     Output, one row per candidate: ``term``, ``exact_count``,
     ``cms_count`` (>= exact_count always; > means a grid collision).
@@ -98,15 +98,11 @@ def countmin_heavy_hitters(
                 lambda i: F.array_join(F.slice(t, i + 1, ngram), " "),
             ),
         ).otherwise(F.array().cast("array<string>"))
-    tc = (
+    tc = share(
         toked.select(F.explode(terms).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("exact_count"))
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        tc = tc.persist(StorageLevel.MEMORY_AND_DISK)
 
     hashed = tc.select(
         "term", "exact_count",

@@ -138,6 +138,7 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.sparql import (
     ParsedQuery,
     SparqlSyntaxError,
@@ -942,15 +943,11 @@ def apply_request(graph: DataFrame, request,
     graph several times (the kept subtree feeds both union branches,
     and its WHERE patterns scan it again), and Spark shares no
     subtrees, so an n-operation request re-evaluates early operations
-    a MULTIPLICATIVE number of times.  ``persist=True`` caches each
-    intermediate graph (MEMORY_AND_DISK), collapsing every
+    a MULTIPLICATIVE number of times.  ``persist=True`` shares each
+    intermediate graph (``operators.cache``), collapsing every
     re-reference to one in-memory scan — the right call for requests
-    of more than ~two pattern operations.  The intermediates stay in
-    the session cache after this returns (the pure face hands back
-    only the final frame, which still references them); reclaim with
-    ``spark.catalog.clearCache()`` or let LRU eviction handle it.
-    The table face persists automatically and unpersists after its
-    single atomic commit."""
+    of more than ~two pattern operations.  The table face always
+    shares them."""
     ops = request if isinstance(request, list) \
         else parse_update_request(request)
     cur = graph
@@ -960,8 +957,7 @@ def apply_request(graph: DataFrame, request,
         else:
             cur = apply_update(cur, op, stats, charsets)
         if persist and i < len(ops) - 1:
-            from pyspark import StorageLevel
-            cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
+            cur = share(cur)
     return cur
 
 
@@ -975,14 +971,11 @@ def apply_request_to_table(table, request,
     All-insert-only requests append just the genuinely-new rows; any
     delete side or management operation commits an atomic overwrite.
     Returns the new snapshot id."""
-    from pyspark import StorageLevel
-
     ops = request if isinstance(request, list) \
         else parse_update_request(request)
     current = table.read()
     quads, has_okind = _table_shape(current)
     cur = current
-    cached: List[DataFrame] = []
     for i, op in enumerate(ops):
         if isinstance(op, ParsedGraphOp):
             if not quads and not (op.kind == "load"
@@ -997,8 +990,7 @@ def apply_request_to_table(table, request,
         if len(ops) > 1 and i < len(ops) - 1:
             # each later op references this graph several times (kept
             # subtree + WHERE scans); cache it for the one commit job
-            cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
-            cached.append(cur)
+            cur = share(cur)
     # monotone operations stay on the append path: pattern inserts,
     # LOAD and ADD only ever grow the graph (CREATE adds nothing)
     insert_only = all(
@@ -1007,13 +999,7 @@ def apply_request_to_table(table, request,
         for op in ops)
     forms = "; ".join(op.kind if isinstance(op, ParsedGraphOp)
                       else op.form for op in ops)
-    try:
-        if insert_only:
-            new_rows = (_anti(cur, current, quads)
-                        .select(*current.columns))
-            return table.append(new_rows,
-                                extra={"sparql_update": forms})
-        return table.overwrite(cur.select(*current.columns))
-    finally:
-        for df in cached:
-            df.unpersist()
+    if insert_only:
+        new_rows = _anti(cur, current, quads).select(*current.columns)
+        return table.append(new_rows, extra={"sparql_update": forms})
+    return table.overwrite(cur.select(*current.columns))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from claimskg_generator_spark.functions.textmatch import PhraseMatcher
 from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.keywords import exploded_keywords
 from claimskg_generator_spark.operators.views import logical_views
 
@@ -81,7 +82,7 @@ def statistics_table(claims: DataFrame, model_uri: str,
     the reference's output ratio transform (statistics.py:100-129)."""
     # ONE materialized exploded-keywords frame feeds both the logical views
     # (winner mentions) and the keyword counters
-    ex = exploded_keywords(claims, model_uri).cache()
+    ex = share(exploded_keywords(claims, model_uri))
     views = logical_views(claims, model_uri, threshold, ex)
     kw = keyword_stat_counts(claims, model_uri, matchers, threshold, ex)
     v = views.join(kw, "ord", "left").na.fill(

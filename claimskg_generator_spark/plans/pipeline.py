@@ -29,6 +29,7 @@ from claimskg_generator_spark.constants.static_triples import (
     static_triples,
 )
 from claimskg_generator_spark.functions.udfs import clean_citations
+from claimskg_generator_spark.operators.cache import release, share
 from claimskg_generator_spark.operators.keywords import (
     keyword_triples_and_raw_mentions,
 )
@@ -144,7 +145,7 @@ class ClaimsKGPipeline:
             # cold each of them recomputes the parse from scratch (measured
             # as 6-7 duplicated ~3 s stages at bench scale).  One explicit
             # materialization action makes every branch a cache read.
-            df = df.cache()
+            df = share(df)
             df.count()
         return df
 
@@ -184,7 +185,7 @@ class ClaimsKGPipeline:
 
         # one cached exploded-keywords frame for every consumer in this run
         # (keyword families + logical views when reconciliation is on)
-        ex = exploded_keywords(claims, cfg.model_uri).cache()
+        ex = share(exploded_keywords(claims, cfg.model_uri))
         kw_non_mention, kw_raw = keyword_triples_and_raw_mentions(
             claims, cfg.model_uri, self.matchers, cfg.threshold, ex
         )
@@ -248,12 +249,10 @@ class ClaimsKGPipeline:
             ).hexdigest()[:16]
         result = self.checkpoints.materialize("triples", deduped, token)
         if self.config.checkpoint_dir:
-            # materialize() above was eager (checkpoint write): the stage
-            # caches feeding it (the exploded-keywords cache and the keyword
-            # winner/distinct caches) are spent — free them so long-lived
-            # drivers don't accumulate per-run caches.  The result itself is
-            # a fresh parquet scan, unaffected.
-            self.spark.catalog.clearCache()
+            # materialize() above was eager (checkpoint write), so the
+            # frames shared to build it are spent; the result is a fresh
+            # parquet scan, and frames the caller cached stay cached
+            release()
         return result
 
     # -- sinks ---------------------------------------------------------------

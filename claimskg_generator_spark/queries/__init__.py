@@ -12,12 +12,18 @@ the DuckDB SQL (a string, or a callable evaluated on each
 is the function name, which must start with ``qNN_``; a name registered
 twice is an error at import.  ``__spark_entry__`` derives ``queries()``
 and ``oracle_sql()`` from ``registered()``.
+
+A registered builder first releases what earlier queries shared
+(``operators.cache``); one that builds on another calls its ``__wrapped__``.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
+
+from claimskg_generator_spark.operators.cache import release
 
 Builder = Callable[..., object]
 Oracle = str | Callable[[], str]
@@ -34,8 +40,14 @@ def query(oracle: Oracle) -> Callable[[Builder], Builder]:
             raise ValueError(f"query {name!r} does not start with qNN_")
         if name in _REGISTRY:
             raise ValueError(f"query {name!r} is registered twice")
-        _REGISTRY[name] = (fn, oracle)
-        return fn
+
+        @functools.wraps(fn)
+        def build(*args, **kwargs):
+            release()
+            return fn(*args, **kwargs)
+
+        _REGISTRY[name] = (build, oracle)
+        return build
     return register
 
 

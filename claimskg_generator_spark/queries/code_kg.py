@@ -7,7 +7,6 @@ skolemization, provenance, triple P/R).
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from claimskg_generator_spark.constants.namespaces import NS
 from claimskg_generator_spark.functions.secrets import with_secret_scan
@@ -862,15 +861,11 @@ def q121_kg_void_stats(spark, sf_dir):
     the 100 TB scale.  The oracle recomputes all three partitions over
     the shared dtrips CTE."""
     # void_stats aggregates its input in three branches (dataset row /
-    # property partition / class sliver); persist + ONE eager fill
-    # (the pipeline.py:163 documented-action pattern) makes them share
-    # one lift — lazy persist alone lets the branches race to compute
-    # the cache.  In production VoID runs over the already-materialized
-    # snapshot table, where this is free.
-    trips = code_triples(_code_files(spark, sf_dir)).select(
-        "subj", "pred", "obj").persist(StorageLevel.MEMORY_AND_DISK)
-    trips.count()
-    return void_stats(trips)
+    # property partition / class sliver), which share one filled lift.  In
+    # production VoID runs over the already-materialized snapshot table,
+    # where this is free.
+    return void_stats(_persist_filled(code_triples(
+        _code_files(spark, sf_dir)).select("subj", "pred", "obj")))
 
 
 def _q122_oracle_sql() -> str:

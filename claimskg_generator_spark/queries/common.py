@@ -9,9 +9,9 @@ import json as _json
 import os as _os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from claimskg_generator_spark.operators import code_kg as ck
+from claimskg_generator_spark.operators.cache import share
 from claimskg_generator_spark.operators.rdfs import (
     DOMAIN,
     RANGE,
@@ -81,15 +81,12 @@ def _claims_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _persist_filled(df: DataFrame) -> DataFrame:
-    """Persist + ONE eager fill (the q121 documented-action pattern):
-    for query frames that feed MULTIPLE downstream plan branches
-    (entailment rules, SHACL constraints, update anti-joins, closure +
-    re-attach), the branches would otherwise each re-run the full
-    upstream build — and a lazy persist alone lets the first action's
-    concurrently-scheduled stages race to fill the cache.  Used inside
-    query builders only, so the fill is always inside the timed region;
-    at production scale these inputs are already materialized tables."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    """Share + ONE eager fill of a query frame that feeds several plan
+    branches (entailment rules, SHACL constraints, update anti-joins,
+    closure + re-attach): a lazy cache alone lets the first action's
+    concurrent stages race to fill it.  The next query's build releases
+    it; at production scale these inputs are materialized tables."""
+    df = share(df)
     df.count()
     return df
 

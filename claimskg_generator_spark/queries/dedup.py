@@ -453,7 +453,7 @@ def q34_dedup_groups(spark, sf_dir):
     small-star operator — (id, canonical_id) with canonical_id = the
     cluster minimum; rows with id == canonical_id are the keep set.
     Oracle: the q17 pair SQL feeding a recursive min-label closure."""
-    pairs = q17_minhash_lsh(spark, sf_dir).select("id_a", "id_b")
+    pairs = q17_minhash_lsh.__wrapped__(spark, sf_dir).select("id_a", "id_b")
     return dedup_groups(pairs)
 
 
@@ -486,7 +486,7 @@ def q35_dedup_corpus(spark, sf_dir):
     verified pair stream).  Survivors keyed by doc_id + text md5 so the
     oracle hashes actual content identity, not just ids."""
     docs = spark.read.parquet(_t(sf_dir, "documents"))
-    pairs = q17_minhash_lsh(spark, sf_dir).select("id_a", "id_b")
+    pairs = q17_minhash_lsh.__wrapped__(spark, sf_dir).select("id_a", "id_b")
     return dedup_corpus(docs, pairs).select(
         "doc_id", F.md5("text").alias("text_md5")
     )

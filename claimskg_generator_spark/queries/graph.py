@@ -181,7 +181,7 @@ def q55_pagerank(spark, sf_dir):
     q54 co-mention graph — the iterative-operator family on a real
     derived graph; deterministic, so the oracle is the unrolled SQL
     twin (operators/components.py pagerank)."""
-    edges = q54_comention_graph(spark, sf_dir).select(
+    edges = q54_comention_graph.__wrapped__(spark, sf_dir).select(
         F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
     )
     return pagerank(edges, n_iters=3, damping=0.85)
@@ -224,7 +224,7 @@ def q56_label_propagation(spark, sf_dir):
     """Synchronous min-tie-break label propagation (2 iterations) over
     the q54 co-mention graph — deterministic community detection; the
     oracle is the unrolled SQL twin (operators/components.py)."""
-    edges = q54_comention_graph(spark, sf_dir).select(
+    edges = q54_comention_graph.__wrapped__(spark, sf_dir).select(
         F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
     )
     return label_propagation(edges, n_iters=2)
@@ -285,7 +285,7 @@ def q65_triangle_count(spark, sf_dir):
     degree-ordered orientation (operators/components.triangle_count) —
     clustering density for every entity; all-integer output, so the
     DuckDB twin hash-matches exactly."""
-    edges = q54_comention_graph(spark, sf_dir).select(
+    edges = q54_comention_graph.__wrapped__(spark, sf_dir).select(
         F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
     )
     return triangle_count(edges)
@@ -872,7 +872,7 @@ def q160_personalized_pagerank(spark, sf_dir):
     only in the final projection).  The oracle unrolls the walk/
     teleport full-outer fold per iteration with the identical IEEE
     double expressions."""
-    edges = q54_comention_graph(spark, sf_dir).select(
+    edges = q54_comention_graph.__wrapped__(spark, sf_dir).select(
         F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
     )
     deg_nodes = (edges.select(F.col("src").alias("node"))

@@ -502,12 +502,6 @@ def test_code_triples_single_exchange_no_join(spark):
     the map side runs a partial distinct before it."""
     from claimskg_generator_spark.queries import code_kg as e
 
-    # tests share one session: an earlier test's persisted frame (e.g.
-    # triple_diff's cached deduped sides, which embed a code_triples
-    # subtree) would otherwise be substituted into this plan by the
-    # CacheManager and its internal exchange double-counted — the
-    # property pinned here is the shape of the UNCACHED plan
-    spark.catalog.clearCache()
     plan = _plan(e.q98_code_kg_triples(spark, SF))
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert "Python" not in plan
@@ -874,8 +868,6 @@ def test_graph_management_plan(spark):
     graphs, never shuffling the store."""
     from claimskg_generator_spark.queries import sparql as e
 
-    spark.catalog.clearCache()
-
     plan = _plan(e.q140_kg_graph_management(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
     joins = re.findall(r"\(\d+\) (\w+Join)", plan)
@@ -886,13 +878,9 @@ def test_graph_scoped_update_plan(spark):
     """q141: the WITH/GRAPH-scoped update keeps the q136 shape on the
     quad key — every join is a BROADCAST hash join (the binding inner
     joins + the anti-joins whose right sides are bindings-derived
-    slivers); the store is never repartitioned on the quad key.
-    clearCache first: a cached subtree left by another test can
-    substitute into this plan (Spark's CacheManager matches plan
-    fragments) and flip a broadcast decision via its statistics."""
+    slivers); the store is never repartitioned on the quad key."""
     from claimskg_generator_spark.queries import sparql as e
 
-    spark.catalog.clearCache()
     plan = _plan(e.q141_kg_graph_scoped_update(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
     joins = set(re.findall(r"\(\d+\) (\w+Join)", plan))
@@ -905,8 +893,6 @@ def test_negated_pset_plan(spark):
     NOT IN pushed into the scan filter) joined on the shared variable
     — never a widening construct; bag semantics add no distinct."""
     from claimskg_generator_spark.queries import sparql as e
-
-    spark.catalog.clearCache()
 
     plan = _plan(e.q142_kg_sparql_negated_pset(spark, SF))
     assert "CartesianProduct" not in plan and "Python" not in plan
@@ -921,8 +907,6 @@ def test_sparql_load_plan(spark):
     (dedup) against the store and unioned in — ONE join, and the
     store side is never repartitioned."""
     from claimskg_generator_spark.queries import sparql as e
-
-    spark.catalog.clearCache()
 
     plan = _plan(e.q143_kg_sparql_load(spark, SF))
     assert not re.search(r"\(\d+\) CartesianProduct", plan)

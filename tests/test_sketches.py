@@ -54,7 +54,7 @@ def test_countmin_matches_naive_and_never_underestimates(spark):
         r.term: (r.exact_count, r.cms_count)
         for r in countmin_heavy_hitters(
             _docs(spark, texts), min_count=2, depth=3, width=7,
-            ngram=2, persist=False,
+            ngram=2,
         ).collect()
     }
     want = _naive_cms(texts, 2, 3, 7, 2)
@@ -73,14 +73,14 @@ def test_countmin_unigrams_and_short_docs(spark):
         r.term: (r.exact_count, r.cms_count)
         for r in countmin_heavy_hitters(
             _docs(spark, texts), min_count=1, depth=2, width=64,
-            ngram=1, persist=False,
+            ngram=1,
         ).collect()
     }
     assert got["a"][0] == 3 and got["b"][0] == 1 and got["c"][0] == 1
     # ngram=3 over 1-token docs yields nothing from them
     got3 = countmin_heavy_hitters(
         _docs(spark, texts), min_count=1, depth=2, width=64,
-        ngram=3, persist=False,
+        ngram=3,
     ).collect()
     assert {r.term for r in got3} == {"a a b"}
 
