@@ -343,10 +343,11 @@ class SnapshotTable:
         same atomic commit (e.g. streaming epoch ids)."""
         return self._snapshot(df, "append", extra=extra)
 
-    def overwrite(self, df: DataFrame) -> int:
+    def overwrite(self, df: DataFrame, extra: Optional[Dict] = None) -> int:
         """Commit a new snapshot containing ONLY df's files (the old
-        snapshot stays readable by id — time travel, not deletion)."""
-        return self._snapshot(df, "overwrite")
+        snapshot stays readable by id — time travel, not deletion).
+        ``extra``: caller annotations, as in ``append``."""
+        return self._snapshot(df, "overwrite", extra=extra)
 
     def merge(self, updates: DataFrame, key: str) -> int:
         """Copy-on-write MERGE (upsert by ``key``): rows of ``updates``

@@ -39,6 +39,7 @@ from claimskg_generator_spark.sources.snapshot_table import (
     SnapshotTable,
     SnapshotTableError,
 )
+from claimskg_generator_spark.streaming.drain import drain, source
 
 
 class CdcSnapshotMaintainer:
@@ -138,20 +139,11 @@ def streaming_cdc_apply(
     change_schema=None,
     maintainer: Optional[CdcSnapshotMaintainer] = None,
 ):
-    """Continuously fold a parquet change-file stream into the state
-    table at ``table_dir``.  availableNow trigger: drains what is
-    present and stops (the testable catch-up mode).  Returns
-    (StreamingQuery, CdcSnapshotMaintainer).
+    """Drain a parquet change-file stream into the state table at
+    ``table_dir``.  Returns (StreamingQuery, CdcSnapshotMaintainer).
     """
     m = maintainer or CdcSnapshotMaintainer(
         spark, table_dir, key, value_cols, ts_col=ts_col, op_col=op_col,
         delete_op=delete_op, tiebreak_col=tiebreak_col)
-    schema = change_schema or spark.read.parquet(changes_dir).schema
-    stream = spark.readStream.schema(schema).parquet(changes_dir)
-    q = (
-        stream.writeStream.foreachBatch(m)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = drain(source(spark, changes_dir, change_schema), m, checkpoint_dir)
     return q, m

@@ -37,24 +37,22 @@ from claimskg_generator_spark.operators.kg_stats import (
     charset_state,
     charsets_from_state,
 )
-from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
+from claimskg_generator_spark.streaming.drain import drain, source
 from claimskg_generator_spark.streaming.snapshot_sink import (
-    committed_stream_batch_ids,
+    SnapshotTableStreamWriter,
 )
 
 
-class CharsetStateMaintainer:
+class CharsetStateMaintainer(SnapshotTableStreamWriter):
     """``foreachBatch`` target: land each micro-batch's partial
     ``(subj, pred, n)`` count frame as one epoch-stamped atomic
     commit.  Rows with ``op == 'D'`` (when the column exists) fold as
     deletes; everything else is an insert."""
 
     def __init__(self, spark: SparkSession, table_dir: str):
-        self.table = SnapshotTable(spark, table_dir, stat_cols=("subj",))
-        self._seen = None
+        super().__init__(spark, table_dir, stat_cols=("subj",))
 
-    @staticmethod
-    def _partial(batch_df: DataFrame) -> DataFrame:
+    def partial(self, batch_df: DataFrame) -> DataFrame:
         trips = batch_df.select("subj", "pred")
         if "op" in batch_df.columns:
             sign = F.when(F.col("op") == "D", F.lit(-1)) \
@@ -65,17 +63,6 @@ class CharsetStateMaintainer:
                     .agg(F.sum("sign").cast("bigint").alias("n"))
                     .where(F.col("n") != 0))
         return charset_state(trips)
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._seen is None:
-            self._seen = committed_stream_batch_ids(self.table)
-        if batch_id in self._seen:
-            return  # replayed epoch: its partial already landed
-        # epoch id + partial land in the SAME atomic manifest commit;
-        # an empty batch still lands so the epoch is recorded
-        self.table.append(self._partial(batch_df),
-                          extra={"stream_batch_ids": [batch_id]})
-        self._seen.add(batch_id)
 
     def state(self, snapshot_id: Optional[int] = None) -> DataFrame:
         """The folded ``(subj, pred, n)`` state at a version (latest
@@ -95,10 +82,8 @@ class CharsetStateMaintainer:
 
     def compact(self) -> int:
         """Fold all landed partials into one base commit (additive
-        monoid — safe at any time); returns the new snapshot id.
-        Epoch ids remain reachable through the overwrite commit's
-        parent chain."""
-        return self.table.overwrite(self.state())
+        monoid — safe at any time); returns the new snapshot id."""
+        return self.fold(self.state())
 
 
 def stream_charset_state(
@@ -109,19 +94,10 @@ def stream_charset_state(
     triple_schema=None,
     maintainer: Optional[CharsetStateMaintainer] = None,
 ):
-    """Continuously fold a parquet triple-file stream (optionally
-    carrying an ``op`` insert/delete column) into the charset state
-    table at ``table_dir``.  availableNow trigger: drains what is
-    present and stops (the testable catch-up mode).  Returns
-    (StreamingQuery, CharsetStateMaintainer).
+    """Drain a parquet triple-file stream (optionally carrying an
+    ``op`` insert/delete column) into the charset state table at
+    ``table_dir``.  Returns (StreamingQuery, CharsetStateMaintainer).
     """
     m = maintainer or CharsetStateMaintainer(spark, table_dir)
-    schema = triple_schema or spark.read.parquet(triples_dir).schema
-    stream = spark.readStream.schema(schema).parquet(triples_dir)
-    q = (
-        stream.writeStream.foreachBatch(m)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = drain(source(spark, triples_dir, triple_schema), m, checkpoint_dir)
     return q, m

@@ -16,9 +16,9 @@ duplicates in storage:
   commits — correct under any batch interleaving or replay because set
   union is idempotent and commutative;
 * ``compact_graph()`` folds the stored commits into one deduped base
-  commit, safe at any moment for the same monoid reason; epoch ids
-  stay reachable through the overwrite's parent chain (so do not
-  ``expire_snapshots`` below the stream's checkpoint horizon).
+  commit, safe at any moment for the same monoid reason; the commit
+  records every epoch folded into it, so the replay check survives
+  expiring the snapshots below it (snapshot_sink ``fold``).
 
 Cross-batch duplicates are bounded in practice: per-file triples are
 unique to the file, so only the shared entity facts (repo type/label,
@@ -33,33 +33,23 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from claimskg_generator_spark.operators.code_kg import code_triples
-from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
+from claimskg_generator_spark.streaming.drain import drain, source
 from claimskg_generator_spark.streaming.snapshot_sink import (
-    committed_stream_batch_ids,
+    SnapshotTableStreamWriter,
 )
 
 
-class CodeKGMaintainer:
+class CodeKGMaintainer(SnapshotTableStreamWriter):
     """``foreachBatch`` target: extract the micro-batch's triples and
     land them as one epoch-stamped atomic commit."""
 
     def __init__(self, spark: SparkSession, table_dir: str,
                  scheme: str = "md5"):
         self.scheme = scheme
-        self.table = SnapshotTable(spark, table_dir, stat_cols=("pred",))
-        self._seen = None
+        super().__init__(spark, table_dir, stat_cols=("pred",))
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._seen is None:
-            self._seen = committed_stream_batch_ids(self.table)
-        if batch_id in self._seen:
-            return  # replayed epoch: its triples already landed
-        triples = code_triples(batch_df, scheme=self.scheme)
-        # epoch id + triples land in the SAME atomic manifest commit; an
-        # empty batch still lands so the epoch is recorded
-        self.table.append(triples,
-                          extra={"stream_batch_ids": [batch_id]})
-        self._seen.add(batch_id)
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return code_triples(batch_df, scheme=self.scheme)
 
     def graph(self, snapshot_id: Optional[int] = None) -> DataFrame:
         """The deduped triple set at a state version (latest by
@@ -69,7 +59,7 @@ class CodeKGMaintainer:
     def compact_graph(self) -> int:
         """Fold the landed commits into one deduped base commit
         (monoid-safe at any time); returns the new snapshot id."""
-        return self.table.overwrite(self.graph())
+        return self.fold(self.graph())
 
 
 def stream_code_kg(
@@ -81,17 +71,8 @@ def stream_code_kg(
     files_schema=None,
     maintainer: Optional[CodeKGMaintainer] = None,
 ):
-    """Continuously lift a parquet code-file stream into the triple
-    table at ``table_dir``.  availableNow trigger: drains what is
-    present and stops (the testable catch-up mode).  Returns
-    (StreamingQuery, CodeKGMaintainer)."""
+    """Drain a parquet code-file stream into the triple table at
+    ``table_dir``.  Returns (StreamingQuery, CodeKGMaintainer)."""
     m = maintainer or CodeKGMaintainer(spark, table_dir, scheme=scheme)
-    schema = files_schema or spark.read.parquet(files_dir).schema
-    stream = spark.readStream.schema(schema).parquet(files_dir)
-    q = (
-        stream.writeStream.foreachBatch(m)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = drain(source(spark, files_dir, files_schema), m, checkpoint_dir)
     return q, m

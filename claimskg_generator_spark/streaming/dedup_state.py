@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from claimskg_generator_spark.streaming.drain import drain, source
+
 _OUT_SCHEMA = T.StructType(
     [
         T.StructField("fingerprint", T.StringType()),
@@ -50,17 +52,12 @@ def _update_survivor(key: Tuple[str], batches: Iterable[pd.DataFrame],
 
 def streaming_exact_dedup(spark: SparkSession, input_dir: str,
                           checkpoint_dir: str, output_dir: str,
-                          schema: T.StructType,
-                          trigger_available_now: bool = True):
+                          schema: T.StructType):
     """Maintain the exact-dedup survivor memo over a streaming document
     directory; update rows append to ``output_dir``.  ``schema`` is the
     document schema (must contain doc_id, text).  Returns the
     StreamingQuery."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
+    stream = source(spark, input_dir, schema)
     # identical normalization to the batch operator (dedup.py:28)
     norm = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
     keyed = stream.select("doc_id", F.md5(norm).alias("fingerprint"))
@@ -75,14 +72,7 @@ def streaming_exact_dedup(spark: SparkSession, input_dir: str,
     def _append(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(output_dir)
 
-    writer = (
-        memo.writeStream.outputMode("update")
-        .foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(memo, _append, checkpoint_dir, output_mode="update")
 
 
 def current_survivors(spark: SparkSession, output_dir: str) -> DataFrame:

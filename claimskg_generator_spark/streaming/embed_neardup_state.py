@@ -32,6 +32,7 @@ from claimskg_generator_spark.operators.similarity import (
     _norm,
     hyperplane_band_keys,
 )
+from claimskg_generator_spark.streaming.drain import drain, source
 from claimskg_generator_spark.streaming.neardup_state import (
     _OUT_SCHEMA,
     _STATE_SCHEMA,
@@ -46,22 +47,15 @@ def streaming_embedding_neardup(spark: SparkSession, input_dir: str,
                                 threshold: float = 0.9, seed: int = 11,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding",
-                                max_bucket: Optional[int] = None,
-                                max_files_per_trigger: int = 64,
-                                trigger_available_now: bool = True):
+                                max_bucket: Optional[int] = None):
     """Maintain embedding near-dup pairs (cosine >= threshold) over a
     streaming embeddings directory; verified (id_a, id_b, cosine) rows
     append to ``output_dir``.  ``dim`` is required exactly as in the batch
     operator (plan-time hyperplane literals).  Returns the StreamingQuery.
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
     banded = hyperplane_band_keys(
-        stream, bands, planes_per_band, seed, dim=dim,
-        id_col=id_col, vec_col=vec_col,
+        source(spark, input_dir, schema), bands, planes_per_band, seed,
+        dim=dim, id_col=id_col, vec_col=vec_col,
     ).withColumnRenamed(id_col, "doc_id")
     candidates = banded.groupBy("band", "key").applyInPandasWithState(
         _make_update_bucket(max_bucket),
@@ -89,14 +83,8 @@ def streaming_embedding_neardup(spark: SparkSession, input_dir: str,
             .write.mode("append").parquet(output_dir)
         )
 
-    writer = (
-        candidates.writeStream.outputMode("update")
-        .foreachBatch(_verify_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(candidates, _verify_and_append, checkpoint_dir,
+                 output_mode="update")
 
 
 def current_embedding_pairs(spark: SparkSession,

@@ -8,7 +8,7 @@ streaming source) and triples append to the graph table continuously.
 
 Design:
 
-- ``readStream`` file source over the input-table directory (same
+- ``drain.source`` file stream over the input-table directory (same
   (repo, path, commit, lang, content) schema).
 - Per micro-batch, ``foreachBatch`` runs the *stateless* triple families —
   parse, clean, mint, rating join, mentions, citations — and appends to a
@@ -35,28 +35,18 @@ from claimskg_generator_spark.operators.row_triples import (
 )
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
 from claimskg_generator_spark.sources.synth import INPUT_SCHEMA
+from claimskg_generator_spark.streaming.drain import drain, source
 
 
 def stream_triples(spark: SparkSession, input_dir: str, output_dir: str,
                    checkpoint_dir: str,
-                   config: Optional[PipelineConfig] = None,
-                   trigger_available_now: bool = True):
-    """Start the streaming ingest; returns the StreamingQuery.
-
-    With ``trigger_available_now`` the query drains everything currently in
-    the directory and stops — the testable/batch-catch-up mode; without it,
-    it runs continuously per micro-batch.
-    """
+                   config: Optional[PipelineConfig] = None):
+    """Drain the input directory into the stateless triple log at
+    ``output_dir``; returns the StreamingQuery."""
     cfg = dataclasses.replace(
         config or PipelineConfig(), checkpoint_dir=None, materialize_parsed=False
     )
     pipe = ClaimsKGPipeline(spark, cfg)
-
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # stateless families only; global-view families come from compaction
@@ -70,13 +60,8 @@ def stream_triples(spark: SparkSession, input_dir: str, output_dir: str,
         )
         out.write.mode("append").parquet(output_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(source(spark, input_dir, INPUT_SCHEMA), process_batch,
+                 checkpoint_dir)
 
 
 def compact_triple_log(spark: SparkSession, input_dir: str, log_dir: str,

@@ -28,6 +28,7 @@ from claimskg_generator_spark.constants.namespaces import DEFAULT_MODEL_URI
 from claimskg_generator_spark.operators.keywords import exploded_keywords
 from claimskg_generator_spark.sources.claims import derive_claims, parse_records
 from claimskg_generator_spark.sources.synth import INPUT_SCHEMA
+from claimskg_generator_spark.streaming.drain import drain, source
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -66,16 +67,11 @@ def _update_winner(key: Tuple[str], batches: Iterable[pd.DataFrame],
 
 def streaming_keyword_winners(spark: SparkSession, input_dir: str,
                               checkpoint_dir: str, output_dir: str,
-                              model_uri: str = DEFAULT_MODEL_URI,
-                              trigger_available_now: bool = True):
+                              model_uri: str = DEFAULT_MODEL_URI):
     """Maintain per-keyword winners over a streaming input-table directory;
     update rows append to ``output_dir`` (latest win_ord per kw_uri is the
     current memo).  Returns the StreamingQuery."""
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
+    stream = source(spark, input_dir, INPUT_SCHEMA)
     claims = derive_claims(parse_records(stream, "path"), model_uri)
     ex = exploded_keywords(claims, model_uri).select(
         "ord", "kw_uri", "keyword", (F.size("matched") > 0).alias("has_match")
@@ -93,14 +89,7 @@ def streaming_keyword_winners(spark: SparkSession, input_dir: str,
     def _append(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(output_dir)
 
-    writer = (
-        winners.writeStream.outputMode("update")
-        .foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(winners, _append, checkpoint_dir, output_mode="update")
 
 
 def current_winners(spark: SparkSession, output_dir: str) -> DataFrame:

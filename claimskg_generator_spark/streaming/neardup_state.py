@@ -40,6 +40,7 @@ from claimskg_generator_spark.operators.dedup import (
     _verify_candidate_jaccard,
     minhash_band_keys,
 )
+from claimskg_generator_spark.streaming.drain import drain, source
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -93,9 +94,7 @@ def streaming_minhash_neardup(spark: SparkSession, input_dir: str,
                               schema: T.StructType, n: int = 3,
                               num_hashes: int = 32, bands: int = 8,
                               verify_threshold: float = 0.5, seed: int = 7,
-                              max_bucket: Optional[int] = None,
-                              max_files_per_trigger: int = 64,
-                              trigger_available_now: bool = True):
+                              max_bucket: Optional[int] = None):
     """Maintain near-duplicate pairs over a streaming document directory.
 
     Verified (id_a, id_b, jaccard) rows append to ``output_dir``; pair
@@ -105,11 +104,7 @@ def streaming_minhash_neardup(spark: SparkSession, input_dir: str,
     the later one streams in).  ``schema`` must contain doc_id and text.
     Returns the StreamingQuery.
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = source(spark, input_dir, schema)
 
     def xx_mod_p(col):
         from claimskg_generator_spark.operators.dedup import MINHASH_P
@@ -134,14 +129,8 @@ def streaming_minhash_neardup(spark: SparkSession, input_dir: str,
                                              persist_sets=False)
         verified.write.mode("append").parquet(output_dir)
 
-    writer = (
-        candidates.writeStream.outputMode("update")
-        .foreachBatch(_verify_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(candidates, _verify_and_append, checkpoint_dir,
+                 output_mode="update")
 
 
 def current_neardup_pairs(spark: SparkSession, output_dir: str) -> DataFrame:

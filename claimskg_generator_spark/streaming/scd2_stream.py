@@ -21,6 +21,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from claimskg_generator_spark.streaming.drain import drain, source
+
 
 def _scd2_enrich(facts: DataFrame, dim: DataFrame, on: Sequence[str],
                  fact_ts: str, valid_from: str, valid_to: str,
@@ -63,27 +65,17 @@ def streaming_scd2_join(
     how: str = "left",
     fact_schema=None,
 ):
-    """Continuously enrich a fact stream (parquet file source over
-    ``facts_dir``) with the dimension version valid at each fact's
-    timestamp; appends to ``output_dir``.  availableNow trigger: drains
-    what is present and stops (the testable catch-up mode).
-
-    Returns the StreamingQuery.
+    """Drain a fact stream (parquet file source over ``facts_dir``),
+    enriched with the dimension version valid at each fact's
+    timestamp, into the parquet file sink at ``output_dir``.  Returns
+    the StreamingQuery.
     """
     if how not in ("left", "inner"):
         raise ValueError(f"how must be 'left' or 'inner', got {how!r}")
     if dim_cols is None:
         skip = set(on) | {valid_from, valid_to}
         dim_cols = [c for c in dim.columns if c not in skip]
-    schema = fact_schema or spark.read.parquet(facts_dir).schema
-    stream = spark.readStream.schema(schema).parquet(facts_dir)
-    enriched = _scd2_enrich(stream, dim, on, fact_ts, valid_from,
-                            valid_to, dim_cols, suffix, how)
-    return (
-        enriched.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    enriched = _scd2_enrich(source(spark, facts_dir, fact_schema), dim,
+                            on, fact_ts, valid_from, valid_to, dim_cols,
+                            suffix, how)
+    return drain(enriched, output_dir, checkpoint_dir)

@@ -37,6 +37,7 @@ from claimskg_generator_spark.operators.dedup import (
     simhash_row_expr,
     simhash_table_keys,
 )
+from claimskg_generator_spark.streaming.drain import drain, source
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -100,21 +101,14 @@ def streaming_simhash_neardup(spark: SparkSession, input_dir: str,
                               schema: T.StructType, max_hamming: int = 3,
                               n_blocks: Optional[int] = None,
                               token_hash=None,
-                              max_bucket: Optional[int] = None,
-                              max_files_per_trigger: int = 64,
-                              trigger_available_now: bool = True):
+                              max_bucket: Optional[int] = None):
     """Maintain SimHash near-dup pairs (hamming <= max_hamming) over a
     streaming document directory; verified (id_a, id_b, hamming) rows
     append to ``output_dir``.  ``schema`` must contain doc_id and text.
     Returns the StreamingQuery."""
     if n_blocks is None:
         n_blocks = max_hamming + 1
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    sigs = stream.select(
+    sigs = source(spark, input_dir, schema).select(
         "doc_id", simhash_row_expr("text", token_hash).alias("simhash")
     ).where(F.col("simhash").isNotNull())
     for c, (off, width) in enumerate(_chunk_widths(n_blocks)):
@@ -137,14 +131,7 @@ def streaming_simhash_neardup(spark: SparkSession, input_dir: str,
             "append"
         ).parquet(output_dir)
 
-    writer = (
-        pairs.writeStream.outputMode("update")
-        .foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(pairs, _append, checkpoint_dir, output_mode="update")
 
 
 def current_simhash_pairs(spark: SparkSession, output_dir: str) -> DataFrame:

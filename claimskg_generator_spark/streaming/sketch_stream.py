@@ -19,10 +19,9 @@ does the rest:
   interpolation, so a drained stream answers bit-for-bit like
   ``histogram_quantiles(histogram_registers(all rows))``;
 * ``compact_registers()`` folds every partial into one base commit —
-  safe at ANY moment for the same monoid reason; the epoch ids stay
-  visible to the replay check because ``committed_stream_batch_ids``
-  walks the manifest PARENT chain (so do not ``expire_snapshots``
-  below the stream's checkpoint horizon).
+  safe at ANY moment for the same monoid reason; the commit records
+  every epoch folded into it, so the replay check survives expiring
+  the snapshots below it (snapshot_sink ``fold``).
 
 State size: O(batches × groups × n_bins) rows before compaction,
 O(groups × n_bins) after — constant in corpus size either way; this
@@ -39,13 +38,13 @@ from claimskg_generator_spark.operators.sketches import (
     histogram_quantiles,
     histogram_registers,
 )
-from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
+from claimskg_generator_spark.streaming.drain import drain, source
 from claimskg_generator_spark.streaming.snapshot_sink import (
-    committed_stream_batch_ids,
+    SnapshotTableStreamWriter,
 )
 
 
-class HistogramSketchMaintainer:
+class HistogramSketchMaintainer(SnapshotTableStreamWriter):
     """``foreachBatch`` target: land each micro-batch's partial
     histogram registers as one epoch-stamped atomic commit."""
 
@@ -55,24 +54,13 @@ class HistogramSketchMaintainer:
         self.value_col = value_col
         self.lo, self.hi, self.n_bins = float(lo), float(hi), int(n_bins)
         self.by = list(by or [])
-        self.table = SnapshotTable(
-            spark, table_dir, stat_cols=tuple(self.by) or ("bin",))
-        self._seen = None
+        super().__init__(spark, table_dir,
+                         stat_cols=tuple(self.by) or ("bin",))
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._seen is None:
-            self._seen = committed_stream_batch_ids(self.table)
-        if batch_id in self._seen:
-            return  # replayed epoch: its partial already landed
-        partial = histogram_registers(
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return histogram_registers(
             batch_df, self.value_col, self.lo, self.hi, self.n_bins,
             by=self.by)
-        # the epoch id and the partial land in the SAME atomic manifest
-        # commit — a crash loses or lands both together (snapshot_sink
-        # contract); an empty batch still lands so the epoch is recorded
-        self.table.append(partial,
-                          extra={"stream_batch_ids": [batch_id]})
-        self._seen.add(batch_id)
 
     def registers(self, snapshot_id: Optional[int] = None) -> DataFrame:
         """The merged register view at a state version (latest by
@@ -90,9 +78,8 @@ class HistogramSketchMaintainer:
 
     def compact_registers(self) -> int:
         """Fold all landed partials into one base commit (monoid-safe
-        at any time); returns the new snapshot id.  Epoch ids remain
-        reachable through the overwrite commit's parent chain."""
-        return self.table.overwrite(self.registers())
+        at any time); returns the new snapshot id."""
+        return self.fold(self.registers())
 
 
 def stream_histogram_sketch(
@@ -108,19 +95,10 @@ def stream_histogram_sketch(
     value_schema=None,
     maintainer: Optional[HistogramSketchMaintainer] = None,
 ):
-    """Continuously sketch a parquet value-file stream into the
-    register table at ``table_dir``.  availableNow trigger: drains
-    what is present and stops (the testable catch-up mode).  Returns
-    (StreamingQuery, HistogramSketchMaintainer).
+    """Drain a parquet value-file stream into the register table at
+    ``table_dir``.  Returns (StreamingQuery, HistogramSketchMaintainer).
     """
     m = maintainer or HistogramSketchMaintainer(
         spark, table_dir, value_col, lo, hi, n_bins, by=by)
-    schema = value_schema or spark.read.parquet(values_dir).schema
-    stream = spark.readStream.schema(schema).parquet(values_dir)
-    q = (
-        stream.writeStream.foreachBatch(m)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = drain(source(spark, values_dir, value_schema), m, checkpoint_dir)
     return q, m

@@ -1,4 +1,5 @@
-"""Exactly-once streaming sink into the snapshot table format.
+"""Exactly-once streaming sink into the snapshot table format — the
+package's one epoch-idempotent appender.
 
 Structured Streaming's file/parquet sinks give at-least-once file output
 with their own _spark_metadata log; this sink instead lands every
@@ -12,13 +13,19 @@ epoch id rides INSIDE the table's atomic manifest commit (the
 ``extra`` annotation of SnapshotTable.append) — there is no window
 between data landing and the epoch being recorded.  A crash between
 the table commit and the streaming checkpoint advance therefore costs
-a no-op replay, never a duplicate append.  The replay check walks the
-manifest PARENT CHAIN (``stream_batch_ids`` per commit), so
-interleaved maintenance commits (compaction, deletes) do not mask
-prior stream epochs.
+a no-op replay, never a duplicate append.
+
+The replay check walks the manifest PARENT CHAIN (``stream_batch_ids``
+per commit), so interleaved maintenance commits (compaction, deletes)
+do not mask prior stream epochs.  ``fold`` — the maintainers'
+compaction — records the whole epoch set in its overwrite commit and the
+walk stops there, so expiring the snapshots below a fold keeps every
+epoch.  Expiring below any OTHER commit loses epoch records: the walk
+then meets a missing manifest and raises instead of answering with a
+partial set.
 
 Scale posture: one manifest read per micro-batch (O(chain) on first call,
-then cached high-water mark); the append itself is the table's normal
+then cached in ``_seen``); the append itself is the table's normal
 optimistic commit — no extra shuffle, no coordination beyond the atomic
 manifest claim.
 """
@@ -31,32 +38,43 @@ from claimskg_generator_spark.sources.snapshot_table import (
     SnapshotTable,
     SnapshotTableError,
 )
+from claimskg_generator_spark.streaming.drain import drain
 
 
 def committed_stream_batch_ids(table: SnapshotTable) -> Set[int]:
-    """All stream batch ids recorded anywhere in the current snapshot's
-    parent chain (maintenance commits in between inherit implicitly —
-    the chain is the table's lineage)."""
+    """All stream batch ids recorded in the current snapshot's parent
+    chain, down to the newest ``fold`` commit (which records every epoch
+    before it).  An empty table has none; a missing or unreadable
+    manifest in the chain raises SnapshotTableError."""
     ids: Set[int] = set()
-    try:
-        sid = table.current_snapshot_id()
-        while sid is not None:
+    sid = table.current_snapshot_id()
+    while sid is not None:
+        try:
             m = table.manifest(sid)
-            ids.update(m.get("stream_batch_ids", []))
-            sid = m.get("parent_id")
-    except SnapshotTableError:
-        pass
+        except SnapshotTableError as exc:
+            raise SnapshotTableError(
+                f"stream epoch chain broken at snapshot {sid} ({exc}); "
+                "expire snapshots only below a fold") from exc
+        ids.update(m.get("stream_batch_ids", []))
+        if m["operation"] == "overwrite" and "stream_batch_ids" in m:
+            break
+        sid = m["parent_id"]
     return ids
 
 
 class SnapshotTableStreamWriter:
-    """``foreachBatch`` target: append each micro-batch as one snapshot
-    commit, idempotent on ``batch_id`` across restarts and replays."""
+    """``foreachBatch`` target: append each micro-batch's ``partial`` as
+    one snapshot commit, idempotent on ``batch_id`` across restarts and
+    replays.  Maintainers override ``partial`` only."""
 
     def __init__(self, spark: SparkSession, table_dir: str,
                  stat_cols=()):
         self.table = SnapshotTable(spark, table_dir, stat_cols=stat_cols)
         self._seen: Optional[Set[int]] = None
+
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        """The frame one micro-batch lands: the batch itself here."""
+        return batch_df
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._seen is None:
@@ -64,10 +82,21 @@ class SnapshotTableStreamWriter:
         if batch_id in self._seen:
             return  # replayed epoch: the commit already landed
         # the epoch id is part of the SAME atomic manifest commit as the
-        # data — a crash can only lose or land BOTH together
-        self.table.append(batch_df,
+        # data — a crash can only lose or land BOTH together; an empty
+        # batch still lands so the epoch is recorded
+        self.table.append(self.partial(batch_df),
                           extra={"stream_batch_ids": [batch_id]})
         self._seen.add(batch_id)
+
+    def fold(self, view: DataFrame) -> int:
+        """Overwrite the table with ``view`` (the folded state) in one
+        commit that also records every epoch committed so far; returns
+        the new snapshot id."""
+        ids = committed_stream_batch_ids(self.table)
+        sid = self.table.overwrite(
+            view, extra={"stream_batch_ids": sorted(ids)})
+        self._seen = ids
+        return sid
 
 
 def write_stream_to_snapshot_table(
@@ -75,15 +104,9 @@ def write_stream_to_snapshot_table(
     table_dir: str,
     checkpoint_dir: str,
     stat_cols=(),
-    trigger_available_now: bool = True,
 ):
-    """Wire a streaming DataFrame into a snapshot table; returns the
-    started StreamingQuery.  ``trigger_available_now`` drains what exists
-    and stops (the testable catch-up mode)."""
+    """Drain a streaming DataFrame into a snapshot table; returns the
+    started StreamingQuery."""
     writer = SnapshotTableStreamWriter(
         stream_df.sparkSession, table_dir, stat_cols=stat_cols)
-    w = stream_df.writeStream.foreachBatch(writer).option(
-        "checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return drain(stream_df, writer, checkpoint_dir)

@@ -30,34 +30,22 @@ from claimskg_generator_spark.operators.kg_stats import (
     void_estimate,
     void_sketch,
 )
-from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
+from claimskg_generator_spark.streaming.drain import drain, source
 from claimskg_generator_spark.streaming.snapshot_sink import (
-    committed_stream_batch_ids,
+    SnapshotTableStreamWriter,
 )
 
 
-class VoidSketchMaintainer:
+class VoidSketchMaintainer(SnapshotTableStreamWriter):
     """``foreachBatch`` target: land each micro-batch's partial VoID
     sketch as one epoch-stamped atomic commit."""
 
     def __init__(self, spark: SparkSession, table_dir: str, p: int = 12):
         self.p = p
-        self.table = SnapshotTable(
-            spark, table_dir, stat_cols=("scope", "metric"))
-        self._seen = None
+        super().__init__(spark, table_dir, stat_cols=("scope", "metric"))
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._seen is None:
-            self._seen = committed_stream_batch_ids(self.table)
-        if batch_id in self._seen:
-            return  # replayed epoch: its partial already landed
-        partial = void_sketch(
-            batch_df.select("subj", "pred", "obj"), p=self.p)
-        # epoch id + partial land in the SAME atomic manifest commit;
-        # an empty batch still lands so the epoch is recorded
-        self.table.append(partial,
-                          extra={"stream_batch_ids": [batch_id]})
-        self._seen.add(batch_id)
+    def partial(self, batch_df: DataFrame) -> DataFrame:
+        return void_sketch(batch_df.select("subj", "pred", "obj"), p=self.p)
 
     def sketch(self, snapshot_id: Optional[int] = None) -> DataFrame:
         """The merged sketch at a state version (latest by default):
@@ -74,9 +62,8 @@ class VoidSketchMaintainer:
 
     def compact(self) -> int:
         """Fold all landed partials into one base commit (monoid-safe
-        at any time); returns the new snapshot id.  Epoch ids remain
-        reachable through the overwrite commit's parent chain."""
-        return self.table.overwrite(self.sketch())
+        at any time); returns the new snapshot id."""
+        return self.fold(self.sketch())
 
 
 def stream_void_sketch(
@@ -88,18 +75,9 @@ def stream_void_sketch(
     triple_schema=None,
     maintainer: Optional[VoidSketchMaintainer] = None,
 ):
-    """Continuously sketch a parquet triple-file stream into the VoID
-    register table at ``table_dir``.  availableNow trigger: drains what
-    is present and stops (the testable catch-up mode).  Returns
-    (StreamingQuery, VoidSketchMaintainer).
+    """Drain a parquet triple-file stream into the VoID register table
+    at ``table_dir``.  Returns (StreamingQuery, VoidSketchMaintainer).
     """
     m = maintainer or VoidSketchMaintainer(spark, table_dir, p=p)
-    schema = triple_schema or spark.read.parquet(triples_dir).schema
-    stream = spark.readStream.schema(schema).parquet(triples_dir)
-    q = (
-        stream.writeStream.foreachBatch(m)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = drain(source(spark, triples_dir, triple_schema), m, checkpoint_dir)
     return q, m

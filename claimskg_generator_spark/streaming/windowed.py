@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from claimskg_generator_spark.streaming.drain import drain, source
+
 EVENT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -52,11 +54,7 @@ def windowed_event_counts(
     """Drain the input directory (availableNow) into per-window,
     per-event-type counts/sums, appending finalized windows to parquet.
     Returns the StreamingQuery (caller awaits termination)."""
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
+    stream = source(spark, input_dir, EVENT_SCHEMA)
     agg = (
         stream.withWatermark("ts", delay)
         .groupBy(F.window("ts", window), "event_type")
@@ -72,14 +70,7 @@ def windowed_event_counts(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(agg, output_dir, checkpoint_dir)
 
 
 def sessionized_event_counts(
@@ -97,11 +88,7 @@ def sessionized_event_counts(
     watermark passes its end, i.e. once no in-order event can extend it;
     rows older than the watermark are dropped.  State holds only open
     sessions — bounded by active users, not stream length."""
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
+    stream = source(spark, input_dir, EVENT_SCHEMA)
     agg = (
         stream.withWatermark("ts", delay)
         .groupBy(F.session_window("ts", gap), "user_id")
@@ -117,11 +104,4 @@ def sessionized_event_counts(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(agg, output_dir, checkpoint_dir)

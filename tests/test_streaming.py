@@ -448,7 +448,10 @@ def test_snapshot_sink_exactly_once(spark):
     epochs = committed_stream_batch_ids(t)
     assert epochs and len(epochs) == len(t.snapshots())
     # every snapshot carries its epoch inside the committed manifest
-    assert all("stream_batch_ids" in s or True for s in t.snapshots())
+    appends = [t.manifest(s["snapshot_id"]) for s in t.snapshots()]
+    assert all(m["operation"] == "append"
+               and len(m["stream_batch_ids"]) == 1 for m in appends)
+    assert {m["stream_batch_ids"][0] for m in appends} == epochs
 
     # direct replay of an already-committed epoch: no-op
     w = SnapshotTableStreamWriter(spark, f"{base}/table")
