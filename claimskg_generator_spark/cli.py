@@ -26,6 +26,12 @@ from pyspark.sql import SparkSession
 from claimskg_generator_spark.constants.namespaces import DEFAULT_MODEL_URI
 from claimskg_generator_spark.operators.cache import release
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
+from claimskg_generator_spark.plans.sinks import (
+    FORMATS,
+    pred_family_graph,
+    with_graph,
+    write_nquads,
+)
 
 
 def build_arg_parser() -> argparse.ArgumentParser:
@@ -35,8 +41,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
                    help="synthesize N corpus rows instead of reading --input")
     p.add_argument("--output", required=True, help="triple table output path")
     p.add_argument("--format", default="parquet",
-                   choices=["parquet", "ntriples", "nquads", "turtle",
-                            "xml", "json-ld", "n3", "snapshot"])
+                   choices=[*FORMATS, "snapshot"])
     p.add_argument("--snapshot-mode", default="append",
                    choices=["append", "overwrite"],
                    help="with --format snapshot: append commits a new "
@@ -261,6 +266,12 @@ def _main(argv) -> int:
     if args.sample is not None and args.samples is not None:
         parser.error("--sample (fraction) and --samples (exact seeded "
                      "count) are mutually exclusive")
+    if args.pred_buckets and args.format != "parquet":
+        parser.error("--pred-buckets lays out the parquet triple table; "
+                     "use --format parquet")
+    if args.output_partitions and args.format not in ("parquet", "snapshot"):
+        parser.error("--output-partitions lays out parquet files; the "
+                     f"{args.format} sink writes one sorted document")
     thesaurus_specs = [_parse_thesaurus_spec(parser, s)
                        for s in args.thesaurus]
 
@@ -366,27 +377,16 @@ def _main(argv) -> int:
     elif args.format == "parquet":
         pipe.write_triples(triples, args.output, args.output_partitions,
                            args.pred_buckets)
-    elif args.format in ("turtle", "n3"):
-        # every Turtle document is valid N3, mirroring rdflib's aliasing
-        pipe.write_turtle(triples, args.output)
-    elif args.format == "xml":
-        pipe.write_rdfxml(triples, args.output)
-    elif args.format == "json-ld":
-        pipe.write_jsonld(triples, args.output)
+    elif args.format == "ntriples":
+        pipe.write_ntriples(triples, args.output)
     elif args.format == "nquads":
-        from claimskg_generator_spark.plans.pipeline import (
-            pred_family_graph,
-            with_graph,
-            write_nquads,
-        )
-
         # per-predicate-family publication partition, the claims-side
         # twin of code_kg_cli --nquads-output
         write_nquads(with_graph(triples,
                                 pred_family_graph("urn:claimskg:graph:")),
                      args.output)
     else:
-        pipe.write_ntriples(triples, args.output)
+        FORMATS[args.format](triples, args.output)
 
     if args.mappings_output and args.reconcile > 0:
         from claimskg_generator_spark.operators.reconcile import (

@@ -60,6 +60,16 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from claimskg_generator_spark.operators.cache import release
+from claimskg_generator_spark.plans.sinks import (
+    pred_family_graph,
+    with_graph,
+    write_nquads,
+    write_ntriples,
+    write_parquet,
+)
+
+# named-graph prefix of the per-predicate-family publication partition
+CODE_GRAPHS = "urn:code:graph:"
 
 
 def build_arg_parser() -> argparse.ArgumentParser:
@@ -82,14 +92,14 @@ def build_arg_parser() -> argparse.ArgumentParser:
                           "additional to --table-dir)")
     out.add_argument("--ntriples-output",
                      help="canonical sorted N-Triples serialization of "
-                          "the graph (plans/pipeline.write_ntriples)")
+                          "the graph (plans/sinks.write_ntriples)")
     out.add_argument("--nquads-output",
                      help="canonical sorted N-Quads serialization with "
                           "one named graph per predicate family "
                           "(urn:code:graph:<local-name>) — the "
                           "publication partition GRAPH queries and "
                           "FROM/FROM NAMED datasets address "
-                          "(plans/pipeline.write_nquads)")
+                          "(plans/sinks.write_nquads)")
     out.add_argument("--links-output",
                      help="entity-link table output (parquet)")
     out.add_argument("--canonical-output",
@@ -534,12 +544,7 @@ def _build_graph(spark, args, summary):
         # a pure projection AFTER the (possibly entailed) graph is
         # final — entailed rows get their family graph too; checkpoint
         # stages stay graph-free (re-attach is free on resume)
-        from claimskg_generator_spark.operators.code_kg import (
-            pred_graph_col,
-        )
-        from claimskg_generator_spark.plans.pipeline import with_graph
-
-        triples = with_graph(triples, pred_graph_col())
+        triples = with_graph(triples, pred_family_graph(CODE_GRAPHS))
 
     if args.table_dir:
         # commit-once gate: the materialize itself is a stage boundary
@@ -569,28 +574,14 @@ def _build_graph(spark, args, summary):
                               _t.time() - t0, args.table_dir))
             summary["snapshot_id"] = sid
     if args.output:
-        triples.write.mode("overwrite").parquet(args.output)
+        write_parquet(triples, args.output)
     if args.ntriples_output:
-        from claimskg_generator_spark.plans.pipeline import (
-            write_ntriples,
-        )
-
         write_ntriples(triples, args.ntriples_output)
     if args.nquads_output:
-        from claimskg_generator_spark.plans.pipeline import (
-            with_graph,
-            write_nquads,
-        )
-
         # one named graph per predicate family (pure projection — the
         # same quads model q130/q133 query back via GRAPH / FROM NAMED)
-        from claimskg_generator_spark.operators.code_kg import (
-            pred_graph_col,
-        )
-
-        nq = (triples if "graph" in triples.columns
-              else with_graph(triples, pred_graph_col()))
-        write_nquads(nq, args.nquads_output)
+        write_nquads(with_graph(triples, pred_family_graph(CODE_GRAPHS)),
+                     args.nquads_output)
     if args.links_output:
         link_modules(files, min_repos=args.min_repos,
                      threshold=args.link_threshold,

@@ -77,7 +77,7 @@ def _escape_nt(text: str) -> str:
 def to_ntriples_line(subj: str, pred: str, obj: str, okind: str) -> str:
     """Canonical N-Triples rendering of one triple row.  Blank-node
     labels (``_:…``) are legal subject/object terms and stay
-    unbracketed — matching plans/pipeline.write_ntriples."""
+    unbracketed — matching plans/sinks.write_ntriples."""
     s = subj if subj.startswith("_:") else f"<{subj}>"
     p = f"<{pred}>"
     if okind == OKIND_URI:

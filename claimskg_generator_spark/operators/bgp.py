@@ -32,7 +32,7 @@ filter.  Duplicate rows follow SQL bag semantics (SPARQL's default);
 ``distinct=True`` applies the set projection.
 
 **Named graphs (quads)**: when the input frame carries a ``graph``
-column (the :func:`~claimskg_generator_spark.plans.pipeline.with_graph`
+column (the :func:`~claimskg_generator_spark.plans.sinks.with_graph`
 / N-Quads data model — NULL graph == the default graph), a pattern may
 be a 4-tuple ``(s, p, o, g)`` whose graph term is a ``?var`` (binds
 the graph name, NULL-graph rows excluded — SPARQL ``GRAPH ?g`` ranges
@@ -227,7 +227,7 @@ def bgp_query(
         if len(t) == 4 and t[3] is not None and not has_graph:
             raise ValueError(
                 f"quad pattern {t!r} needs a 'graph' column on the "
-                "input frame (see plans.pipeline.with_graph)")
+                "input frame (see plans.sinks.with_graph)")
         if not any(_is_var(x) for x in t if x is not None):
             raise ValueError(
                 f"pattern {t!r} has no variables; ASK-style existence "

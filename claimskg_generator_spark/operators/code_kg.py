@@ -402,16 +402,6 @@ def apply_diff(table, diff: DataFrame) -> int:
     return table.overwrite(updated)
 
 
-def pred_graph_col(pred_col: str = "pred"):
-    """Predicate-family named-graph URI for a triple row —
-    ``urn:code:graph:<local-name>``: the publication partition the
-    N-Quads sink writes and GRAPH / FROM / FROM NAMED queries address
-    (plans/pipeline.pred_family_graph with the code-KG prefix)."""
-    from claimskg_generator_spark.plans.pipeline import pred_family_graph
-
-    return pred_family_graph("urn:code:graph:", pred_col)
-
-
 def code_kg_lineage(files: DataFrame, scheme: str = "md5") -> DataFrame:
     """Per-partition lineage rows (north rule: "per-partition lineage
     rows (input split, sha256 of content, triple counts)").  The triple

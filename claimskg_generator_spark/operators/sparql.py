@@ -147,7 +147,7 @@ whose subject is a described node) as a set-deduped
 ``(subj, pred, obj)`` graph.
 
 ``GRAPH`` blocks query the named graphs of a QUADS frame (a ``graph``
-column — the :func:`~claimskg_generator_spark.plans.pipeline.with_graph`
+column — the :func:`~claimskg_generator_spark.plans.sinks.with_graph`
 / N-Quads data model; NULL graph == default graph): every pattern
 inside ``GRAPH g { … }`` becomes a quad carrying ``g``, so a ``?g``
 term binds the graph name per row (ranging over NAMED graphs only, the

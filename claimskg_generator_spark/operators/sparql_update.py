@@ -705,7 +705,7 @@ def apply_update(graph: DataFrame, update: str,
             raise ValueError(
                 "this update uses WITH/USING/GRAPH (named-graph "
                 "scoping) — it needs a quads frame (a 'graph' column, "
-                "NULL == default graph; see plans.pipeline.with_graph)")
+                "NULL == default graph; see plans.sinks.with_graph)")
     dels, ins = _delta(graph, u, stats, charsets, quads=quads)
     kept = graph if dels is None else _anti(graph, dels, quads)
     if ins is None:

@@ -39,7 +39,7 @@ from claimskg_generator_spark.operators.sparql_update import (
     apply_update,
     update_delta,
 )
-from claimskg_generator_spark.plans.pipeline import with_graph, write_ntriples
+from claimskg_generator_spark.plans.sinks import with_graph, write_ntriples
 from claimskg_generator_spark.queries import query
 from claimskg_generator_spark.queries.common import (
     _CODE_FILES_CTE,
@@ -736,7 +736,7 @@ def _q130_oracle_sql() -> str:
 def q130_kg_sparql_graph(spark, sf_dir):
     """SPARQL GRAPH named-graph patterns over a QUADS frame
     (operators/sparql + operators/bgp quad patterns; data model =
-    plans/pipeline.with_graph / the q129 N-Quads sink: NULL graph ==
+    plans/sinks.with_graph / the q129 N-Quads sink: NULL graph ==
     default graph).  The code KG's repo and language edges are
     published into named graphs ('urn:graph:repos' / 'urn:graph:langs')
     with everything else left in the default graph; the query exercises
@@ -1401,7 +1401,7 @@ def _q143_oracle_sql() -> str:
 def q143_kg_sparql_load(spark, sf_dir):
     """SPARQL UPDATE LOAD (operators/sparql_update — SPARQL 1.1
     §3.1.4): the repo-dependency triples are serialized to canonical
-    N-Triples (plans/pipeline.write_ntriples) and LOADed back INTO a
+    N-Triples (plans/sinks.write_ntriples) and LOADed back INTO a
     named graph of the quads publication store — the
     federation/ingestion verb that completes the UPDATE surface (a
     partner KG's dump lands in its own named graph).  The document is

@@ -53,7 +53,7 @@ import json
 import os
 import time
 import uuid
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Set, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -201,6 +201,39 @@ class SnapshotTable:
                     "n_files": len(m["files"]),
                 })
         return out
+
+    def stream_batch_ids(self, snapshot_id: Optional[int] = None) -> Set[int]:
+        """All stream batch ids (streaming/snapshot_sink epochs) recorded
+        in the parent chain of ``snapshot_id`` (default: the current
+        one).  The walk stops at the newest commit that is not an append
+        and records them: a fold or a compact/delete/merge of a
+        stream-fed table records every epoch before it.  An empty table
+        has none; a missing or unreadable manifest in the chain raises
+        SnapshotTableError."""
+        ids: Set[int] = set()
+        sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
+        while sid is not None:
+            try:
+                m = self.manifest(sid)
+            except SnapshotTableError as exc:
+                raise SnapshotTableError(
+                    f"stream epoch chain broken at snapshot {sid} ({exc}); "
+                    "expire snapshots only below a fold or a "
+                    "compaction") from exc
+            ids.update(m.get("stream_batch_ids", []))
+            if m["operation"] != "append" and "stream_batch_ids" in m:
+                break
+            sid = m["parent_id"]
+        return ids
+
+    def _carried_epochs(self, base: int) -> Dict:
+        """``extra`` for a compact/delete/merge commit on ``base``: on a
+        stream-fed table (``base`` records epochs) the rewrite records
+        every epoch so far, so expiring the snapshots below it keeps
+        them."""
+        if "stream_batch_ids" not in self.manifest(base):
+            return {}
+        return {"stream_batch_ids": sorted(self.stream_batch_ids(base))}
 
     # ---- writes ----
 
@@ -414,7 +447,8 @@ class SnapshotTable:
         entries = [e for e in _collect_file_stats(
             self.spark, new_files, self.stat_cols) if e["rows"] > 0]
         return self._commit(kept + entries, "merge", schema,
-                            require_parent=base)
+                            require_parent=base,
+                            extra=self._carried_epochs(base))
 
     def _require_unique_keys(self, updates: DataFrame, key: str) -> None:
         from pyspark.sql import functions as F
@@ -508,7 +542,8 @@ class SnapshotTable:
                 self.spark, new_files, self.stat_cols) if e["rows"] > 0]
         schema = [tuple(cc) for cc in m["schema"]]
         return self._commit(kept + entries, "delete", schema,
-                            require_parent=base)
+                            require_parent=base,
+                            extra=self._carried_epochs(base))
 
     def compact(self, target_file_bytes: int = 128 << 20) -> int:
         """Bin-pack files smaller than ``target_file_bytes`` into
@@ -538,7 +573,8 @@ class SnapshotTable:
                 f"compaction row mismatch: rewrote {got} of {want} rows")
         schema = [tuple(cc) for cc in m["schema"]]
         return self._commit(big + entries, "compact", schema,
-                            require_parent=base)
+                            require_parent=base,
+                            extra=self._carried_epochs(base))
 
     # ---- snapshot expiry + garbage collection ----
 

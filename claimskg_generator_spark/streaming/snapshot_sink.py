@@ -16,13 +16,12 @@ the table commit and the streaming checkpoint advance therefore costs
 a no-op replay, never a duplicate append.
 
 The replay check walks the manifest PARENT CHAIN (``stream_batch_ids``
-per commit), so interleaved maintenance commits (compaction, deletes)
-do not mask prior stream epochs.  ``fold`` — the maintainers'
-compaction — records the whole epoch set in its overwrite commit and the
-walk stops there, so expiring the snapshots below a fold keeps every
-epoch.  Expiring below any OTHER commit loses epoch records: the walk
-then meets a missing manifest and raises instead of answering with a
-partial set.
+per commit).  ``fold`` — the maintainers' compaction — records the
+whole epoch set in its overwrite commit, and so do the table's own
+compact/delete/merge commits on a stream-fed table; the walk stops
+there, so expiring the snapshots below such a commit keeps every epoch.
+Expiring below any OTHER commit loses epoch records: the walk then meets
+a missing manifest and raises instead of answering with a partial set.
 
 Scale posture: one manifest read per micro-batch (O(chain) on first call,
 then cached in ``_seen``); the append itself is the table's normal
@@ -34,32 +33,14 @@ from typing import Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession
 
-from claimskg_generator_spark.sources.snapshot_table import (
-    SnapshotTable,
-    SnapshotTableError,
-)
+from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
 from claimskg_generator_spark.streaming.drain import drain
 
 
 def committed_stream_batch_ids(table: SnapshotTable) -> Set[int]:
-    """All stream batch ids recorded in the current snapshot's parent
-    chain, down to the newest ``fold`` commit (which records every epoch
-    before it).  An empty table has none; a missing or unreadable
-    manifest in the chain raises SnapshotTableError."""
-    ids: Set[int] = set()
-    sid = table.current_snapshot_id()
-    while sid is not None:
-        try:
-            m = table.manifest(sid)
-        except SnapshotTableError as exc:
-            raise SnapshotTableError(
-                f"stream epoch chain broken at snapshot {sid} ({exc}); "
-                "expire snapshots only below a fold") from exc
-        ids.update(m.get("stream_batch_ids", []))
-        if m["operation"] == "overwrite" and "stream_batch_ids" in m:
-            break
-        sid = m["parent_id"]
-    return ids
+    """All stream batch ids committed to ``table``
+    (SnapshotTable.stream_batch_ids of its current snapshot)."""
+    return table.stream_batch_ids()
 
 
 class SnapshotTableStreamWriter:

@@ -116,6 +116,14 @@ def test_cli_argument_validation():
     with pytest.raises(SystemExit):
         main(["--synth", "10", "--output", "/tmp/x",
               "--thesaurus", "no-equals-sign"])
+    # layout options a sink would ignore are argparse errors: pred buckets
+    # lay out only the parquet table, output partitions only parquet files
+    with pytest.raises(SystemExit):
+        main(["--synth", "10", "--output", "/tmp/x", "--format", "turtle",
+              "--pred-buckets", "8"])
+    with pytest.raises(SystemExit):
+        main(["--synth", "10", "--output", "/tmp/x", "--format", "ntriples",
+              "--output-partitions", "4"])
 
 
 def test_cli_synth_end_to_end(spark):

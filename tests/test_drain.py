@@ -118,3 +118,28 @@ def test_broken_epoch_chain_raises(spark):
     os.remove(_manifest_path(tbl, 2))
     with pytest.raises(SnapshotTableError, match="broken at snapshot 2"):
         committed_stream_batch_ids(w.table)
+
+
+@pytest.mark.parametrize("maintain", [
+    lambda t: t.compact(),
+    lambda t: t.delete(("x", "=", 99)),
+    lambda t: t.merge(t.spark.createDataFrame([(1,)], "x bigint"), "x"),
+], ids=["compact", "delete", "merge"])
+def test_replay_after_table_maintenance_and_expiry(spark, maintain):
+    """The table's own compact/delete/merge on a stream-fed table record
+    the epoch set like a fold, so expiring everything below them neither
+    breaks the chain nor lets a replayed epoch land twice."""
+    tbl = tempfile.mkdtemp(prefix="claimskg_maint_") + "/tbl"
+    w = SnapshotTableStreamWriter(spark, tbl)
+    for epoch in range(3):
+        w(spark.createDataFrame([(epoch,)], "x bigint"), batch_id=epoch)
+    maintain(w.table)
+    w.table.expire_snapshots(keep_last=1)
+    rows = w.table.read().count()
+
+    fresh = SnapshotTableStreamWriter(spark, tbl)
+    fresh(spark.createDataFrame([(1,)], "x bigint"), batch_id=1)
+    assert fresh.table.read().count() == rows
+    fresh(spark.createDataFrame([(3,)], "x bigint"), batch_id=3)
+    assert fresh.table.read().count() == rows + 1
+    assert committed_stream_batch_ids(fresh.table) == {0, 1, 2, 3}

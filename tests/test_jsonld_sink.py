@@ -8,6 +8,7 @@ import json
 import tempfile
 
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
+from claimskg_generator_spark.plans.sinks import write_jsonld
 from claimskg_generator_spark.sources.synth import gen_rows
 
 
@@ -45,7 +46,7 @@ def test_jsonld_roundtrip(spark):
     want = {tuple(r) for r in triples.collect()}
 
     out = tempfile.mkdtemp(prefix="claimskg_jsonld_") + "/graph"
-    pipe.write_jsonld(triples, out)
+    write_jsonld(triples, out)
     got = _triples_from_jsonld(_read_document(out))
     assert got == want
     kinds = {k for _, _, _, k in want}
@@ -62,11 +63,25 @@ def test_jsonld_escaping(spark):
     df = spark.createDataFrame(
         rows, "subj string, pred string, obj string, okind string"
     )
-    pipe = ClaimsKGPipeline(spark, PipelineConfig())
     out = tempfile.mkdtemp(prefix="claimskg_jsonld_esc_") + "/graph"
-    pipe.write_jsonld(df, out)
+    write_jsonld(df, out)
     got = _triples_from_jsonld(_read_document(out))
     assert got == {tuple(r) for r in rows}
+
+
+def test_cli_jsonld_matches_parquet(spark):
+    """--format json-ld parses back to the --format parquet triple set of
+    the same corpus."""
+    from claimskg_generator_spark.cli import main
+
+    out = tempfile.mkdtemp(prefix="claimskg_cli_")
+    assert main(["--synth", "30", "--output", out + "/jsonld",
+                 "--format", "json-ld"]) == 0
+    assert main(["--synth", "30", "--output", out + "/parquet",
+                 "--format", "parquet"]) == 0
+    want = {tuple(r) for r in spark.read.parquet(out + "/parquet").collect()}
+    assert want
+    assert _triples_from_jsonld(_read_document(out + "/jsonld")) == want
 
 
 def test_cli_n3_alias(spark):

@@ -104,8 +104,8 @@ def test_pred_bucket_layout_prunes(spark):
     import glob
     import tempfile
 
-    from claimskg_generator_spark.plans.pipeline import (
-        ClaimsKGPipeline,
+    from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline
+    from claimskg_generator_spark.plans.sinks import (
         pred_bucket,
         pred_bucket_col,
     )
@@ -149,50 +149,6 @@ def test_pred_bucket_layout_prunes(spark):
         .select(pred_bucket_col(16).alias("b")).first()["b"]
     )
     assert twin == b
-
-
-def test_turtle_grouped_subjects(spark):
-    """Subject-grouped Turtle: one `s p o ; p o .` block per subject, same
-    triple content as the line-per-triple form."""
-    import glob
-    import tempfile
-
-    from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline
-    from claimskg_generator_spark.sources.synth import gen_rows
-
-    pipe = ClaimsKGPipeline(spark)
-    triples = pipe.triples(spark.createDataFrame(gen_rows(40))).cache()
-    flat_dir = tempfile.mkdtemp(prefix="claimskg_ttl_") + "/flat"
-    grp_dir = tempfile.mkdtemp(prefix="claimskg_ttl_") + "/grp"
-    pipe.write_turtle(triples, flat_dir)
-    pipe.write_turtle(triples, grp_dir, group_subjects=True)
-
-    def read_lines(d):
-        out = []
-        for f in glob.glob(d + "/part-*.txt"):
-            out.extend(open(f).read().splitlines())
-        return out
-
-    def to_triples(lines):
-        """normalize both forms back to (s, p, o) statement strings"""
-        stmts = set()
-        subj = None
-        for line in lines:
-            if line.startswith("@prefix") or not line.strip():
-                continue
-            body = line.strip()
-            if subj is None:
-                subj, body = body.split(" ", 1)
-            assert body.endswith((";", "."))
-            stmts.add(f"{subj} {body[:-1].strip()}")
-            subj = None if body.endswith(".") else subj
-        return stmts
-
-    flat = to_triples(read_lines(flat_dir))
-    grouped = to_triples([l.lstrip() for l in read_lines(grp_dir)])
-    assert flat == grouped
-    # grouping actually produced multi-statement blocks
-    assert any(l.rstrip().endswith(";") for l in read_lines(grp_dir))
 
 
 def test_decontamination_train_side_never_shuffles(spark):

@@ -8,6 +8,7 @@ import tempfile
 import xml.etree.ElementTree as ET
 
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
+from claimskg_generator_spark.plans.sinks import write_rdfxml
 from claimskg_generator_spark.sources.synth import gen_rows
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -50,7 +51,7 @@ def test_rdfxml_roundtrip_200_claims(spark):
     want = {tuple(r) for r in triples.collect()}
 
     out = tempfile.mkdtemp(prefix="claimskg_xml_") + "/graph"
-    pipe.write_rdfxml(triples, out)
+    write_rdfxml(triples, out)
     doc = _read_document(out)
     assert doc.startswith('<?xml version="1.0" encoding="utf-8"?>')
     got = _triples_from_xml(doc)
@@ -72,9 +73,8 @@ def test_rdfxml_escaping_and_unknown_namespaces(spark):
     df = spark.createDataFrame(
         rows, "subj string, pred string, obj string, okind string"
     )
-    pipe = ClaimsKGPipeline(spark, PipelineConfig())
     out = tempfile.mkdtemp(prefix="claimskg_xml_esc_") + "/graph"
-    pipe.write_rdfxml(df, out)
+    write_rdfxml(df, out)
     got = _triples_from_xml(_read_document(out))
     assert got == {tuple(r) for r in rows}
 
@@ -94,9 +94,8 @@ def test_rdfxml_control_chars(spark):
     df = spark.createDataFrame(
         rows, "subj string, pred string, obj string, okind string"
     )
-    pipe = ClaimsKGPipeline(spark, PipelineConfig())
     out = tempfile.mkdtemp(prefix="claimskg_xml_ctl_") + "/graph"
-    pipe.write_rdfxml(df, out)
+    write_rdfxml(df, out)
     got = _triples_from_xml(_read_document(out))
     assert ("http://ex.org/s", "http://schema.org/text",
             "line1\rline2\twith\ntab", "") in got
@@ -114,10 +113,9 @@ def test_rdfxml_inexpressible_predicate_fails_clearly(spark):
         [("http://ex.org/s", "urn:x", "v", "")],
         "subj string, pred string, obj string, okind string",
     )
-    pipe = ClaimsKGPipeline(spark, PipelineConfig())
     out = tempfile.mkdtemp(prefix="claimskg_xml_bad_") + "/graph"
     with pytest.raises(Exception, match="not expressible"):
-        pipe.write_rdfxml(df, out)
+        write_rdfxml(df, out)
 
 
 def test_cli_xml_sink(spark):

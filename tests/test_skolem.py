@@ -69,7 +69,7 @@ def test_ntriples_blank_labels_unbracketed(spark, tmp_path):
     from claimskg_generator_spark.functions.rdfterms import (
         to_ntriples_line,
     )
-    from claimskg_generator_spark.plans.pipeline import write_ntriples
+    from claimskg_generator_spark.plans.sinks import write_ntriples
 
     assert to_ntriples_line("_:b1", "urn:p", "_:b2", "uri") == \
         "_:b1 <urn:p> _:b2 ."
@@ -108,7 +108,7 @@ def test_turtle_to_skolem_to_ntriples_roundtrip(spark, tmp_path):
     # docA's {_:b1, _:b2} and docB's are four DISTINCT nodes
     assert len({n for n in nodes if n.startswith("urn:skolem:")}) == 4
 
-    from claimskg_generator_spark.plans.pipeline import write_ntriples
+    from claimskg_generator_spark.plans.sinks import write_ntriples
 
     out = str(tmp_path / "nt")
     write_ntriples(sk.select("subj", "pred", "obj", "okind"), out)
@@ -121,7 +121,7 @@ def test_nquads_sink_named_and_default_graphs(spark, tmp_path):
     triple lines for NULL/empty graph (the W3C default-graph form);
     blank labels legal in subject/object/graph position; parses back
     to the same quad set."""
-    from claimskg_generator_spark.plans.pipeline import (
+    from claimskg_generator_spark.plans.sinks import (
         with_graph,
         write_nquads,
     )
