@@ -24,7 +24,6 @@ import sys
 from pyspark.sql import SparkSession
 
 from claimskg_generator_spark.constants.namespaces import DEFAULT_MODEL_URI
-from claimskg_generator_spark.operators.cache import release
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
 from claimskg_generator_spark.plans.sinks import (
     FORMATS,
@@ -32,6 +31,7 @@ from claimskg_generator_spark.plans.sinks import (
     with_graph,
     write_nquads,
 )
+from claimskg_generator_spark.session import product_session
 
 
 def build_arg_parser() -> argparse.ArgumentParser:
@@ -183,7 +183,7 @@ def _file_input_fingerprint(spark: SparkSession, args) -> str:
         content_probe=getattr(args, "checkpoint_content_probe", False))
 
 
-def _run_update(args, update_text: str) -> int:
+def _run_update(spark: SparkSession, args, update_text: str) -> int:
     """Standalone maintenance mode: one SPARQL UPDATE request as one
     atomic commit on the claims snapshot table at --output (the
     code_kg_cli --update twin; okind-aware — see sparql_update)."""
@@ -199,33 +199,14 @@ def _run_update(args, update_text: str) -> int:
     ops = parse_update_request(update_text)
     forms = "; ".join(op.kind if isinstance(op, ParsedGraphOp)
                       else op.form for op in ops)
-    spark = SparkSession.getActiveSession()
-    created = spark is None
-    if created:
-        spark = (SparkSession.builder.appName("claimskg-update")
-                 .config("spark.sql.adaptive.enabled", "true")
-                 .getOrCreate())
-    try:
-        table = SnapshotTable(spark, args.output,
-                              stat_cols=["pred", "subj"])
-        sid = apply_request_to_table(table, ops)
-        op = table.manifest(sid)["operation"]
-        print(f"committed snapshot {sid} to {args.output} "
-              f"({forms}, {op})")
-        return 0
-    finally:
-        if created:
-            spark.stop()
+    table = SnapshotTable(spark, args.output, stat_cols=["pred", "subj"])
+    sid = apply_request_to_table(table, ops)
+    op = table.manifest(sid)["operation"]
+    print(f"committed snapshot {sid} to {args.output} ({forms}, {op})")
+    return 0
 
 
 def main(argv=None) -> int:
-    try:
-        return _main(argv)
-    finally:
-        release()
-
-
-def _main(argv) -> int:
     parser = build_arg_parser()
     args = parser.parse_args(argv)
     update_text = args.update
@@ -240,7 +221,8 @@ def _main(argv) -> int:
         if args.format != "snapshot":
             parser.error("--update targets the snapshot table at "
                          "--output; pass --format snapshot")
-        return _run_update(args, update_text)
+        with product_session("claimskg-update") as spark:
+            return _run_update(spark, args, update_text)
     if not args.input and args.synth is None:
         print("either --input or --synth is required", file=sys.stderr)
         return 2
@@ -275,17 +257,12 @@ def _main(argv) -> int:
     thesaurus_specs = [_parse_thesaurus_spec(parser, s)
                        for s in args.thesaurus]
 
-    spark = (
-        SparkSession.builder.appName("claimskg_generator_spark")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # plan construction is py4j-round-trip bound (~10k calls for the
-        # full pipeline); per-op call-site capture adds ~20% on top
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
+    with product_session("claimskg_generator_spark") as spark:
+        return _build(spark, args, thesaurus_specs)
 
+
+def _build(spark: SparkSession, args, thesaurus_specs) -> int:
+    """One claims->RDF run (batch or streaming) and its side outputs."""
     config_kwargs = dict(
         model_uri=args.model_uri,
         threshold=args.threshold,

@@ -56,10 +56,8 @@ import hashlib
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from claimskg_generator_spark.operators.cache import release
 from claimskg_generator_spark.plans.sinks import (
     pred_family_graph,
     with_graph,
@@ -67,6 +65,7 @@ from claimskg_generator_spark.plans.sinks import (
     write_ntriples,
     write_parquet,
 )
+from claimskg_generator_spark.session import product_session
 
 # named-graph prefix of the per-predicate-family publication partition
 CODE_GRAPHS = "urn:code:graph:"
@@ -273,15 +272,8 @@ def main(argv=None) -> int:
               "snapshot manifests", file=sys.stderr)
         return 2
 
-    spark = SparkSession.getActiveSession()
-    created = spark is None
-    if created:
-        spark = (SparkSession.builder.appName("code-kg")
-                 .config("spark.sql.adaptive.enabled", "true")
-                 .getOrCreate())
-
     summary = {"stages": [], "counts": {}}
-    try:
+    with product_session("code-kg") as spark:
         triples = None
         files = None
         if building:
@@ -302,10 +294,6 @@ def main(argv=None) -> int:
             _run_query(spark, args, query_text, triples, summary)
         print(json.dumps(summary))
         return 0
-    finally:
-        release()
-        if created:
-            spark.stop()
 
 
 def _run_update(spark, args, update_text, summary) -> None:

@@ -38,7 +38,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from claimskg_generator_spark.operators.cache import release, share
+from claimskg_generator_spark.operators.cache import share
+from claimskg_generator_spark.session import product_session
 
 
 def build_arg_parser() -> argparse.ArgumentParser:
@@ -164,13 +165,6 @@ def _pairs(args, docs):
 
 
 def main(argv=None) -> int:
-    try:
-        return _main(argv)
-    finally:
-        release()
-
-
-def _main(argv) -> int:
     parser = build_arg_parser()
     args = parser.parse_args(argv)
     if args.method == "embedding" and args.dim is None:
@@ -185,13 +179,12 @@ def _main(argv) -> int:
         except ValueError as exc:
             parser.error(str(exc))
 
-    spark = (
-        SparkSession.builder.appName("claimskg_dedup")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    with product_session("claimskg_dedup") as spark:
+        return _dedup(spark, args, sample_rates)
+
+
+def _dedup(spark: SparkSession, args, sample_rates) -> int:
+    """Pairs, then the survivors through the optional gates and samplers."""
     from claimskg_generator_spark.operators.components import (
         dedup_corpus,
         dedup_groups,

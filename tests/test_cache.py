@@ -156,3 +156,39 @@ def test_pipeline_checkpoint_keeps_caller_cache(spark, tmp_path):
     cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
     assert cached.size() == 1
     own.unpersist()
+
+
+def test_product_session_coalesces_shared_frames(spark):
+    """Under the CLIs' session settings AQE coalesces the shuffles below a
+    shared frame: at Spark's default 200 shuffle partitions no cached RDD
+    of a pipeline run keeps 200 partitions, and the triple set is the one
+    the test session's settings give."""
+    from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline
+    from claimskg_generator_spark.session import product_session
+    from claimskg_generator_spark.sources.synth import synthesize_corpus
+
+    # two input partitions: a one-partition corpus needs no shuffle at all
+    corpus = synthesize_corpus(spark, 40, partitions=2)
+    want = {tuple(r) for r in ClaimsKGPipeline(spark).triples(corpus)
+            .collect()}
+    cache.release()
+
+    def cached_rdds():
+        return {i.id(): i.numPartitions() for i in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        with product_session("coalesce-test"):
+            triples = ClaimsKGPipeline(spark).triples(corpus)
+            assert triples.count() == len(want)
+            parts = {i: n for i, n in cached_rdds().items()
+                     if i not in before}
+            assert parts and max(parts.values()) < 200, parts
+            got = {tuple(r) for r in triples.collect()}
+    finally:
+        spark.conf.set(key, saved)
+    assert got == want

@@ -460,3 +460,37 @@ def test_cli_update_maintenance_mode(spark):
     with pytest.raises(SystemExit):
         main(["--output", table, "--update",
               "DELETE WHERE { ?s ?p ?o }"])
+
+
+def test_clis_restore_caller_session_settings(spark, tmp_path):
+    """The CLIs apply their session settings for the length of a run
+    only: a caller's values read back unchanged after cli.main and
+    dedup_cli.main, also for a setting the caller never set."""
+    from claimskg_generator_spark import cli, dedup_cli
+
+    docs = str(tmp_path / "documents.parquet")
+    spark.createDataFrame([(0, "a b c"), (1, "a b c"), (2, "d e f")],
+                          "doc_id long, text string").write.parquet(docs)
+    caller = {"spark.sql.adaptive.skewJoin.enabled": "false",
+              "spark.sql.execution.arrow.pyspark.enabled": "false"}
+    unset = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    saved = {k: spark.conf.get(k, None) for k in [*caller, unset]}
+    runs = [
+        lambda: cli.main(["--synth", "5", "--output", str(tmp_path / "nt"),
+                          "--format", "ntriples"]),
+        lambda: dedup_cli.main(["--input", docs, "--output",
+                                str(tmp_path / "dedup"), "--method", "exact"]),
+    ]
+    try:
+        for k, v in caller.items():
+            spark.conf.set(k, v)
+        for run in runs:
+            assert run() == 0
+            assert {k: spark.conf.get(k) for k in caller} == caller
+            assert spark.conf.get(unset, None) == saved[unset]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
