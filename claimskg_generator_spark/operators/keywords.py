@@ -18,12 +18,19 @@ Reference semantics being reproduced distributively:
   match (slim aggregate), broadcast back — no wide-row shuffle.
   The memo is set on containment match even when the mention is below the
   confidence threshold (:397 precedes the threshold check inside
-  _create_mention), so the winner is chosen threshold-free.
+  _create_mention), so the winner is chosen threshold-free.  A keyword
+  repeated in one row's tags is processed once (the memo is set at its
+  first occurrence), so the explode yields one row per (claim, distinct
+  keyword).
+
+This module owns the memo: the triple families, the logical views, the
+statistics counters and the queries read ``keyword_winners`` /
+``winner_rows`` and ``keyword_concepts`` rather than rebuilding them.
 """
 
 from typing import Dict
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from claimskg_generator_spark.constants.namespaces import NS
@@ -32,7 +39,10 @@ from claimskg_generator_spark.functions.textmatch import PhraseMatcher
 from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
 from claimskg_generator_spark.operators.cache import share
-from claimskg_generator_spark.operators.mentions import explode_raw_mentions
+from claimskg_generator_spark.operators.mentions import (
+    explode_raw_mentions,
+    mention_array,
+)
 from claimskg_generator_spark.operators.triples import (
     OKIND_LANG_EN,
     OKIND_URI,
@@ -45,25 +55,32 @@ def _strip(col):
     return F.regexp_replace(col, PY_STRIP_REGEX, "")
 
 
+def keyword_list(tags: Column) -> Column:
+    """The distinct stripped keywords of a tags string: split on ``;``, or
+    on ``,`` when there is none (reference split_keywords); empty for null
+    or empty tags."""
+    split = F.when(F.contains(tags, F.lit(";")), F.split(tags, ";")) \
+        .otherwise(F.split(tags, ","))
+    return F.when(
+        tags.isNotNull() & (F.length(tags) > 0),
+        F.array_distinct(F.transform(split, _strip)),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def exploded_keywords(claims: DataFrame, model_uri: str) -> DataFrame:
-    """One row per (claim row, keyword): ord, cw_uri, fragments_joined,
-    keyword, kw_uri, matched (containment-matching keyword mentions)."""
-    tagged = claims.filter(
-        F.col("tags").isNotNull() & (F.length("tags") > 0)
-    )
-    kw_list = F.when(
-        F.contains(F.col("tags"), F.lit(";")), F.split("tags", ";")
-    ).otherwise(F.split("tags", ","))
-    ex = tagged.select(
+    """One row per (claim row, distinct keyword) -- a row processes a
+    keyword once: ord, cw_uri, fragments_joined, keyword, kw_uri, matched
+    (containment-matching keyword mentions)."""
+    ex = claims.select(
         "ord", "cw_uri", "fragments_joined", "m_keywords",
-        F.explode(kw_list).alias("kw_raw"),
-    ).withColumn("keyword", _strip(F.col("kw_raw")))
+        F.explode(keyword_list(F.col("tags"))).alias("keyword"),
+    )
     kw_uri = F.concat(
         F.lit(model_uri + "keyword/"), uuid5_url_col(F.col("keyword"))
     )
     # keyword.lower() in mention.text.lower().strip() (reference :396)
     matched = F.filter(
-        F.coalesce("m_keywords", F.array().cast(tagged.schema["m_keywords"].dataType)),
+        mention_array("m_keywords"),
         lambda m: F.contains(_strip(F.lower(m["text"])), F.lower(F.col("keyword"))),
     )
     return ex.select(
@@ -72,25 +89,49 @@ def exploded_keywords(claims: DataFrame, model_uri: str) -> DataFrame:
     )
 
 
-def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
+def keyword_winners(ex: DataFrame) -> DataFrame:
+    """The memo: (kw_uri, win_ord) -- per keyword, the smallest ord whose
+    row has a containment match; keywords no row matched are absent.  A
+    slim aggregate, shared so every consumer broadcasts the same one."""
+    return share(
+        ex.withColumn("has_match", F.size("matched") > 0)
+        .groupBy("kw_uri")
+        .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
+        .filter(F.col("win_ord").isNotNull())
+    )
+
+
+def winner_rows(ex: DataFrame) -> DataFrame:
+    """The exploded-keyword rows that attach their keyword's mentions (one
+    per keyword that any row matched), with ``win_ord``."""
+    return ex.join(F.broadcast(keyword_winners(ex)), "kw_uri").filter(
+        F.col("ord") == F.col("win_ord")
+    )
+
+
+def keyword_concepts(ex: DataFrame,
+                     matchers: Dict[str, PhraseMatcher]) -> DataFrame:
+    """Distinct keywords (keyword, kw_uri) with ``cm``, their thesaurus
+    concept matches (broadcast dictionary, J3).  Tiny and shared: several
+    plan branches read it."""
+    kw_match = make_keyword_match_udf(matchers)
+    return share(
+        ex.select("keyword", "kw_uri")
+        .dropDuplicates(["kw_uri"])
+        .withColumn("cm", kw_match(F.col("keyword")))
+    )
+
+
+def keyword_triples_and_raw_mentions(ex: DataFrame,
                                      matchers: Dict[str, PhraseMatcher],
-                                     threshold: float,
-                                     ex: DataFrame = None):
-    """Returns (non-mention keyword triples, raw winner mention rows).
+                                     threshold: float):
+    """Returns (non-mention keyword triples, raw winner mention rows) over
+    the shared exploded_keywords frame ``ex``.
 
     The raw mention rows (attach = keyword URI) are returned unminted so
     the pipeline can union them with the review/body mention rows and run
-    ONE confidence-format + uuid5 pass over all mentions.
-
-    ``ex``: pre-materialized exploded_keywords frame — pass it when the
-    same run also builds views/statistics so the tag explode + containment
-    filter is computed ONCE per run, not once per consumer."""
-    # consumed by the edge projection, the winner aggregate and the winner
-    # join — cache so the tag explode + containment filter runs once
-    if ex is None:
-        ex = share(exploded_keywords(claims, model_uri))
-
-    # (cw, schema:keywords, kw) for every occurrence (:410)
+    ONE confidence-format + uuid5 pass over all mentions."""
+    # (cw, schema:keywords, kw) for every (claim, keyword) (:410)
     edges = ex.select(
         F.col("cw_uri").alias("subj"),
         F.lit(NS.SCHEMA_KEYWORDS).alias("pred"),
@@ -98,14 +139,8 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
         F.lit(OKIND_URI).alias("okind"),
     )
 
-    # distinct keywords: node triples + broadcast thesaurus matching (J3).
-    # Cached: tiny (distinct keywords), consumed by three plan branches.
-    kw_match = make_keyword_match_udf(matchers)
-    distinct_kw = share(
-        ex.select("keyword", "kw_uri")
-        .dropDuplicates(["kw_uri"])
-        .withColumn("cm", kw_match(F.col("keyword")))
-    )
+    # distinct keywords: node triples + thesaurus dct:about triples
+    distinct_kw = keyword_concepts(ex, matchers)
     node_triples = distinct_kw.select(F.explode(F.array_compact(F.array(
         triple_struct(F.col("kw_uri"), NS.RDF_TYPE, NS.SCHEMA_THING, OKIND_URI),
         triple_struct(F.col("kw_uri"), NS.SCHEMA_NAME, F.col("keyword"),
@@ -124,23 +159,8 @@ def keyword_triples_and_raw_mentions(claims: DataFrame, model_uri: str,
         )
     )
 
-    # first-writer-wins winner per keyword (slim aggregate, broadcast back)
-    per_row = ex.withColumn("has_match", F.size("matched") > 0)
-    winners = share(
-        per_row.groupBy("kw_uri")
-        .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
-        .filter(F.col("win_ord").isNotNull())
-        .select(F.col("kw_uri").alias("w_kw_uri"), "win_ord")
-    )
-    win_rows = (
-        per_row.join(
-            F.broadcast(winners),
-            (F.col("kw_uri") == F.col("w_kw_uri")) & (F.col("ord") == F.col("win_ord")),
-        )
-        .select("kw_uri", "fragments_joined", "matched")
-    )
-
-    win_raw = explode_raw_mentions(win_rows, "matched", "kw_uri", threshold)
+    win_raw = explode_raw_mentions(winner_rows(ex), "matched", "kw_uri",
+                                   threshold)
 
     # J5: owl:sameAs(dbr_entity, concept) when the mention span equals the
     # thesaurus annotation span (:350-361) — broadcast join on kw_uri.

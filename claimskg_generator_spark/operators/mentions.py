@@ -18,6 +18,21 @@ from claimskg_generator_spark.operators.triples import (
     OKIND_URI,
     triple_struct,
 )
+from claimskg_generator_spark.sources.claims import MENTION_SCHEMA
+
+
+def mention_array(col) -> Column:
+    """A parsed mention-array column, null read as no mentions."""
+    return F.coalesce(col, F.array().cast(MENTION_SCHEMA))
+
+
+def above_threshold(col, threshold: float) -> Column:
+    """The mentions whose score is strictly above ``threshold`` (reference
+    :520-522)."""
+    return F.filter(
+        mention_array(col),
+        lambda m: m["score"].try_cast("double") > F.lit(threshold),
+    )
 
 
 def explode_raw_mentions(claims: DataFrame, mention_col: str, attach_col: str,
@@ -25,14 +40,12 @@ def explode_raw_mentions(claims: DataFrame, mention_col: str, attach_col: str,
     """One row per above-threshold mention, BEFORE confidence formatting /
     URI minting — so several mention sources can be unioned and minted in a
     single pass (one Arrow UDF stage for the whole corpus)."""
-    base = claims.filter(F.size(mention_col) > 0).select(
+    df = claims.select(
         F.col(attach_col).alias("attach_uri"),
         "fragments_joined",
-        F.explode(mention_col).alias("m"),
+        F.explode(above_threshold(mention_col, threshold)).alias("m"),
     )
     rho = F.col("m.score").try_cast("double")
-    # strict > threshold (reference :520-522)
-    df = base.filter(rho > F.lit(threshold))
     entity_u = F.replace(F.col("m.entity"), F.lit(" "), F.lit("_"))
     cats = F.when(
         F.size("m.categories") > 0,

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from claimskg_generator_spark.constants.namespaces import NS
 from claimskg_generator_spark.functions.udfs import escape_b64, pyfloat_str
+from claimskg_generator_spark.operators.mentions import mention_array
 from claimskg_generator_spark.operators.triples import (
     OKIND_LANG_EN,
     OKIND_URI,
@@ -119,9 +120,7 @@ def author_mention_triple_array() -> Column:
     """Creative-work-author mentions: no threshold, direct dbr link
     (reference :456-463)."""
     arr = F.transform(
-        F.coalesce(F.col("m_author"), F.array().cast(
-            "array<struct<begin:bigint,end:bigint,text:string,entity:string,"
-            "score:string,categories:array<string>>>")),
+        mention_array("m_author"),
         lambda m: triple_struct(
             F.col("cwa_uri"), NS.SCHEMA_MENTIONS,
             F.concat(F.lit(NS.DBR), F.replace(m["entity"], F.lit(" "), F.lit("_"))),

@@ -7,10 +7,12 @@ here every counter is a conditional aggregate over the logical-view rows
 and ``rollup(source)`` produces the per-source rows and the global row
 (source NULL -> '__global__') in a single partial+final hash aggregation.
 
-The keyword-reconciliation counters replicate the order-dependent memo:
-a claim counts a keyword for TheSoz/UNESCO only if it processed the
-keyword (its ord <= the keyword's winner ord, or the keyword never won),
-and for the DBPedia/both counters only if it IS the winner row.
+The keyword-reconciliation counters read the first-writer-wins memo of
+operators/keywords.py: a claim counts a keyword for TheSoz/UNESCO only if
+it processed the keyword (its ord <= the keyword's winner ord, or the
+keyword never won), and for the DBPedia/both counters only if it IS the
+winner row.  They are aggregated per claim in the same pass as the views'
+keyword-winner mention lists, so the winner aggregate is read once.
 """
 
 from typing import Dict
@@ -19,60 +21,41 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from claimskg_generator_spark.functions.textmatch import PhraseMatcher
-from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.operators.cache import share
-from claimskg_generator_spark.operators.keywords import exploded_keywords
-from claimskg_generator_spark.operators.views import logical_views
+from claimskg_generator_spark.operators.keywords import (
+    exploded_keywords,
+    keyword_concepts,
+    keyword_winners,
+)
+from claimskg_generator_spark.operators.mentions import above_threshold
+from claimskg_generator_spark.operators.views import (
+    claim_views,
+    keyword_mention_lists,
+)
 
 
-def _above(col, threshold):
-    return F.filter(col, lambda m: m["score"].try_cast("double") > F.lit(threshold))
-
-
-def keyword_stat_counts(claims: DataFrame, model_uri: str,
-                        matchers: Dict[str, PhraseMatcher],
-                        threshold: float, ex: DataFrame = None) -> DataFrame:
-    """Per-claim distinct-keyword counters for the five reconciled-keyword
-    statistics."""
-    if ex is None:
-        ex = exploded_keywords(claims, model_uri)
-    per_row = ex.withColumn("has_match", F.size("matched") > 0)
-    winners = (
-        per_row.groupBy("kw_uri")
-        .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
-        .select(F.col("kw_uri").alias("w_kw"), "win_ord")
-    )
-    kw_match = make_keyword_match_udf(matchers)
-    matches = (
-        ex.select("keyword", "kw_uri").dropDuplicates(["kw_uri"])
-        .withColumn("cm", kw_match(F.col("keyword")))
-        .select(F.col("kw_uri").alias("m_kw"), "cm")
-    )
-    df = (
-        per_row.join(F.broadcast(winners), F.col("kw_uri") == F.col("w_kw"), "left")
-        .join(F.broadcast(matches), F.col("kw_uri") == F.col("m_kw"))
-        .withColumn(
-            "processed",
-            F.col("win_ord").isNull() | (F.col("ord") <= F.col("win_ord")),
-        )
-        .withColumn("is_winner", F.col("win_ord") == F.col("ord"))
-        .withColumn("m_thr", _above(F.col("matched"), threshold))
-    )
+def _keyword_counters(threshold: float) -> list:
+    """Per-claim counters for the five reconciled-keyword statistics, as
+    aggregates over exploded-keyword rows carrying ``win_ord`` (null for a
+    keyword no row won) and ``cm``.  Rows are one per (claim, distinct
+    keyword), so a conditional row count is a distinct-keyword count."""
+    m_thr = above_threshold(F.col("matched"), threshold)
+    processed = F.col("win_ord").isNull() | (F.col("ord") <= F.col("win_ord"))
+    won = F.col("ord") == F.col("win_ord")
     span_eq = lambda vocab: F.exists(  # noqa: E731
-        F.col("m_thr"),
+        m_thr,
         lambda m: F.exists(
             F.col("cm")[vocab],
             lambda t: (t["begin"] == m["begin"]) & (t["end"] == m["end"]),
         ),
     )
-    cdk = lambda cond: F.count_distinct(F.when(cond, F.col("keyword")))  # noqa: E731
-    return df.groupBy("ord").agg(
-        cdk(F.col("processed") & (F.size("cm.thesoz") > 0)).alias("n_kw_thesoz"),
-        cdk(F.col("processed") & (F.size("cm.unesco") > 0)).alias("n_kw_unesco"),
-        cdk(F.col("is_winner") & (F.size("m_thr") > 0)).alias("n_kw_dbpedia"),
-        cdk(F.col("is_winner") & span_eq("thesoz")).alias("n_kw_thesoz_dbp"),
-        cdk(F.col("is_winner") & span_eq("unesco")).alias("n_kw_unesco_dbp"),
-    )
+    return [
+        F.count_if(processed & (F.size("cm.thesoz") > 0)).alias("n_kw_thesoz"),
+        F.count_if(processed & (F.size("cm.unesco") > 0)).alias("n_kw_unesco"),
+        F.count_if(won & (F.size(m_thr) > 0)).alias("n_kw_dbpedia"),
+        F.count_if(won & span_eq("thesoz")).alias("n_kw_thesoz_dbp"),
+        F.count_if(won & span_eq("unesco")).alias("n_kw_unesco_dbp"),
+    ]
 
 
 def statistics_table(claims: DataFrame, model_uri: str,
@@ -80,12 +63,14 @@ def statistics_table(claims: DataFrame, model_uri: str,
                      threshold: float) -> DataFrame:
     """Wide statistics row per source + the '__global__' rollup row, after
     the reference's output ratio transform (statistics.py:100-129)."""
-    # ONE materialized exploded-keywords frame feeds both the logical views
-    # (winner mentions) and the keyword counters
     ex = share(exploded_keywords(claims, model_uri))
-    views = logical_views(claims, model_uri, threshold, ex)
-    kw = keyword_stat_counts(claims, model_uri, matchers, threshold, ex)
-    v = views.join(kw, "ord", "left").na.fill(
+    rows = (
+        ex.join(F.broadcast(keyword_winners(ex)), "kw_uri", "left")
+        .join(F.broadcast(keyword_concepts(ex, matchers).drop("keyword")),
+              "kw_uri")
+    )
+    kw = keyword_mention_lists(rows, threshold, *_keyword_counters(threshold))
+    v = claim_views(claims, threshold, kw).na.fill(
         0, ["n_kw_thesoz", "n_kw_unesco", "n_kw_dbpedia",
             "n_kw_thesoz_dbp", "n_kw_unesco_dbp"]
     )

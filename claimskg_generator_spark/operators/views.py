@@ -3,35 +3,30 @@ ClaimLogicalView accumulator (reference claimskg/generator/__init__.py:
 60-83) — one row per claim with the aggregates reconciliation (J7/J8) and
 statistics (A1) consume.
 
-Everything except the keyword-winner part is within-row array expressions
-(no shuffle).  The keyword-winner entity/category lists replicate the
-order-dependent memo exactly as operators/keywords.py does: only mentions
-from each keyword's first matching row count as claim entities.
+Everything except the keyword part is within-row array expressions (no
+shuffle).  The keyword part reads the first-writer-wins memo from
+operators/keywords.py: only mentions from the keywords a claim won count
+as its keyword entities.
 """
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from claimskg_generator_spark.functions.cleaning import PY_STRIP_REGEX
-from claimskg_generator_spark.operators.keywords import exploded_keywords
+from claimskg_generator_spark.operators.keywords import (
+    exploded_keywords,
+    keyword_list,
+    winner_rows,
+)
+from claimskg_generator_spark.operators.mentions import above_threshold
 
 
 def _empty_str_array():
     return F.array().cast("array<string>")
 
 
-def _above_threshold(col, threshold):
-    return F.filter(
-        F.coalesce(col, F.array().cast("array<struct<begin:bigint,end:bigint,"
-                                       "text:string,entity:string,score:string,"
-                                       "categories:array<string>>>")),
-        lambda m: m["score"].try_cast("double") > F.lit(threshold),
-    )
-
-
 def _mention_entities(col, threshold):
     return F.transform(
-        _above_threshold(col, threshold),
+        above_threshold(col, threshold),
         lambda m: F.replace(m["entity"], F.lit(" "), F.lit("_")),
     )
 
@@ -39,7 +34,7 @@ def _mention_entities(col, threshold):
 def _mention_categories(col, threshold):
     return F.flatten(
         F.transform(
-            _above_threshold(col, threshold),
+            above_threshold(col, threshold),
             lambda m: F.when(
                 F.size(m["categories"]) > 0,
                 F.split(F.element_at(m["categories"], 1), ","),
@@ -48,40 +43,21 @@ def _mention_categories(col, threshold):
     )
 
 
-def _keywords_array(tags_col):
-    kw_list = F.when(
-        F.contains(tags_col, F.lit(";")), F.split(tags_col, ";")
-    ).otherwise(F.split(tags_col, ","))
-    stripped = F.transform(kw_list, lambda k: F.regexp_replace(k, PY_STRIP_REGEX, ""))
-    return F.when(
-        tags_col.isNotNull() & (F.length(tags_col) > 0),
-        F.array_distinct(stripped),
-    ).otherwise(_empty_str_array())
-
-
-def keyword_winner_mentions(claims: DataFrame, model_uri: str,
-                            ex: DataFrame = None) -> DataFrame:
-    """Per claim row: the keyword mentions this row actually attaches under
-    the first-writer-wins memo (any row may win several keywords)."""
-    if ex is None:
-        ex = exploded_keywords(claims, model_uri)
-    per_row = ex.withColumn("has_match", F.size("matched") > 0)
-    winners = (
-        per_row.groupBy("kw_uri")
-        .agg(F.min(F.when(F.col("has_match"), F.col("ord"))).alias("win_ord"))
-        .filter(F.col("win_ord").isNotNull())
-        .select(F.col("kw_uri").alias("w_kw_uri"), "win_ord")
-    )
-    return (
-        per_row
-        # a keyword repeated in one row's tag list is processed once (the
-        # memo is set at the first occurrence) -> dedupe before attaching
-        .dropDuplicates(["ord", "kw_uri"])
-        .join(
-            F.broadcast(winners),
-            (F.col("kw_uri") == F.col("w_kw_uri")) & (F.col("ord") == F.col("win_ord")),
-        )
-        .select("ord", "kw_uri", "keyword", "matched")
+def keyword_mention_lists(rows: DataFrame, threshold: float,
+                          *aggs) -> DataFrame:
+    """Per claim ``ord``: kw_entities / kw_categories, the above-threshold
+    mentions of the keywords the claim won (``ord == win_ord``), plus any
+    further per-claim aggregates ``aggs`` over the same exploded-keyword
+    ``rows``."""
+    won = F.col("ord") == F.col("win_ord")
+    return rows.groupBy("ord").agg(
+        F.flatten(F.collect_list(F.when(
+            won, _mention_entities(F.col("matched"), threshold)
+        ))).alias("kw_entities"),
+        F.flatten(F.collect_list(F.when(
+            won, _mention_categories(F.col("matched"), threshold)
+        ))).alias("kw_categories"),
+        *aggs,
     )
 
 
@@ -93,21 +69,20 @@ def logical_views(claims: DataFrame, model_uri: str, threshold: float,
     entities = keyword-winner mentions ++ body mentions (claim side) and
     review mentions kept separately; the reference concatenates
     claim+review for scoring (reconciler/__init__.py:154-155), which we do
-    here so the reconcile operator gets one ``entities`` list."""
-    kw_part = (
-        keyword_winner_mentions(claims, model_uri, ex)
-        .select(
-            "ord",
-            _mention_entities(F.col("matched"), threshold).alias("e"),
-            _mention_categories(F.col("matched"), threshold).alias("c"),
-        )
-        .groupBy("ord")
-        .agg(
-            F.flatten(F.collect_list("e")).alias("kw_entities"),
-            F.flatten(F.collect_list("c")).alias("kw_categories"),
-        )
-    )
+    here so the reconcile operator gets one ``entities`` list.
 
+    ``ex``: the run's shared exploded_keywords frame, when it has one."""
+    if ex is None:
+        ex = exploded_keywords(claims, model_uri)
+    return claim_views(claims, threshold,
+                       keyword_mention_lists(winner_rows(ex), threshold))
+
+
+def claim_views(claims: DataFrame, threshold: float,
+                kw_part: DataFrame) -> DataFrame:
+    """logical_views over a per-claim keyword frame ``kw_part`` (from
+    keyword_mention_lists), left-joined on ``ord``; its extra columns
+    are kept."""
     base = claims.select(
         "ord",
         "cw_uri",
@@ -119,7 +94,7 @@ def logical_views(claims: DataFrame, model_uri: str, threshold: float,
                F.try_to_date(F.col("claim_date"), "yyyy-MM-dd")).alias("claim_date"),
         F.when(F.length(F.coalesce("review_date", F.lit(""))) > 0,
                F.try_to_date(F.col("review_date"), "yyyy-MM-dd")).alias("review_date"),
-        _keywords_array(F.col("tags")).alias("keywords"),
+        keyword_list(F.col("tags")).alias("keywords"),
         F.transform(F.coalesce("citations",
                                F.array().cast("array<struct<cleaned:string,uri:string>>")),
                     lambda x: x["cleaned"]).alias("links"),

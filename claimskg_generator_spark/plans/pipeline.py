@@ -31,9 +31,11 @@ from claimskg_generator_spark.constants.static_triples import (
 from claimskg_generator_spark.functions.udfs import clean_citations
 from claimskg_generator_spark.operators.cache import release, share
 from claimskg_generator_spark.operators.keywords import (
+    exploded_keywords,
     keyword_triples_and_raw_mentions,
 )
 from claimskg_generator_spark.operators.mentions import (
+    above_threshold,
     mention_family_triples,
     mint_mentions,
     review_and_body_raw_mentions,
@@ -184,15 +186,12 @@ class ClaimsKGPipeline:
         #    (incl. per-category triples);
         # 3. keyword non-mention families (winner aggregate + broadcast
         #    thesaurus joins — the only global-view operators).
-        from claimskg_generator_spark.operators.keywords import (
-            exploded_keywords,
-        )
 
         # one cached exploded-keywords frame for every consumer in this run
         # (keyword families + logical views when reconciliation is on)
         ex = share(exploded_keywords(claims, cfg.model_uri))
         kw_non_mention, kw_raw = keyword_triples_and_raw_mentions(
-            claims, cfg.model_uri, self.matchers, cfg.threshold, ex
+            ex, self.matchers, cfg.threshold
         )
         all_raw = review_and_body_raw_mentions(claims, cfg.threshold).unionByName(
             kw_raw
@@ -326,20 +325,12 @@ class ClaimsKGPipeline:
         return out
 
 
-_MENTION_ARR_DDL = ("array<struct<begin:bigint,end:bigint,text:string,"
-                    "entity:string,score:string,categories:array<string>>>")
-
-
 def _mention_triple_count(col, threshold: float):
     """Triples the mention family emits per above-threshold mention: the
     8-triple NIF/ITS block + one dct:about per category entry (twin of
     operators/mentions.mention_family_triples, counting only)."""
-    flt = F.filter(
-        F.coalesce(col, F.array().cast(_MENTION_ARR_DDL)),
-        lambda m: m["score"].try_cast("double") > F.lit(threshold),
-    )
     return F.aggregate(
-        flt,
+        above_threshold(col, threshold),
         F.lit(0),
         lambda acc, m: acc + 8 + F.when(
             F.size(m["categories"]) > 0,

@@ -27,13 +27,15 @@ from claimskg_generator_spark.constants.ratings import (
 )
 from claimskg_generator_spark.constants.sources import SOURCE_URI_DICT
 from claimskg_generator_spark.functions.cleaning import IS_VALID_URL_REGEX
-from claimskg_generator_spark.functions.udfs import make_keyword_match_udf
 from claimskg_generator_spark.functions.uuid5 import uuid5_url_col
 from claimskg_generator_spark.operators.canonicalize import (
     canonicalize_claim_mentions,
     salted_surface_counts,
 )
-from claimskg_generator_spark.operators.keywords import exploded_keywords
+from claimskg_generator_spark.operators.keywords import (
+    exploded_keywords,
+    keyword_concepts,
+)
 from claimskg_generator_spark.operators.reconcile import reconcile_pairs
 from claimskg_generator_spark.operators.shacl import (
     claims_shapes,
@@ -591,11 +593,8 @@ def q31_metaphone_match(spark, sf_dir):
     corpus = _claims_corpus(spark, sf_dir)
     pipe = ClaimsKGPipeline(spark, PipelineConfig(recognizer="metaphone"))
     ex = exploded_keywords(pipe.claims(corpus), pipe.config.model_uri)
-    kw_match = make_keyword_match_udf(pipe.matchers)
     return (
-        ex.select("keyword")
-        .distinct()
-        .withColumn("cm", kw_match(F.col("keyword")))
+        keyword_concepts(ex, pipe.matchers)
         .select(
             "keyword",
             F.explode(F.concat("cm.thesoz", "cm.unesco")).alias("c"),

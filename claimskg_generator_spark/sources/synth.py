@@ -21,7 +21,7 @@ rows (first-writer-wins memo), and heavy-head creative-work authors (skew).
 import hashlib
 import json
 import random
-from typing import Dict, Iterator, List
+from typing import Dict, Iterator, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -264,9 +264,11 @@ def make_record(i: int, seed: int = 42) -> Dict[str, object]:
     return record
 
 
-def make_row(i: int, seed: int = 42) -> Dict[str, str]:
-    """One input-table row ``(repo, path, commit, lang, content)``."""
-    record = make_record(i, seed)
+def make_row(i: int, seed: int = 42,
+             record: Optional[Dict[str, object]] = None) -> Dict[str, str]:
+    """One input-table row ``(repo, path, commit, lang, content)``; the
+    record defaults to ``make_record(i, seed)``."""
+    record = make_record(i, seed) if record is None else record
     source = record["claimReview_author_name"]
     content = json.dumps(record, sort_keys=True, ensure_ascii=False)
     commit = hashlib.sha1(f"commit:{seed}:{i}".encode()).hexdigest()
@@ -286,6 +288,19 @@ def gen_records(n: int, seed: int = 42) -> List[Dict[str, object]]:
 
 def gen_rows(n: int, seed: int = 42) -> List[Dict[str, str]]:
     return [make_row(i, seed) for i in range(n)]
+
+
+def repeated_keyword_records(n: int, seed: int = 42) -> List[Dict[str, object]]:
+    """``gen_records(n, seed)`` with every tagged row's first keyword
+    appended again (``sep + " " + first``), so rows repeat a keyword and
+    the memo's one-pass-per-keyword rule is exercised."""
+    records = gen_records(n, seed)
+    for rec in records:
+        tags = rec["extra_tags"]
+        if tags:
+            sep = ";" if ";" in tags else ","
+            rec["extra_tags"] = tags + sep + " " + tags.split(sep)[0]
+    return records
 
 
 def synthesize_corpus(spark: SparkSession, n: int, seed: int = 42,

@@ -10,6 +10,8 @@ from claimskg_generator_spark.sources.synth import (
     THESAURUS_ENTRIES,
     gen_records,
     gen_rows,
+    make_row,
+    repeated_keyword_records,
 )
 
 N = 250
@@ -36,16 +38,26 @@ def _pr(got, want):
 
 
 def test_triple_set_matches_oracle(spark, corpus):
-    pipe = ClaimsKGPipeline(spark)
-    got = {tuple(r) for r in pipe.run(corpus).collect()}
-    want = _oracle_triples()
-    precision, recall = _pr(got, want)
-    if (precision, recall) != (1.0, 1.0):
-        extra = sorted(got - want)[:10]
-        missing = sorted(want - got)[:10]
-        raise AssertionError(
-            f"P={precision:.4f} R={recall:.4f}\nEXTRA: {extra}\nMISSING: {missing}"
-        )
+    """The synth corpus, and a corpus whose rows repeat a keyword (the
+    memo processes a keyword once per row; synth tags never repeat)."""
+    repeated = repeated_keyword_records(120)
+    o = ReferenceOracle(THESAURUS_ENTRIES)
+    o.generate(repeated)
+    inputs = [
+        ("synth", corpus, _oracle_triples()),
+        ("repeated keywords", spark.createDataFrame(
+            [make_row(i, record=r) for i, r in enumerate(repeated)]), o.triples),
+    ]
+    for name, df, want in inputs:
+        got = {tuple(r) for r in ClaimsKGPipeline(spark).run(df).collect()}
+        precision, recall = _pr(got, want)
+        if (precision, recall) != (1.0, 1.0):
+            extra = sorted(got - want)[:10]
+            missing = sorted(want - got)[:10]
+            raise AssertionError(
+                f"{name}: P={precision:.4f} R={recall:.4f}\n"
+                f"EXTRA: {extra}\nMISSING: {missing}"
+            )
 
 
 def test_triple_set_with_align_duplicated(spark, corpus):

@@ -98,6 +98,22 @@ def test_pipeline_shuffle_budget(spark):
     # loudly if the plan ever regresses into per-family shuffles (~12+).
     assert n_exchanges <= 8, n_exchanges
 
+
+def test_statistics_reads_one_keyword_winner_aggregate(spark):
+    """The logical views and the keyword counters of the statistics table
+    read the memo of operators/keywords.py in one per-claim pass: the
+    first-writer-wins winner aggregate is planned once, not once per
+    consumer."""
+    from claimskg_generator_spark.operators.stats import statistics_table
+    from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
+    from claimskg_generator_spark.sources.synth import gen_rows
+
+    pipe = ClaimsKGPipeline(spark, PipelineConfig(materialize_parsed=False))
+    claims = pipe.claims(spark.createDataFrame(gen_rows(30)))
+    stats = statistics_table(claims, pipe.config.model_uri, pipe.matchers, 0.3)
+    winner_aggs = re.findall(r"\bmin\(CASE WHEN has_match", _optimized(stats))
+    assert len(winner_aggs) == 1, len(winner_aggs)
+
 def test_pred_bucket_layout_prunes(spark):
     """Iceberg-style layout: a single-predicate read over the pred-bucketed
     table opens only that bucket's directory (partition pruning)."""

@@ -17,6 +17,8 @@ from claimskg_generator_spark.sources.synth import (
     THESAURUS_ENTRIES,
     gen_records,
     gen_rows,
+    make_row,
+    repeated_keyword_records,
 )
 
 N = 220
@@ -34,6 +36,18 @@ def oracle():
 def claims_df(spark):
     pipe = ClaimsKGPipeline(spark)
     return pipe.claims(spark.createDataFrame(gen_rows(N))).cache()
+
+
+@pytest.fixture(scope="module")
+def inputs(spark, claims_df, oracle):
+    """(claims, oracle) pairs: the synth corpus, and one whose rows repeat
+    a keyword (the memo processes a keyword once per row)."""
+    records = repeated_keyword_records(120)
+    o = ReferenceOracle(THESAURUS_ENTRIES)
+    o.generate(records)
+    rows = [make_row(i, record=r) for i, r in enumerate(records)]
+    repeated = ClaimsKGPipeline(spark).claims(spark.createDataFrame(rows)).cache()
+    return [(claims_df, oracle), (repeated, o)]
 
 
 def test_levenshtein_similarity():
@@ -70,9 +84,14 @@ def test_reconcile_matches_oracle(spark, claims_df, oracle):
     )
 
 
-def test_reconcile_mappings_feature_columns(spark, claims_df, oracle):
+def test_reconcile_mappings_feature_columns(spark, inputs):
     """S9: the mappings sink carries the reference's per-side fields
     (reconciler/__init__.py:126-147), keyed to the same scored pairs."""
+    for claims_df, oracle in inputs:
+        _check_mappings(claims_df, oracle)
+
+
+def _check_mappings(claims_df, oracle):
     from claimskg_generator_spark.operators.reconcile import reconcile_mappings
 
     views = logical_views(claims_df, "http://data.gesis.org/claimskg/", 0.3)
@@ -132,19 +151,21 @@ STAT_COLMAP = {
 }
 
 
-def test_statistics_match_oracle(spark, claims_df, oracle):
+def test_statistics_match_oracle(spark, inputs):
     pipe = ClaimsKGPipeline(spark)
-    table = statistics_table(
-        claims_df, "http://data.gesis.org/claimskg/", pipe.matchers, 0.3
-    ).collect()
-    want = oracle.final_stats()
-    got = {r["source_grp"]: r.asDict() for r in table}
-    assert set(got) == set(want)
-    for grp, stats in want.items():
-        for col, key in STAT_COLMAP.items():
-            assert round(float(got[grp][col]), 4) == round(float(stats[key]), 4), (
-                grp, col, got[grp][col], stats[key]
-            )
+    for claims_df, oracle in inputs:
+        table = statistics_table(
+            claims_df, "http://data.gesis.org/claimskg/", pipe.matchers, 0.3
+        ).collect()
+        want = oracle.final_stats()
+        got = {r["source_grp"]: r.asDict() for r in table}
+        assert set(got) == set(want)
+        for grp, stats in want.items():
+            for col, key in STAT_COLMAP.items():
+                assert round(float(got[grp][col]), 4) == \
+                    round(float(stats[key]), 4), (
+                        grp, col, got[grp][col], stats[key]
+                    )
 
 
 def test_batched_levenshtein_matches_scalar():
