@@ -24,6 +24,7 @@ import sys
 from pyspark.sql import SparkSession
 
 from claimskg_generator_spark.constants.namespaces import DEFAULT_MODEL_URI
+from claimskg_generator_spark.plans.checkpoints import input_fingerprint
 from claimskg_generator_spark.plans.pipeline import ClaimsKGPipeline, PipelineConfig
 from claimskg_generator_spark.plans.sinks import (
     FORMATS,
@@ -170,19 +171,6 @@ def _parse_thesaurus_spec(parser: argparse.ArgumentParser, spec: str):
     return vocab, rest, True
 
 
-def _file_input_fingerprint(spark: SparkSession, args) -> str:
-    """Content fingerprint of --input, computed only when checkpoints are
-    in play (the FS listing is one driver-side RPC, but skipping it keeps
-    checkpoint-less runs free of any extra I/O)."""
-    if not args.checkpoint_dir:
-        return "nockpt"
-    from claimskg_generator_spark.plans.checkpoints import input_fingerprint
-
-    return input_fingerprint(
-        spark, args.input,
-        content_probe=getattr(args, "checkpoint_content_probe", False))
-
-
 def _run_update(spark: SparkSession, args, update_text: str) -> int:
     """Standalone maintenance mode: one SPARQL UPDATE request as one
     atomic commit on the claims snapshot table at --output (the
@@ -314,17 +302,18 @@ def _build(spark: SparkSession, args, thesaurus_specs) -> int:
             print(f"compacted triple table at {args.compact_to}")
         return 0
 
-    cfg = PipelineConfig(
-        **config_kwargs,
-        checkpoint_dir=args.checkpoint_dir,
-        # durable checkpoint identity across driver restarts: synth corpora
-        # are identified by (n, seed); file inputs by path + a CONTENT
-        # fingerprint (FS listing of lengths/mtimes), so overwriting the
-        # same path invalidates old checkpoints instead of resuming them
-        input_id=(f"synth:{args.synth}:42" if args.synth is not None
-                  else f"path:{args.input}:"
-                       f"{_file_input_fingerprint(spark, args)}"),
-    )
+    # durable checkpoint identity across driver restarts: synth corpora
+    # are identified by (n, seed); file inputs by path + a CONTENT
+    # fingerprint (FS listing of lengths/mtimes), so overwriting the same
+    # path invalidates old checkpoints instead of resuming them
+    input_id = None
+    if args.checkpoint_dir:
+        input_id = (f"synth:{args.synth}:42" if args.synth is not None
+                    else f"path:{args.input}:" + input_fingerprint(
+                        spark, args.input,
+                        content_probe=args.checkpoint_content_probe))
+    cfg = PipelineConfig(**config_kwargs, checkpoint_dir=args.checkpoint_dir,
+                         input_id=input_id)
     pipe = ClaimsKGPipeline(spark, cfg)
 
     if args.synth is not None:

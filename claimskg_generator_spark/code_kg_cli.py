@@ -10,9 +10,10 @@ Input: parquet with the north-rule columns ``(repo, path, commit, lang,
 content)`` (``--synth-from-documents`` instead lifts a (doc_id, text)
 documents parquet via sources/codesynth.py — the deterministic test
 corpus).  Stages, each a checkpoint-resumable boundary (plans/
-checkpoints.py — identity = input content fingerprint + the stage's
-config, so changed inputs or flags invalidate exactly the affected
-stages):
+checkpoints.py — each stage's identity chains from its upstream stage,
+anchored on the input content fingerprint, the gate/dedup/scheme/entail
+flags and the package source, so a changed input, flag, upstream stage
+or code recomputes that stage and every stage after it):
 
 1. gate      — StarCoder-style quality gates (operators/code.py),
                optional (``--quality-gate``)
@@ -21,9 +22,9 @@ stages):
 3. triples   — KG triple extraction (operators/code_kg.code_triples)
 4. materialize — snapshot-table commit (predicate-clustered, manifest
                stats, per-split lineage + stage timings inside the
-               atomic commit), gated by the same identity token so a
-               resumed run never double-appends; or plain parquet via
-               ``--output``
+               atomic commit), a commit-once stage chained after the
+               graph, so a resumed run never double-appends; or plain
+               parquet via ``--output``
 5. links / canonical — optional side outputs (entity linking,
                A5 module canonicalization)
 6. entail    — ``--entail`` materializes the RDFS ρdf entailment of the
@@ -52,7 +53,6 @@ stdout as the single last line.
 """
 
 import argparse
-import hashlib
 import json
 import sys
 
@@ -481,53 +481,43 @@ def _build_graph(spark, args, summary):
     from claimskg_generator_spark.plans.checkpoints import (
         CheckpointManager,
         input_fingerprint,
-        plan_token,
     )
 
-    in_path = args.input or args.synth_from_documents
-    fp = (input_fingerprint(spark, in_path,
-                            content_probe=args.checkpoint_content_probe)
-          if args.checkpoint_dir else "")
     ck = CheckpointManager(spark, args.checkpoint_dir)
-
     if args.input:
         files = spark.read.parquet(args.input)
     else:
         from claimskg_generator_spark.sources.codesynth import code_files
 
         files = code_files(spark.read.parquet(args.synth_from_documents))
+    if args.checkpoint_dir:
+        source, in_path = (("input", args.input) if args.input
+                           else ("documents", args.synth_from_documents))
+        fp = input_fingerprint(spark, in_path,
+                               content_probe=args.checkpoint_content_probe)
+        ck.anchor(f"{source}:{in_path}:{fp}",
+                  f"gate={args.quality_gate}|dedup={args.exact_dedup}"
+                  f"|scheme={args.uri_scheme}|entail={args.entail}")
 
-    cfg = (f"{fp}|gate={args.quality_gate}|dedup={args.exact_dedup}"
-           f"|scheme={args.uri_scheme}|entail={args.entail}")
     if args.quality_gate:
         gated = with_code_quality(files).filter("keep").drop(
             "n_lines", "max_line_len", "avg_line_len", "alnum_frac",
             "is_autogenerated", "has_hex_blob", "keep")
-        files = ck.materialize("gate", gated,
-                               token=plan_token(gated, cfg))
+        files = ck.materialize("gate", gated)
     if args.exact_dedup:
-        deduped = _exact_dedup(files)
-        files = ck.materialize("dedup", deduped,
-                               token=plan_token(deduped, cfg))
+        files = ck.materialize("dedup", _exact_dedup(files))
 
-    triples = code_triples(files, scheme=args.uri_scheme)
-    triples = ck.materialize("triples", triples,
-                             token=plan_token(triples, cfg))
+    triples = ck.materialize("triples",
+                             code_triples(files, scheme=args.uri_scheme))
     if args.entail:
         from claimskg_generator_spark.operators.code_kg import (
             CODE_ONTOLOGY,
         )
         from claimskg_generator_spark.operators.rdfs import rdfs_entail
 
-        entailed = rdfs_entail(triples, CODE_ONTOLOGY, okind_col="okind")
-        # identity from the UPSTREAM plan + the ontology content: the
-        # entailed plan itself embeds createDataFrame literal relations,
-        # which semanticHash does not canonicalize across constructions
-        onto_fp = hashlib.sha256(
-            repr(sorted(CODE_ONTOLOGY)).encode()).hexdigest()[:12]
         triples = ck.materialize(
-            "entail", entailed,
-            token=plan_token(triples, f"{cfg}|entail_onto={onto_fp}"))
+            "entail",
+            rdfs_entail(triples, CODE_ONTOLOGY, okind_col="okind"))
     if args.with_named_graphs:
         # a pure projection AFTER the (possibly entailed) graph is
         # final — entailed rows get their family graph too; checkpoint
@@ -535,32 +525,22 @@ def _build_graph(spark, args, summary):
         triples = with_graph(triples, pred_family_graph(CODE_GRAPHS))
 
     if args.table_dir:
-        # commit-once gate: the materialize itself is a stage boundary
-        # (same identity token as the triples stage), so a resumed run
-        # never appends the same snapshot twice
-        token = plan_token(triples, cfg)
-        marker = ("table_commit", f"_IDENTITY.{token}")
-        if args.checkpoint_dir and ck._exists(
-                ck._path(marker[0]), marker[1]):
-            ck.events.append(("table_commit", "resume", 0.0,
-                              args.table_dir))
+        # a stage boundary chained after the last materialized stage, so
+        # a resumed run never appends the same snapshot twice
+        sid = ck.commit_once(
+            "table_commit",
+            lambda: materialize_code_kg(
+                spark, files, args.table_dir, scheme=args.uri_scheme,
+                n_partitions=args.n_partitions, triples=triples),
+            settings=f"named_graphs={args.with_named_graphs}",
+            path=args.table_dir)
+        if sid is None:
             from claimskg_generator_spark.sources.snapshot_table import (
                 SnapshotTable,
             )
-            summary["snapshot_id"] = SnapshotTable(
-                spark, args.table_dir).current_snapshot_id()
-        else:
-            import time as _t
 
-            t0 = _t.time()
-            sid = materialize_code_kg(
-                spark, files, args.table_dir, scheme=args.uri_scheme,
-                n_partitions=args.n_partitions, triples=triples)
-            if args.checkpoint_dir:
-                ck._touch(ck._path(marker[0]), marker[1])
-            ck.events.append(("table_commit", "write",
-                              _t.time() - t0, args.table_dir))
-            summary["snapshot_id"] = sid
+            sid = SnapshotTable(spark, args.table_dir).current_snapshot_id()
+        summary["snapshot_id"] = sid
     if args.output:
         write_parquet(triples, args.output)
     if args.ntriples_output:

@@ -235,12 +235,10 @@ _PAIR_SCORE_TYPE = T.DoubleType()
 # Batched Levenshtein for the Arrow UDFs.  The scalar scorer above is the
 # semantic reference (and what oracle.py uses); the UDFs below produce
 # bit-identical scores but compute every unequal string pair of the whole
-# Arrow batch in one deduped vectorized pass — rapidfuzz (C) when present
-# (shipped via the ``fast`` extra in pyproject.toml; NOT installed in the
-# evaluation sandbox, where the numpy path below is the operative one),
-# else a numpy column-DP that runs the classic O(La*Lb) recurrence
-# simultaneously for ALL pairs (pinned equal to the scalar path by
-# tests/test_reconcile_stats.py::test_batched_levenshtein_matches_scalar).
+# Arrow batch in one deduped vectorized numpy pass: Myers' bit-parallel
+# algorithm, with a column-DP that runs the classic O(La*Lb) recurrence
+# for ALL pairs at once on patterns longer than 63 chars (both pinned
+# equal to the scalar path by tests/test_reconcile_stats.py).
 # Per-term float summation order is preserved (terms are re-summed in
 # encounter order), so no 1-ulp drift vs the scalar path.
 # ---------------------------------------------------------------------------
@@ -415,18 +413,8 @@ def _lev_batch_numpy_dp(pa, pb):
     return out
 
 
-def _lev_batch(pa, pb):
-    try:
-        from rapidfuzz.distance import Levenshtein
-    except ImportError:
-        return _lev_batch_numpy(pa, pb)
-    import numpy as np
-
-    # same metric: 1 - dist/max(len) with unit weights
-    return np.array(
-        [Levenshtein.normalized_similarity(a, b) for a, b in zip(pa, pb)],
-        dtype=np.float64,
-    )
+# every Arrow scorer calls the batched kernel through this one name
+_lev_batch = _lev_batch_numpy
 
 
 # Process-level normalized-Levenshtein memo: python workers are reused

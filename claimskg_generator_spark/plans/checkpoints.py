@@ -3,25 +3,31 @@ Parquet and later runs resume by reading the materialized stage instead of
 recomputing (north_rule: checkpoint-resumable at stage boundaries).  This
 replaces the reference's Redis memo caches (reference
 claimskg/util/sparql/sparql_offset_fetcher.py:55-74) with idempotent,
-cluster-wide stage artifacts.
+cluster-wide stage artifacts.  This module alone decides what resumes:
 
-Resume safety: a checkpoint is only reused when BOTH the Parquet _SUCCESS
-marker and an identity marker (``_IDENTITY.<token>``) are present.  The
-token hashes the stage's canonicalized logical plan (semanticHash — input
-path/plan changes flip it) plus the pipeline config; the CLI additionally
-binds a content fingerprint of file inputs (``input_fingerprint``: Hadoop
-FS listing of paths + lengths + mtimes), so re-running with the same
-checkpoint dir but different input — including the same path overwritten
-with new data — or different config recomputes instead of silently
-returning stale triples.  A materialize call with no token never resumes.  All existence checks and marker writes
-go through the Hadoop FileSystem API, so checkpoints work on HDFS/S3/GCS,
-not just the local filesystem.
+- Anchor: sha256 over the run's input identity (a durable name such as
+  ``synth:<n>:<seed>`` or a path + its ``input_fingerprint``, else the
+  input frame's ``plan_token``), the run's settings and ``source_digest``
+  of this package, so new code never resumes what older code built.
+- Chain: a stage's token is sha256 over the upstream stage's token (the
+  anchor for the first), its name and the settings it adds; the manager
+  threads it, so a stage whose identity changes invalidates every
+  stage after it.
+- Commit once: ``commit_once`` runs a side-effecting commit unless its
+  chained ``_IDENTITY.<token>`` marker exists.
+- No anchor, no resume: an unanchored manager chains no token.
+
+A materialized stage resumes only with both its identity marker and the
+Parquet ``_SUCCESS`` marker.  Every check and marker write goes through
+the Hadoop FileSystem API, so checkpoints work on HDFS/S3/GCS too.
 """
 
+import functools
 import hashlib
+import importlib.resources
 import json
 import time
-from typing import Optional
+from typing import Callable, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,13 +99,36 @@ def _edge_block_digest(jvm, fs, jpath, length: int, probe_bytes: int) -> str:
     return h.hexdigest()[:16]
 
 
-def plan_token(df: DataFrame, extra: str = "") -> str:
-    """Identity token for a stage: canonicalized-plan hash + config blob."""
-    try:
-        sem = str(df.semanticHash())
-    except Exception:  # very old/remote sessions: fall back to plan text
-        sem = df._jdf.queryExecution().logical().toString()
-    return hashlib.sha256((sem + "\x00" + extra).encode()).hexdigest()[:16]
+def plan_token(df: DataFrame) -> str:
+    """Identity of an input with no durable name: its canonicalized
+    logical plan (semanticHash, process-stable over file scans and local
+    relations)."""
+    return _digest(str(df.semanticHash()))
+
+
+@functools.lru_cache(maxsize=None)
+def source_digest() -> str:
+    """sha256 over every module of this package (relative path + bytes),
+    computed once per process.  Read through importlib.resources, so a
+    ``--py-files`` zip hashes like a checkout."""
+    h = hashlib.sha256()
+    for rel, data in _py_sources(importlib.resources.files(
+            __package__.partition(".")[0])):
+        h.update(rel.encode() + b"\x00" + hashlib.sha256(data).digest())
+    return h.hexdigest()[:16]
+
+
+def _py_sources(node, prefix: str = ""):
+    for child in sorted(node.iterdir(), key=lambda c: c.name):
+        rel = prefix + child.name
+        if child.is_dir():
+            yield from _py_sources(child, rel + "/")
+        elif rel.endswith(".py"):
+            yield rel, child.read_bytes()
+
+
+def _digest(*parts: str) -> str:
+    return hashlib.sha256("\x00".join(parts).encode()).hexdigest()[:16]
 
 
 class CheckpointManager:
@@ -107,58 +136,84 @@ class CheckpointManager:
         self.spark = spark
         self.base_dir = base_dir
         self.events = []  # (stage, action, wall_s, path)
+        # token of the last stage in the chain (the anchor before the
+        # first stage); None until anchor() -> nothing resumes
+        self._head: Optional[str] = None
+
+    def anchor(self, identity: Union[str, DataFrame], settings: str = "") -> None:
+        """(Re)start the chain from the run's input identity — a durable
+        name, or the input frame itself (hashed by ``plan_token``) — and
+        the run's settings.  Re-anchoring with the same arguments replays
+        the same chain, so a stage built twice in one run resumes."""
+        if not self.base_dir:
+            return
+        if isinstance(identity, DataFrame):
+            identity = plan_token(identity)
+        self._head = _digest(identity, settings, source_digest())
+
+    def _chain(self, name: str, settings: Optional[str]) -> Optional[str]:
+        if self._head is not None:
+            self._head = _digest(self._head, name, settings or "")
+        return self._head
 
     # -- Hadoop FS helpers (work on any supported scheme, not just file://) --
-    def _jpath(self, *parts: str):
-        jvm = self.spark._jvm
-        p = "/".join(x.rstrip("/") for x in parts)
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self, jpath):
-        hconf = self.spark._jsc.hadoopConfiguration()
-        return jpath.getFileSystem(hconf)
+    def _fs_path(self, *parts: str):
+        jp = self.spark._jvm.org.apache.hadoop.fs.Path(
+            "/".join(x.rstrip("/") for x in parts))
+        return jp.getFileSystem(self.spark._jsc.hadoopConfiguration()), jp
 
     def _exists(self, *parts: str) -> bool:
-        jp = self._jpath(*parts)
-        return self._fs(jp).exists(jp)
-
-    def _touch(self, *parts: str) -> None:
-        jp = self._jpath(*parts)
-        self._fs(jp).create(jp, True).close()
+        fs, jp = self._fs_path(*parts)
+        return fs.exists(jp)
 
     def _path(self, name: str) -> str:
         return self.base_dir.rstrip("/") + "/" + name
 
-    def _done(self, name: str, token: Optional[str]) -> bool:
-        path = self._path(name)
-        if not self._exists(path, "_SUCCESS"):
-            return False
-        # No identity token -> never resume: accepting "any existing
-        # _SUCCESS" would reintroduce stale-checkpoint reuse through entry
-        # points that bypass the token derivation.  Recompute + overwrite.
-        if token is None:
-            return False
-        # pre-identity checkpoints (no marker) are likewise treated as stale
-        return self._exists(path, f"_IDENTITY.{token}")
+    def _marked(self, name: str, token: Optional[str]) -> bool:
+        return token is not None and self._exists(
+            self._path(name), f"_IDENTITY.{token}")
+
+    def _mark(self, name: str, token: Optional[str]) -> None:
+        if token is not None:
+            fs, jp = self._fs_path(self._path(name), f"_IDENTITY.{token}")
+            fs.create(jp, True).close()
 
     def materialize(self, name: str, df: DataFrame,
                     token: Optional[str] = None) -> DataFrame:
         """Write-once stage boundary: skip the write when a complete,
         identity-matching checkpoint already exists (resume), else write and
         re-read so downstream stages scan Parquet instead of recomputing
-        lineage."""
+        lineage.  ``token`` is the settings this stage adds to its chained
+        identity (the upstream token and the stage name are the
+        manager's)."""
         if not self.base_dir:
             return df
+        token = self._chain(name, token)
         path = self._path(name)
         t0 = time.time()
-        if self._done(name, token):
+        if self._marked(name, token) and self._exists(path, "_SUCCESS"):
             self.events.append((name, "resume", 0.0, path))
             return self.spark.read.parquet(path)
         df.write.mode("overwrite").parquet(path)
-        if token is not None:
-            self._touch(path, f"_IDENTITY.{token}")
+        self._mark(name, token)
         self.events.append((name, "write", time.time() - t0, path))
         return self.spark.read.parquet(path)
+
+    def commit_once(self, name: str, commit: Callable, settings: str = "",
+                    path: Optional[str] = None):
+        """Commit-once stage boundary: run the side-effecting ``commit()``
+        unless this chain already committed it to ``path`` (its target,
+        part of its identity), so a resumed run never repeats it.  Returns
+        ``commit()``'s value, or None when resumed."""
+        token = self._chain(name, f"{settings}\x00{path}")
+        if self._marked(name, token):
+            self.events.append((name, "resume", 0.0, path))
+            return None
+        t0 = time.time()
+        value = commit()
+        self._mark(name, token)
+        self.events.append((name, "write", time.time() - t0, path))
+        return value
 
     def write_manifest(self) -> None:
         if not self.base_dir:
@@ -168,7 +223,7 @@ class CheckpointManager:
             for s, a, w, p in self.events
         ]
         blob = json.dumps(manifest, indent=1)
-        jp = self._jpath(self.base_dir, "manifest.json")
-        out = self._fs(jp).create(jp, True)
+        fs, jp = self._fs_path(self.base_dir, "manifest.json")
+        out = fs.create(jp, True)
         out.write(bytearray(blob.encode()))
         out.close()

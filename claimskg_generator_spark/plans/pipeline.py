@@ -15,7 +15,6 @@ Everything else is map-side (broadcast dims, within-row array ops).
 """
 
 import dataclasses
-import hashlib
 import json
 from dataclasses import dataclass, field
 from typing import Dict, Optional, Sequence, Tuple
@@ -45,7 +44,7 @@ from claimskg_generator_spark.operators.row_triples import (
 )
 from claimskg_generator_spark.operators.ratings_join import with_normalized_rating
 from claimskg_generator_spark.operators.triples import align_duplicated_triples
-from claimskg_generator_spark.plans.checkpoints import CheckpointManager, plan_token
+from claimskg_generator_spark.plans.checkpoints import CheckpointManager
 from claimskg_generator_spark.plans.sinks import (
     pred_bucket,
     write_ntriples,
@@ -68,17 +67,16 @@ class PipelineConfig:
     include_body: bool = False
     align_duplicated: bool = False
     generated_at: str = DEFAULT_GENERATED_AT
-    order_col: str = "path"
     thesaurus_entries: Sequence[Dict] = field(
         default_factory=lambda: synth.THESAURUS_ENTRIES
     )
     checkpoint_dir: Optional[str] = None
     materialize_parsed: bool = True
-    # durable input identity for checkpoint binding (e.g. the input path or
-    # "synth:<n>:<seed>").  Plans that embed pickled Python (mapInPandas
-    # sources) don't hash stably across driver processes, so callers with
-    # such inputs must name them; file-based inputs can leave this None
-    # (their semanticHash is process-stable).
+    # durable input identity that anchors the checkpoints (e.g. the input
+    # path + fingerprint or "synth:<n>:<seed>").  Plans that embed pickled
+    # Python (mapInPandas sources) don't hash stably across driver
+    # processes, so callers with such inputs must name them; None anchors
+    # on the parse frame's plan (process-stable for file scans).
     input_id: Optional[str] = None
     # reconciliation (J7/J8): owl:sameAs edges for pairs scoring > theta;
     # disabled when <= 0, like the reference's --reconcile flag
@@ -117,7 +115,6 @@ class ClaimsKGPipeline:
             self.config.thesaurus_entries, self.config.recognizer
         )
         self.checkpoints = CheckpointManager(spark, self.config.checkpoint_dir)
-        self._input_token: Optional[str] = None
 
     def _config_blob(self) -> str:
         cfg = dataclasses.asdict(self.config)
@@ -131,21 +128,12 @@ class ClaimsKGPipeline:
         materialized projection keeps every downstream family a cheap
         column-pruned scan and stops Catalyst from re-parsing the record
         across UDF/join operator boundaries."""
-        df = parse_records(input_df, self.config.order_col)
+        df = parse_records(input_df)
         if self.config.checkpoint_dir:
-            # Input-identity anchor: an explicit config.input_id when given
-            # (required for pickled-Python sources, which don't hash stably
-            # across driver processes), else the parse plan's semanticHash
-            # (parse_records is pure built-ins — stable for file scans).
+            ck = self.checkpoints
             ident = self.config.input_id
-            self._input_token = (
-                hashlib.sha256(
-                    (ident + "\x00" + self._config_blob()).encode()
-                ).hexdigest()[:16]
-                if ident is not None
-                else plan_token(df, self._config_blob())
-            )
-            return self.checkpoints.materialize("parsed", df, self._input_token)
+            ck.anchor(df if ident is None else ident, self._config_blob())
+            return ck.materialize("parsed", df)
         if self.config.materialize_parsed:
             # EAGER cache fill: the triples query launches several
             # broadcast-build jobs concurrently, and if the cache is still
@@ -243,15 +231,9 @@ class ClaimsKGPipeline:
             # iterative star rounds run driver-side actions; the flag is
             # part of _config_blob, so checkpoint identity tracks it
             deduped = canonicalize_sameas(deduped)
-        # Derive the token from the parsed-stage token, NOT the triples plan:
-        # plans holding pandas UDFs don't hash stably across instances, and
-        # triples are a pure function of (parsed data, config, code) anyway.
-        token = None
-        if self._input_token is not None:
-            token = hashlib.sha256(
-                (self._input_token + "\x00" + self._config_blob()).encode()
-            ).hexdigest()[:16]
-        result = self.checkpoints.materialize("triples", deduped, token)
+        # chained from the parsed stage (the manager holds its token):
+        # triples are a pure function of (parsed data, config, code)
+        result = self.checkpoints.materialize("triples", deduped)
         if self.config.checkpoint_dir:
             # materialize() above was eager (checkpoint write), so the
             # frames shared to build it are spent; the result is a fresh

@@ -91,7 +91,8 @@ def read_reference_csv(spark: SparkSession, path: str) -> DataFrame:
       multiLine CSV files are unsplittable (one file = one partition), so
       a per-file row_number over monotonically_increasing_id reproduces
       that order deterministically; ``path`` becomes file#row so the
-      default order column sorts CSV order first-to-last.
+      order key (``ord``, read from ``path``) sorts CSV order
+      first-to-last.
     """
     from pyspark.sql import Window
 
@@ -168,14 +169,14 @@ def source_homepage_col(author: Column) -> Column:
     return mapping[author]
 
 
-def parse_records(input_df: DataFrame, order_col: str = "path") -> DataFrame:
+def parse_records(input_df: DataFrame) -> DataFrame:
     """Stage 0: one from_json pass -> flat fields + parsed mention arrays.
 
     This is the projection the pipeline materializes; everything downstream
     reads flat columns only."""
     rec = F.from_json(F.col("content"), RECORD_SCHEMA).alias("r")
     base = input_df.select(
-        F.col(order_col).alias("ord"),
+        F.col("path").alias("ord"),
         F.sha2(F.col("content"), 256).alias("content_sha256"),
         rec,
     )

@@ -72,7 +72,7 @@ def streaming_keyword_winners(spark: SparkSession, input_dir: str,
     update rows append to ``output_dir`` (latest win_ord per kw_uri is the
     current memo).  Returns the StreamingQuery."""
     stream = source(spark, input_dir, INPUT_SCHEMA)
-    claims = derive_claims(parse_records(stream, "path"), model_uri)
+    claims = derive_claims(parse_records(stream), model_uri)
     ex = exploded_keywords(claims, model_uri).select(
         "ord", "kw_uri", "keyword", (F.size("matched") > 0).alias("has_match")
     )

@@ -102,6 +102,81 @@ def test_materialize_without_token_never_resumes(spark):
     assert out.count() == 9  # a token-less call must not return the stale 5
 
 
+def test_upstream_change_recomputes_every_later_stage(spark):
+    """A stage's token chains from its upstream stage's: under one anchor,
+    changed settings of the first stage recompute the second as well."""
+    from claimskg_generator_spark.plans.checkpoints import CheckpointManager
+
+    base = tempfile.mkdtemp(prefix="claimskg_ck_chain_")
+
+    def run(first_settings, n):
+        mgr = CheckpointManager(spark, base)
+        mgr.anchor("corpus-v1", "cfg")
+        mgr.materialize("a", spark.range(n).toDF("id"), first_settings)
+        out = mgr.materialize("b", spark.range(n).toDF("id"))
+        return out.count(), [a for _, a, _, _ in mgr.events]
+
+    assert run("v1", 5) == (5, ["write", "write"])
+    assert run("v2", 9) == (9, ["write", "write"])
+    assert run("v2", 9) == (9, ["resume", "resume"])
+
+
+def test_source_change_recomputes_every_stage(spark, monkeypatch):
+    """The anchor hashes the package source: after a code change, a
+    checkpoint dir written by the old code resumes nothing."""
+    from claimskg_generator_spark.plans import checkpoints
+
+    base = tempfile.mkdtemp(prefix="claimskg_ck_src_")
+    corpus = spark.createDataFrame(gen_rows(40))
+    cfg = PipelineConfig(checkpoint_dir=base, input_id="corpus-v1")
+    ClaimsKGPipeline(spark, cfg).run(corpus)
+    monkeypatch.setattr(checkpoints, "source_digest", lambda: "edited")
+    p2 = ClaimsKGPipeline(spark, cfg)
+    p2.run(corpus)
+    assert {s: a for s, a, _, _ in p2.checkpoints.events} == {
+        "parsed": "write", "triples": "write"}
+
+
+def test_only_the_checkpoint_module_decides_identity():
+    """Every checkpoint token, identity marker and resume decision comes
+    from plans/checkpoints.py: no other module calls plan_token, spells an
+    _IDENTITY marker or reads a private CheckpointManager attribute."""
+    import ast
+    import pathlib
+
+    pkg = (pathlib.Path(__file__).resolve().parent.parent
+           / "claimskg_generator_spark")
+    def called(node):
+        return (isinstance(node, ast.Call)
+                and getattr(node.func, "id", getattr(node.func, "attr", "")))
+
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "plans" / "checkpoints.py":
+            continue
+        tree = ast.parse(path.read_text())
+        # expressions bound to a manager: `x = CheckpointManager(...)`
+        # targets, and any `.checkpoints` attribute (the pipeline's)
+        managers = {ast.unparse(t) for n in ast.walk(tree)
+                    if isinstance(n, ast.Assign)
+                    and called(n.value) == "CheckpointManager"
+                    for t in n.targets}
+        for node in ast.walk(tree):
+            where = f"{path.relative_to(pkg)}:{getattr(node, 'lineno', 0)}"
+            if called(node) == "plan_token":
+                hits.append(f"{where} plan_token call")
+            elif (isinstance(node, ast.Constant)
+                  and isinstance(node.value, str)
+                  and "_IDENTITY" in node.value):
+                hits.append(f"{where} _IDENTITY marker")
+            elif (isinstance(node, ast.Attribute)
+                  and node.attr.startswith("_")
+                  and (ast.unparse(node.value) in managers
+                       or getattr(node.value, "attr", "") == "checkpoints")):
+                hits.append(f"{where} CheckpointManager.{node.attr}")
+    assert hits == []
+
+
 def test_cli_argument_validation():
     import pytest
 

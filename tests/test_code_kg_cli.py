@@ -99,6 +99,60 @@ def test_changed_flags_invalidate_checkpoints(spark, docs_path, tmp_path,
     assert acts["triples"] == "write"
 
 
+def test_table_commit_is_once_per_table(spark, docs_path, tmp_path, capsys):
+    """A run that resumes every stage but names a new --table-dir commits
+    the graph to that table; the first table gains no second snapshot."""
+    from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
+
+    argv = ["--synth-from-documents", docs_path,
+            "--checkpoint-dir", str(tmp_path / "ck")]
+    s1 = _run(capsys, *argv, "--table-dir", str(tmp_path / "kg1"))
+    s2 = _run(capsys, *argv, "--table-dir", str(tmp_path / "kg2"))
+    assert {e["stage"]: e["action"] for e in s2["stages"]} == {
+        "triples": "resume", "table_commit": "write"}
+    assert s2["snapshot_id"] == 1
+    assert (SnapshotTable(spark, str(tmp_path / "kg2")).read().count()
+            == s1["counts"]["triples"])
+    assert len(SnapshotTable(spark, str(tmp_path / "kg1")).snapshots()) == 1
+
+
+def test_changed_gate_recomputes_every_later_stage(spark, docs_path, tmp_path,
+                                                   capsys, monkeypatch):
+    """An edit to the quality gate between two runs over one checkpoint
+    dir recomputes the gate AND every stage after it: dedup and triples
+    rebuild from the new file set instead of resuming the old graph."""
+    from claimskg_generator_spark.operators import code
+    from claimskg_generator_spark.plans import checkpoints
+    from claimskg_generator_spark.sources.snapshot_table import SnapshotTable
+
+    argv = ["--synth-from-documents", docs_path, "--quality-gate",
+            "--exact-dedup", "--checkpoint-dir", str(tmp_path / "ck")]
+    s1 = _run(capsys, *argv, "--table-dir", str(tmp_path / "kg1"))
+
+    gate = code.with_code_quality
+
+    def stricter(files):
+        return gate(files).withColumn(
+            "keep", F.col("keep") & (F.col("doc_id") % 2 == 0))
+
+    monkeypatch.setattr(code, "with_code_quality", stricter)
+    # the edit is to package source, which the checkpoint anchor hashes
+    monkeypatch.setattr(checkpoints, "source_digest", lambda: "edited")
+    table = str(tmp_path / "kg2")
+    s2 = _run(capsys, *argv, "--table-dir", table)
+    assert {e["stage"]: e["action"] for e in s2["stages"]} == {
+        "gate": "write", "dedup": "write", "triples": "write",
+        "table_commit": "write"}
+    assert s2["counts"]["files"] < s1["counts"]["files"]
+    expected = code_triples(
+        stricter(code_files(spark.read.parquet(docs_path)))
+        .filter("keep")
+        .select("doc_id", "repo", "path", "commit", "lang", "content"))
+    back = SnapshotTable(spark, table).read()
+    assert back.count() == s2["counts"]["triples"] == expected.count()
+    assert back.exceptAll(expected).count() == 0
+
+
 def test_ntriples_output(spark, docs_path, tmp_path, capsys):
     import glob
 

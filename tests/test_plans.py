@@ -9,9 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _plan(df) -> str:
+def _plan(df, mode: str = "formatted") -> str:
     jvm = df.sparkSession.sparkContext._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(mode)
 
 
@@ -92,11 +92,16 @@ def test_pipeline_shuffle_budget(spark):
 
     pipe = ClaimsKGPipeline(spark, PipelineConfig(materialize_parsed=False))
     triples = pipe.triples(spark.createDataFrame(gen_rows(30)))
-    n_exchanges = _plan(triples).count("Exchange hashpartitioning")
+    # the simple explain prints each exchange with its partitioning on one
+    # line (the formatted one splits them); a shuffle under a cached frame
+    # prints once per reader, so count distinct plan ids
+    n_exchanges = len(set(re.findall(
+        r"Exchange hashpartitioning\(.*\[plan_id=(\d+)\]",
+        _plan(triples, "simple"))))
     # designed shuffles: final triple distinct, keyword winner aggregate,
-    # distinct-keyword dedup (+ their AQE reuse nodes).  The budget fails
-    # loudly if the plan ever regresses into per-family shuffles (~12+).
-    assert n_exchanges <= 8, n_exchanges
+    # distinct-keyword dedup.  The budget fails loudly if the plan ever
+    # regresses into per-family shuffles.
+    assert 1 <= n_exchanges <= 3, n_exchanges
 
 
 def test_statistics_reads_one_keyword_winner_aggregate(spark):
